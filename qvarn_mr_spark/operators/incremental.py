@@ -18,6 +18,8 @@ state update out. The semantics preserved (SURVEY.md §2.7):
 - **T4 dirty-key tracking**: re-reduce only keys touched by this batch
   (``processor.py:345-360,373-382``). Set form: dirty keys = keys of old ∪
   new map rows of the dirty source ids; recompute = semi-join + groupBy.
+  Like the reference's in-memory hand-off, the dirty keys pass from the
+  map pass to the reduce pass as cached frames that live for one batch.
 - **T5 full-group recompute**: reduce re-runs over the entire key group, not
   an incremental delta (``processor.py:192-227``) — always correct for
   non-decomposable aggregates; Catalyst still does partial aggregation
@@ -39,11 +41,12 @@ joins — no driver-side loops over ids — so a 100 TB map table with a
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
-import time
-from dataclasses import dataclass, field as dc_field
+from contextlib import contextmanager
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -52,11 +55,38 @@ from qvarn_mr_spark.catalog import Catalog
 from qvarn_mr_spark.operators.mapreduce import (
     REDUCE_SPECS,
     ViewEngine,
+    live,
 )
 
 #: Change kinds in the reference's notification feed
 #: (``processor.py:17-27``; ``[qvarn] listener_resource.py:319-399``).
 CREATED, UPDATED, DELETED = "created", "updated", "deleted"
+
+
+@contextmanager
+def _held_frames():
+    """A list for the frames one batch caches, unpersisted however the
+    batch ends — a batch that raises must not leave them cached."""
+    held: list[DataFrame] = []
+    try:
+        yield held
+    finally:
+        for df in held:
+            df.unpersist()
+
+
+def _union(frames: list[DataFrame]) -> DataFrame:
+    """Union by column name; a column some frames lack reads null."""
+    return functools.reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=True), frames)
+
+
+def _hold(held: list, df: DataFrame) -> int:
+    """Cache ``df`` and count it, returning the count. Materialized now, it
+    no longer reads the snapshot it was computed from — which a later
+    commit of the same batch may GC under ``retain``."""
+    held.append(df.cache())
+    return df.count()
 
 
 class ParquetStateStore:
@@ -410,20 +440,18 @@ class IncrementalEngine:
     keep the *final* state per id, which is what replaying the feed in order
     yields (the map upsert is delete-then-insert, so intermediate states
     never survive a batch anyway).
+
+    Strict (reference-shape) configs apply as map targets then reduce
+    targets; extended DAGs (map-over-derived, reduce-of-reduce, arbitrary
+    acyclic depth) apply in topological order with per-edge dirty
+    propagation: each derived target's changed-key set becomes a synthetic
+    notification batch for its consumers (see :meth:`_derived_changes`).
+    The reference cannot do this at all — its engine routes one external
+    notification at a time.
     """
 
     engine: ViewEngine
     store: ParquetStateStore
-
-    def __post_init__(self):
-        # Strict (reference-shape) configs apply as map targets then reduce
-        # targets; extended DAGs (map-over-derived, reduce-of-reduce,
-        # arbitrary acyclic depth) apply in topological order with per-edge
-        # dirty propagation: each derived target's changed-key set becomes a
-        # synthetic notification batch for its consumers (see
-        # :meth:`_derived_changes`). The reference cannot do this at all —
-        # its engine routes one external notification at a time.
-        pass
 
     @property
     def catalog(self) -> Catalog:
@@ -568,12 +596,12 @@ class IncrementalEngine:
                                 .distinct()
                                 .filter(F.pmod(F.xxhash64("_mr_key"),
                                                F.lit(chunks)) == F.lit(i)))
-                        self.store.overwrite(src + "__dirty", keys)
-                        # mark every slice key as touched: this dirty set
-                        # didn't come from _apply_map, so the __fresh delta
-                        # on disk is stale — force full-group recompute
-                        self.store.overwrite(src + "__touched", keys)
-                        self._apply_reduce(target, sources)
+                        # every slice key counts as touched, with no fresh
+                        # rows: this dirty set didn't come from _apply_map,
+                        # so each slice key recomputes its full group
+                        with _held_frames() as held:
+                            self._apply_reduce(target, sources, keys, None,
+                                               keys, True, held)
                         drain()
                 self.store.set_handler_version(target, src, spec.version)
             elif any(s in self.engine.config for s in sources):
@@ -612,10 +640,7 @@ class IncrementalEngine:
                     F.lit(1).cast("long").alias("seq"))
                 .filter(F.pmod(F.xxhash64(F.col("resource_id")),
                                F.lit(chunks)) == F.lit(i)))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        return _union(parts)
 
     def _stale_delete_batch(self, target: str, sources: dict) -> DataFrame:
         """Synthetic ``deleted`` notifications for map rows whose source row
@@ -637,10 +662,7 @@ class IncrementalEngine:
                         F.lit(DELETED).alias("resource_change"),
                         "resource_id",
                         F.lit(1).cast("long").alias("seq")))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        return _union(parts)
 
     # -- incremental application (T2-T5, A8) ---------------------------------
 
@@ -651,26 +673,34 @@ class IncrementalEngine:
         (``processor.py:426-434``), generalized to any acyclic config:
         targets apply in topological order, and a map target whose source
         is itself a derived target consumes a SYNTHETIC change batch built
-        from that target's just-committed dirty keys — per-edge dirty
+        from that target's dirty keys of this batch — per-edge dirty
         propagation, so a 5-level pipeline stays O(delta) end to end. For
         strict (reference-shape) configs the topo order degenerates to
         "map targets first, then reduce targets", identical to before.
+        Each target's hand-off to its consumers — ``(dirty, fresh, touched,
+        lost)``, see :meth:`_apply_map` — stays in memory for the batch.
         """
-        # final change per resource id — replay-order equivalent (see class doc)
-        changes = changes.cache()
-        for target in self._topo_targets():
-            sources = self.engine.config[target]
-            if isinstance(next(iter(sources.values())), REDUCE_SPECS):
-                self._apply_reduce(target, sources)
-            else:
-                eff = changes
-                for src in sources:
-                    if src in self.engine.config:
-                        synth = self._derived_changes(src)
-                        if synth is not None:
-                            eff = eff.unionByName(synth)
-                self._apply_map(target, sources, eff)
-        changes.unpersist()
+        handoff: dict[str, tuple] = {}
+        with _held_frames() as held:
+            # final change per resource id — replay-order equivalent (see
+            # class doc)
+            changes = changes.cache()
+            held.append(changes)
+            for target in self._topo_targets():
+                sources = self.engine.config[target]
+                if isinstance(next(iter(sources.values())), REDUCE_SPECS):
+                    (src,) = sources
+                    dirty = self._apply_reduce(target, sources,
+                                               *handoff[src], held)
+                    handoff[target] = (dirty, None, None, True)
+                else:
+                    eff = changes
+                    for src in sources:
+                        if src in handoff:
+                            eff = eff.unionByName(self._derived_changes(
+                                src, handoff[src][0]))
+                    handoff[target] = self._apply_map(target, sources, eff,
+                                                      held)
         # all targets committed: publish this batch's versions as ONE
         # atomic epoch — the consistent-snapshot barrier (snapshot())
         self._commit_epoch()
@@ -695,24 +725,17 @@ class IncrementalEngine:
             visit(t)
         return out
 
-    def _derived_changes(self, source: str) -> DataFrame | None:
-        """Synthetic notifications for a DERIVED source: its last-committed
-        dirty keys become ``updated`` (key still live in the stored table)
-        or ``deleted`` (key vanished — empty-group elimination upstream).
-        Dirty sets are rewritten by every batch for every target, so this
-        never replays a previous batch's keys."""
-        if not self.store.exists(source + "__dirty"):
-            return None
-        dirty = self.store.read(source + "__dirty") \
-            .select(F.col("_mr_key").cast("string").alias("resource_id"))
-        cur = self.store.read(source)
-        if "_mr_deleted" in cur.columns:
-            cur = cur.filter(
-                ~F.coalesce(F.col("_mr_deleted"), F.lit(False)))
-        live = cur.select(F.col("_mr_key").cast("string")
-                          .alias("resource_id")).distinct()
+    def _derived_changes(self, source: str, dirty: DataFrame) -> DataFrame:
+        """Synthetic notifications for a DERIVED source: the ``dirty`` keys
+        its own apply returned this batch become ``updated`` (key still
+        live in the stored table) or ``deleted`` (key vanished —
+        empty-group elimination upstream)."""
+        dirty = dirty.select(F.col("_mr_key").cast("string")
+                             .alias("resource_id"))
+        cur = live(self.store.read(source)).select(
+            F.col("_mr_key").cast("string").alias("resource_id")).distinct()
         flagged = dirty.join(
-            live.withColumn("_live", F.lit(True)), "resource_id", "left")
+            cur.withColumn("_live", F.lit(True)), "resource_id", "left")
         return flagged.select(
             F.lit(source).alias("resource_type"),
             F.when(F.col("_live").isNotNull(), F.lit(UPDATED))
@@ -725,18 +748,19 @@ class IncrementalEngine:
         snapshot of a derived target (live rows only — tombstones are
         bookkeeping for the owning reduce, not data)."""
         if source in self.engine.config:
-            df = self.store.read(source)
-            if "_mr_deleted" in df.columns:
-                df = df.filter(
-                    ~F.coalesce(F.col("_mr_deleted"), F.lit(False)))
-            return df
+            return live(self.store.read(source))
         return self.catalog.get(source)
 
-    def _apply_map(self, target: str, sources: dict, changes: DataFrame) -> None:
+    def _apply_map(self, target: str, sources: dict, changes: DataFrame,
+                   held: list) -> tuple:
         """T2 upsert + T3 tombstone for one map target.
 
-        Produces the new map snapshot and remembers this batch's dirty keys
-        in ``{target}__dirty`` for the reduce pass. Everything is joins:
+        Commits the new map snapshot and returns this batch's hand-off to
+        the target's consumers, ``(dirty, fresh, touched, lost)``: the
+        dirty keys (keys the changed ids had before ∪ have now), the
+        freshly mapped rows, the keys that lost old rows, and whether any
+        key did. The frames read the OLD snapshot, so they are cached into
+        ``held`` and materialized before the commit. Everything is joins:
         - surviving rows  = old anti-join dirty ids (per source type)
         - tombstoned rows = old semi-join deleted ids, flagged
         - fresh rows      = map(source semi-join upserted ids)
@@ -745,7 +769,6 @@ class IncrementalEngine:
         """
         old = self.store.read(target) if self.store.exists(target) else None
         parts = []
-        dirty_key_parts = []
         fresh_parts = []
         touched_parts = []
         deleted_parts = []
@@ -794,65 +817,54 @@ class IncrementalEngine:
                     "left_semi")
                     .withColumn("_mr_deleted", F.lit(True)))
                 parts += [survivors, tombstoned, fresh]
-                # dirty keys: keys the changed ids had before + have now
-                touched = mine.join(
+                # keys the changed ids had before
+                touched_parts.append(mine.join(
                     F.broadcast(all_dirty),
                     mine["_mr_source_id"] == all_dirty["resource_id"],
-                    "left_semi").select("_mr_key")
-                dirty_key_parts += [touched, fresh.select("_mr_key")]
-                touched_parts.append(touched)
+                    "left_semi").select("_mr_key"))
             else:
                 parts.append(fresh)
-                dirty_key_parts.append(fresh.select("_mr_key"))
             fresh_parts.append(fresh)
             deleted_parts.append(deleted)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p, allowMissingColumns=True)
-        dirty = dirty_key_parts[0]
-        for p in dirty_key_parts[1:]:
-            dirty = dirty.unionByName(p)
-        dirty = dirty.distinct()
+        out = _union(parts)
         # For the algebraic reduce path (_apply_reduce): this batch's freshly
         # mapped rows (the insert delta), and the keys that LOST old rows
         # (update/delete — only these need a full-group recompute). Both are
-        # batch-delta-sized writes, independent of table size.
-        fresh_all = fresh_parts[0]
-        for p in fresh_parts[1:]:
-            fresh_all = fresh_all.unionByName(p, allowMissingColumns=True)
-        touched = touched_parts[0] if touched_parts else \
-            dirty.limit(0)
-        for p in touched_parts[1:]:
-            touched = touched.unionByName(p)
-        touched = touched.distinct()
+        # batch-delta-sized, independent of table size.
+        fresh_all = _union(fresh_parts)
+        touched = (_union(touched_parts) if touched_parts
+                   else fresh_all.select("_mr_key").limit(0)).distinct()
+        _hold(held, fresh_all)
+        lost = _hold(held, touched) > 0
+        dirty = touched.unionByName(fresh_all.select("_mr_key")).distinct()
+        _hold(held, dirty)
         # PURE-APPEND detection: no delete notifications and no existing map
         # rows under the changed ids ⇒ new = old ∪ fresh exactly, and a
         # bucketed store may commit just the fresh rows (O(delta) even when
-        # a hot key's group holds millions of rows — the emptiness probes
-        # are delta-bounded joins, far cheaper than the rewrite they avoid).
-        insert_only = old is not None
-        if insert_only:
-            all_deleted = deleted_parts[0]
-            for p in deleted_parts[1:]:
-                all_deleted = all_deleted.unionByName(p)
-            insert_only = all_deleted.isEmpty() and touched.isEmpty()
+        # a hot key's group holds millions of rows — the emptiness probe
+        # is a delta-bounded join, far cheaper than the rewrite it avoids).
+        insert_only = (old is not None and not lost
+                       and _union(deleted_parts).isEmpty())
         # every row-level difference between old and new lives under a dirty
         # key (survivors only lose dirty-source rows; fresh/tombstoned rows
         # carry dirty keys), so a bucketed store may commit dirty buckets only
         self.store.overwrite(target, out, dirty_keys=dirty,
                              inserts=fresh_all if insert_only else None)
-        self.store.overwrite(target + "__dirty", dirty)
-        self.store.overwrite(target + "__fresh", fresh_all)
-        self.store.overwrite(target + "__touched", touched)
+        return dirty, fresh_all, touched, lost
 
-    def _apply_reduce(self, target: str, sources: dict) -> None:
+    def _apply_reduce(self, target: str, sources: dict, dirty: DataFrame,
+                      fresh: DataFrame | None, touched: DataFrame | None,
+                      lost: bool, held: list) -> DataFrame:
         """T4/T5 dirty-key group recompute + A8 empty-group delete + T3 purge.
 
         new_reduce = old_reduce (keys not dirty)
                    ∪ recompute(map ⋉ ready dirty_keys)  — dropped groups
                                                            simply emit no row
         Then purge tombstoned map rows of the dirty keys (two-phase done —
-        ``processor.py:406-409``).
+        ``processor.py:406-409``). ``dirty``, ``fresh``, ``touched`` and
+        ``lost`` are the source's hand-off (:meth:`_apply_map`; ``fresh``
+        and ``touched`` are None for a reduce source). Returns the keys
+        this reduce recomputed, the hand-off to its own consumers.
 
         **Version barrier (T7)**: a dirty key whose live map rows mix
         handler versions — possible mid-:meth:`resync_interleaved`, when a
@@ -865,9 +877,6 @@ class IncrementalEngine:
         next startup resync finishes the job.
         """
         ((src, spec),) = sources.items()
-        if not self.store.exists(src + "__dirty"):
-            return
-        dirty = self.store.read(src + "__dirty")
         map_df = self.store.read(src)
         # version-barrier postponement applies to map-table sources; a
         # reduce-of-reduce source has no per-row handler versions (its
@@ -876,19 +885,16 @@ class IncrementalEngine:
             ver_map = F.create_map(*[
                 x for st, mspec in self.engine.config[src].items()
                 for x in (F.lit(st), F.lit(mspec.version))])
-            stale_keys = (map_df
-                          .join(F.broadcast(dirty), "_mr_key", "left_semi")
-                          # null-safe like every other tombstone filter
-                          # (r12): a chain file written without the
-                          # column reads null under the pinned schema —
-                          # live, so its version still gates the key
-                          .filter(~F.coalesce(F.col("_mr_deleted"),
-                                              F.lit(False)) & (
-                              F.col("_mr_version")
-                              != ver_map[F.col("_mr_source_type")]))
+            stale_keys = (live(map_df.join(F.broadcast(dirty), "_mr_key",
+                                           "left_semi"))
+                          .filter(F.col("_mr_version")
+                                  != ver_map[F.col("_mr_source_type")])
                           .select("_mr_key").distinct())
             dirty = dirty.join(F.broadcast(stale_keys), "_mr_key",
                                "left_anti")
+            # consumers read it after later purges of src, which may GC
+            # map_df
+            _hold(held, dirty)
         old = self.store.read(target) if self.store.exists(target) else None
 
         # Algebraic IVM (beyond the reference's always-full-group recompute,
@@ -898,18 +904,15 @@ class IncrementalEngine:
         # are maintained as merge(old_value, reduce(delta rows)). Work is
         # O(batch delta), not O(Σ dirty groups): a hot key with 10⁸ map rows
         # costs the same to maintain as one with 10. Keys that lost rows
-        # (update/delete, in __touched) still recompute their whole group,
+        # (update/delete, in ``touched``) still recompute their whole group,
         # which is what keeps non-invertible merges (min/max) exact.
         merges = getattr(spec, "merge", None)
         merged = None
         if (merges and set(merges) == set(spec.aggs) and old is not None
-                and self.store.exists(src + "__fresh")
-                and self.store.exists(src + "__touched")):
-            touched = self.store.read(src + "__touched")
+                and fresh is not None):
             merge_keys = dirty.join(F.broadcast(touched), "_mr_key", "left_anti")
             recompute_keys = dirty.join(F.broadcast(touched), "_mr_key",
                                         "left_semi")
-            fresh = self.store.read(src + "__fresh")
             delta = self.engine.reduce_table(
                 target,
                 fresh.join(F.broadcast(merge_keys), "_mr_key", "left_semi"))
@@ -928,26 +931,20 @@ class IncrementalEngine:
         if merged is not None:
             new = new.unionByName(merged, allowMissingColumns=True)
         self.store.overwrite(target, new, dirty_keys=dirty)
-        # publish this reduce's changed keys for downstream consumers
-        # (extended DAGs: a map-over-this-reduce turns them into synthetic
-        # notifications via _derived_changes)
-        self.store.overwrite(target + "__dirty", dirty)
-        if "_mr_deleted" in map_df.columns and not (
-                self.store.exists(src + "__touched")
-                and self.store.read(src + "__touched").isEmpty()):
+        if "_mr_deleted" in map_df.columns and lost:
             # purge tombstones for keys whose reduce has now succeeded —
             # set form (no collect): drop rows matching (source_id, key)
             # of tombstoned∩dirty. Tombstones only ever arise under keys
-            # that LOST rows (⊆ __touched), so a pure-insert batch — whose
-            # map commit was the store's O(delta) append path — skips the
-            # purge rewrite entirely (the __touched emptiness probe is a
-            # delta-sized read, not a map-table scan).
+            # that LOST rows, so a pure-insert batch — whose map commit
+            # was the store's O(delta) append path — skips the purge
+            # rewrite entirely.
             tomb_dirty = (map_df.filter(F.col("_mr_deleted"))
                           .join(F.broadcast(dirty), "_mr_key", "left_semi"))
             purged = map_df.join(
                 tomb_dirty.select("_mr_source_id", "_mr_key").distinct(),
                 ["_mr_source_id", "_mr_key"], "left_anti")
             self.store.overwrite(src, purged, dirty_keys=dirty)
+        return dirty
 
     def _merge_reduce(self, old: DataFrame, delta: DataFrame,
                       merge_keys: DataFrame, merges: dict) -> DataFrame:
@@ -1028,33 +1025,29 @@ class IncrementalEngine:
                 src_df.select(
                     src_df[id_col].cast("string").alias("resource_id")),
                 "resource_id", "left_semi"))
-        ready = ready_parts[0]
-        for p in ready_parts[1:]:
-            ready = ready.unionByName(p)
-        ready = ready.cache()
-        n = ready.count()
-        if n == 0:
-            ready.unpersist()
-            return 0
-        # deterministic seq: replay order within the batch is irrelevant
-        # (distinct ids, one synthetic 'updated' each), it just satisfies
-        # the feed's ordering contract
-        batch = ready.select(
-            "resource_type",
-            F.lit(UPDATED).alias("resource_change"),
-            "resource_id",
-            F.row_number().over(
-                Window.orderBy("resource_type", "resource_id"))
-            .cast("long").alias("seq"))
-        self.apply_changes(batch)
-        remaining = dl.join(
-            ready.select("resource_type", "resource_id"),
-            ["resource_type", "resource_id"], "left_anti")
-        # no epoch commit here: apply_changes above already published
-        # one, and the dead-letter table is outside engine.config so the
-        # trailing overwrite cannot change epoch content (r13 review)
-        self.store.overwrite(table, remaining)
-        ready.unpersist()
+        ready = _union(ready_parts)
+        with _held_frames() as held:
+            n = _hold(held, ready)
+            if n == 0:
+                return 0
+            # deterministic seq: replay order within the batch is
+            # irrelevant (distinct ids, one synthetic 'updated' each), it
+            # just satisfies the feed's ordering contract
+            batch = ready.select(
+                "resource_type",
+                F.lit(UPDATED).alias("resource_change"),
+                "resource_id",
+                F.row_number().over(
+                    Window.orderBy("resource_type", "resource_id"))
+                .cast("long").alias("seq"))
+            self.apply_changes(batch)
+            remaining = dl.join(
+                ready.select("resource_type", "resource_id"),
+                ["resource_type", "resource_id"], "left_anti")
+            # no epoch commit here: apply_changes above already published
+            # one, and the dead-letter table is outside engine.config so
+            # the trailing overwrite cannot change epoch content
+            self.store.overwrite(table, remaining)
         return n
 
     # -- convenience ----------------------------------------------------------

@@ -372,10 +372,7 @@ class ViewEngine:
         natural semantics of ``groupBy().agg()``.
         """
         ((source, spec),) = self.config[target].items()
-        mdf = map_df if map_df is not None else self._resolve(source)
-        if "_mr_deleted" in mdf.columns:
-            mdf = mdf.filter(
-                ~F.coalesce(F.col("_mr_deleted"), F.lit(False)))
+        mdf = live(map_df if map_df is not None else self._resolve(source))
         if isinstance(spec, AggReduceSpec):
             return self._reduce_agg(mdf, spec)
         if isinstance(spec, JoinReduceSpec):

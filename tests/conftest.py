@@ -42,3 +42,14 @@ def pytest_collection_modifyitems(config, items):
     for item in items:
         if "sweep" in item.keywords:
             item.add_marker(skip)
+
+
+def pytest_terminal_summary(terminalreporter):
+    """Make the sweep gate loud: report how many sweeps it skipped."""
+    # collection-level skips (CollectReport) carry no keywords
+    n = sum("sweep" in getattr(rep, "keywords", ())
+            for rep in terminalreporter.stats.get("skipped", []))
+    if n:
+        terminalreporter.write_line(
+            f"{n} sweep tests skipped; set SPARK_GRAFT_SLOW_TESTS=1 "
+            f"to run them")

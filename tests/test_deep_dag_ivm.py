@@ -10,6 +10,8 @@ Every lifecycle step compares the incrementally-maintained histogram to a
 from-scratch recompute of the same config.
 """
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -19,9 +21,11 @@ from qvarn_mr_spark.operators import (
     ParquetStateStore,
     ViewEngine,
     map_item,
+    reduce_agg,
     reduce_count,
 )
 from qvarn_mr_spark.operators.incremental import notifications
+from qvarn_mr_spark.operators.mapreduce import MERGE_ADD, live
 
 
 def _setup(spark, tmp_path):
@@ -108,14 +112,94 @@ def test_deep_dag_untouched_keys_stay_clean(spark, tmp_path):
 
     rows.append(("x", 0))                              # user 0 → 2 orders
     set_source(rows)
-    inc.apply_changes(notifications(spark, [("orders", "created", "x")]))
+    # capture the dirty keys the histogram map commits with
+    captured = []
+    orig = inc.store.overwrite
+
+    def hooked(table, df, **kw):
+        if table == "hist__map":
+            captured.append({r["_mr_key"]
+                             for r in kw["dirty_keys"].collect()})
+        orig(table, df, **kw)
+
+    inc.store.overwrite = hooked
+    try:
+        inc.apply_changes(notifications(spark, [("orders", "created", "x")]))
+    finally:
+        inc.store.overwrite = orig
     assert _hist(inc) == {"1": 19, "2": 1}
-    # the histogram map's dirty set after the last batch covers only the
+    # the histogram map's dirty set in the last batch covers only the
     # propagated per_user keys (user 0's old count 1 and new count 2) —
     # never all 20 users
-    dirty = {r["_mr_key"] for r in inc.store.read("hist__map__dirty")
-             .collect()}
+    dirty = captured[0]     # the map commit; the tombstone purge follows
     assert dirty <= {"1", "2"}
+    assert "2" in dirty
+
+
+def test_shared_upstream_handoff_survives_gc(spark, tmp_path):
+    """One map target feeds both a reduce (whose tombstone purge commits
+    the map again, GC-ing the snapshot the batch's dirty keys were read
+    from under ``retain=2``) and a map-over-map consumer applied after it.
+    Every view must equal a recompute after every batch; the dirty, fresh
+    and touched key sets never reach the state root, and every frame the
+    batch cached is released."""
+    cat = Catalog(spark)
+
+    def set_source(rows):
+        cat.register("orders", spark.createDataFrame(
+            rows, "id string, custkey long, amount long"))
+
+    eng = ViewEngine(cat, {
+        "m": {"orders": map_item("custkey", "amount")},
+        "spend": {"m": reduce_agg({"total": lambda c: F.sum(c)},
+                                  merge={"total": MERGE_ADD})},
+        "size__map": {"m": map_item(
+            F.when(F.col("_mr_value") >= 50, "big").otherwise("small"),
+            "_mr_value")},
+        "sizes": {"size__map": reduce_count()},
+    }, id_cols={"orders": "id"}, strict=False)
+    root = tmp_path / "s"
+    inc = IncrementalEngine(eng, ParquetStateStore(spark, str(root)))
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+
+    def check():
+        want = eng.recompute_all()
+        for target, expected in want.items():
+            cols = [c for c in expected.columns if c != "_mr_deleted"]
+            got = sorted(tuple(r) for r in live(inc.read(target))
+                         .select(*cols).collect())
+            assert got == sorted(tuple(r) for r in expected
+                                 .select(*cols).collect()), target
+        assert not [d for d in os.listdir(root)
+                    if any(s in d for s in ("__dirty", "__fresh",
+                                            "__touched"))]
+
+    rows = {}                       # id -> (custkey, amount); None deletes
+    edits = [
+        {f"o{i}": (i % 3, 10 * i) for i in range(1, 7)},
+        # create, move o2 to another customer, delete o3
+        {"o7": (1, 70), "o2": (0, 20), "o3": None},
+        # o1 crosses the big/small line, o4 goes, o8 arrives
+        {"o1": (1, 90), "o4": None, "o8": (2, 5)},
+        # customer 2 loses every order (empty-group elimination)
+        {"o5": None, "o8": None, "o7": (0, 15)},
+    ]
+    for edit in edits:
+        batch = []
+        for rid, kv in edit.items():
+            if kv is None:
+                del rows[rid]
+                batch.append(("orders", "deleted", rid))
+            else:
+                batch.append(("orders", "updated" if rid in rows
+                              else "created", rid))
+                rows[rid] = kv
+        set_source([(rid, k, v) for rid, (k, v) in rows.items()])
+        before = persistent().size()
+        inc.apply_changes(notifications(spark, batch))
+        assert persistent().size() == before
+        check()
+    assert {r["_mr_key"] for r in inc.read("spend").collect()} == {"0", "1"}
 
 
 def test_deep_dag_resync_bootstrap(spark, tmp_path):

@@ -118,8 +118,12 @@ def test_killed_batch_replay_converges(spark, tmp_path):
     batch = notifications(spark, [("src", "updated", "4")])
     store.crash_before_commit = True
     store.crash_tables = {"sums"}
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = persistent().size()
     with pytest.raises(Crash):
         inc.apply_changes(batch)
+    # the dead batch released every frame it cached
+    assert persistent().size() == before
     # half-applied: map committed, reduce still shows the OLD total —
     # a consistent (stale) view, never a torn one
     assert totals()["1"] == 1 + 4 + 7
