@@ -10,28 +10,32 @@ state update out. The semantics preserved (SURVEY.md §2.7):
   that ``_mr_source_id`` then insert fresh ones (``processor.py:99-131``,
   delete-then-insert ``processor.py:111-126``). Set form: anti-join the old
   map table against the dirty-id set, union the freshly mapped rows.
-- **T3 delete propagation**: on deleted, tombstone map rows
-  (``_mr_deleted=true``) rather than removing them — the reduce stage still
-  needs the key to know which groups to recompute (``processor.py:133-148``,
-  rationale comment ``processor.py:143-145``); purge only after the key's
-  reduce succeeded (``processor.py:406-409``).
+- **T3 delete propagation**: on deleted, drop the id's map rows; their
+  keys still reach the reduce through T4's dirty set. The reference
+  tombstones instead and purges after the reduce (``processor.py:133-148,
+  406-409``) because its map and reduce commit separately; here one batch
+  is one store transaction, which collapses both phases (SURVEY T3).
 - **T4 dirty-key tracking**: re-reduce only keys touched by this batch
   (``processor.py:345-360,373-382``). Set form: dirty keys = keys of old ∪
   new map rows of the dirty source ids; recompute = semi-join + groupBy.
   Like the reference's in-memory hand-off, the dirty keys pass from the
-  map pass to the reduce pass as cached frames that live for one batch.
+  map pass to the reduce pass as cached frames that live for one batch;
+  a crashed batch publishes nothing, so its replay re-derives them.
 - **T5 full-group recompute**: reduce re-runs over the entire key group, not
   an incremental delta (``processor.py:192-227``) — always correct for
   non-decomposable aggregates; Catalyst still does partial aggregation
   inside the recompute.
 - **A8 empty-group elimination**: a key whose live mapped rows all vanished
   loses its reduce row (``processor.py:214-217``, ``utils.py:31-37``).
+- **T7 version barrier**: a rebuilt view and its handler version publish
+  in one transaction; half-synced keys of a chunked resync are postponed
+  (``processor.py:168-178``, see :meth:`IncrementalEngine._apply_reduce`).
 - **T8 resync/backfill**: full recompute through the same builders +
   transactional overwrite (``resync.py:15-49,77-128``) — versioned-state
   skip machinery becomes unnecessary because the overwrite is atomic.
 
 State lives in a :class:`ParquetStateStore` — versioned parquet snapshots
-with an atomically-renamed pointer file. On a production cluster this role
+with one atomically-renamed state file. On a production cluster this role
 is played by Delta/Iceberg ``MERGE`` (ACID, file-level data skipping); the
 store isolates that choice behind ``read``/``overwrite`` so swapping the
 backend does not touch engine logic. All engine logic is DataFrame-level
@@ -82,48 +86,91 @@ def _union(frames: list[DataFrame]) -> DataFrame:
 
 
 def _hold(held: list, df: DataFrame) -> int:
-    """Cache ``df`` and count it, returning the count. Materialized now, it
-    no longer reads the snapshot it was computed from — which a later
-    commit of the same batch may GC under ``retain``."""
+    """Cache ``df`` and count it, returning the count. Materialized once,
+    the frame is reused by every later step of the batch instead of being
+    recomputed from the snapshots it reads."""
     held.append(df.cache())
     return df.count()
 
 
 class ParquetStateStore:
-    """Versioned parquet snapshots with an atomic pointer — a minimal stand-in
-    for Delta/Iceberg transactional tables on plain parquet.
+    """Versioned parquet snapshots with one atomic state file — a minimal
+    stand-in for Delta/Iceberg transactional tables on plain parquet.
 
-    Layout: ``{root}/{table}/v{n}/*.parquet`` + ``{root}/{table}/_LATEST``
-    (text file holding ``n``, written via tmp+rename so readers never see a
-    torn pointer). ``overwrite`` is therefore atomic at the table level —
-    which is exactly the property the reference's version-barrier machinery
-    (SURVEY §2.7 T7) exists to fake; with atomic overwrite the barrier is
-    structural.
+    Layout: ``{root}/{table}/v{n}/*.parquet`` + ``{root}/_STATE.json``
+    holding ``{"tables": {table: n}, "handlers": {...}}``, the committed
+    state of the whole root, written via tmp+rename so readers never see
+    a torn one. A root without the file (such as one written by older
+    code, which kept per-table pointers) reads as empty.
+
+    Every commit inside a :meth:`transaction` publishes with ONE rename,
+    so a multi-table engine batch is atomic — the property the
+    reference's version-barrier machinery (SURVEY §2.7 T7) exists to
+    fake; with atomic commits the barrier is structural.
     """
 
     def __init__(self, spark: SparkSession, root: str, retain: int = 2):
         """``retain`` controls snapshot GC depth. NOTE the read hazard:
         ``read()`` returns a lazy DataFrame pinned to a version directory —
-        a caller holding one across ``retain`` subsequent ``overwrite()``
-        calls of the same table gets FileNotFound at action time. Raise
+        a caller holding one across ``retain`` later published versions
+        of the same table gets FileNotFound at action time. Raise
         ``retain`` if external readers hold snapshots across batches."""
         self.spark = spark
         self.root = root
         self.retain = retain
+        self._state = os.path.join(root, "_STATE.json")
+        #: the open transaction's staged versions, None outside one
+        self._staged: dict | None = None
         os.makedirs(root, exist_ok=True)
 
     def _dir(self, table: str) -> str:
         return os.path.join(self.root, table)
 
-    def _pointer(self, table: str) -> str:
-        return os.path.join(self._dir(table), "_LATEST")
+    def committed(self) -> dict:
+        """The published state, ``{"tables": {table: version},
+        "handlers": {key: version}}`` — what a fresh store on this root
+        sees, whatever transaction is open."""
+        try:
+            with open(self._state) as f:
+                return json.load(f)
+        except FileNotFoundError:
+            return {"tables": {}, "handlers": {}}
+
+    def _view(self, kind: str) -> dict:
+        """The writer's view of ``kind``: committed entries overlaid by
+        the open transaction's staged ones."""
+        view, staged = self.committed()[kind], self._staged
+        if staged is not None:
+            view.update(staged[kind])
+        return view
+
+    @contextmanager
+    def transaction(self):
+        """Stage every commit made inside the block; the outermost block
+        publishes them all with one rename on exit, then GCs the tables
+        that changed. Outside a block each commit publishes at once. A
+        block that raises publishes nothing; the next attempt overwrites
+        its unpublished ``v{n}`` directories. Re-entrant: an inner block
+        joins the outer one."""
+        if self._staged is not None:
+            yield
+            return
+        self._staged = staged = {"tables": {}, "handlers": {}}
+        try:
+            yield
+        finally:
+            self._staged = None
+        state = self.committed()
+        for kind in state:
+            state[kind].update(staged[kind])
+        with open(self._state + ".tmp", "w") as f:
+            json.dump(state, f, sort_keys=True)
+        os.replace(self._state + ".tmp", self._state)
+        for table, v in staged["tables"].items():
+            self._gc(table, keep=v)
 
     def version(self, table: str) -> int | None:
-        try:
-            with open(self._pointer(table)) as f:
-                return int(f.read().strip())
-        except (FileNotFoundError, ValueError):
-            return None
+        return self._view("tables").get(table)
 
     def exists(self, table: str) -> bool:
         return self.version(table) is not None
@@ -134,10 +181,10 @@ class ParquetStateStore:
         of key values) is a PRUNING HINT for stores that can skip files
         by key — this base store ignores it and scans the snapshot (the
         caller's filter still applies downstream). ``version`` pins the
-        read at a specific committed version instead of the pointer —
-        the consistent-snapshot path (:meth:`IncrementalEngine.
-        snapshot`); pinned versions stay readable for ``retain``
-        subsequent commits of the table."""
+        read at a specific version instead of the writer's view — the
+        consistent-snapshot path (:meth:`IncrementalEngine.snapshot`);
+        pinned versions stay readable for ``retain`` later published
+        versions of the table."""
         v = self.version(table) if version is None else int(version)
         if v is None:
             raise KeyError(f"no state for table {table!r}")
@@ -159,11 +206,10 @@ class ParquetStateStore:
         self._commit(table, v)
 
     def _commit(self, table: str, v: int) -> None:
-        tmp = self._pointer(table) + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(str(v))
-        os.replace(tmp, self._pointer(table))
-        self._gc(table, keep=v)
+        """Make the written ``v{v}`` the table's version: staged in an
+        open transaction, else published at once."""
+        with self.transaction():
+            self._staged["tables"][table] = v
 
     def _gc(self, table: str, keep: int) -> None:
         """Drop snapshot dirs older than ``self.retain`` versions back."""
@@ -173,52 +219,15 @@ class ParquetStateStore:
                 if int(name[1:]) <= keep - self.retain:
                     shutil.rmtree(os.path.join(d, name), ignore_errors=True)
 
-    # -- engine epoch (cross-table consistent snapshot) ----------------------
-
-    def _epoch_path(self) -> str:
-        return os.path.join(self.root, "_EPOCH")
-
-    def get_epoch(self) -> dict:
-        """The last committed cross-table epoch: ``{table: version}`` as
-        of the end of the most recent engine batch. Empty before the
-        first epoch commit (stores written by pre-epoch code)."""
-        try:
-            with open(self._epoch_path()) as f:
-                return json.load(f)
-        except (FileNotFoundError, ValueError):
-            return {}
-
-    def set_epoch(self, versions: dict) -> None:
-        """Atomically (tmp+rename, like ``_LATEST``) record the set of
-        per-table versions that together form one consistent state —
-        written by the engine AFTER every table of a batch committed,
-        so a concurrently opened snapshot resolves to either the whole
-        batch or none of it."""
-        tmp = self._epoch_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(versions, f, sort_keys=True)
-        os.replace(tmp, self._epoch_path())
-
     # -- handler-version metadata (reference qvarnmr_handlers state,
     #    ``resync.py:52-74``) ------------------------------------------------
 
-    def _meta_path(self) -> str:
-        return os.path.join(self.root, "_handlers.json")
-
     def get_handler_versions(self) -> dict:
-        try:
-            with open(self._meta_path()) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            return {}
+        return self._view("handlers")
 
     def set_handler_version(self, target: str, source: str, version: int) -> None:
-        meta = self.get_handler_versions()
-        meta[f"{target}\x00{source}"] = version
-        tmp = self._meta_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(meta, f)
-        os.replace(tmp, self._meta_path())
+        with self.transaction():
+            self._staged["handlers"][f"{target}\x00{source}"] = version
 
 
 class BucketedParquetStateStore(ParquetStateStore):
@@ -393,13 +402,11 @@ class BucketedParquetStateStore(ParquetStateStore):
             return (self.spark.read.option("mergeSchema", "true")
                     .parquet(*paths))
         # Pin the read schema to the manifest's: an owner chain mixes files
-        # from many commits (appends, tombstone rewrites), and Spark's
-        # default single-sample-file inference would make column presence
-        # depend on WHICH file it sampled — a chain whose sampled file
-        # lacked ``_mr_deleted`` would silently resurrect tombstones in
-        # every presence-guarded consumer. With the committed schema,
-        # columns absent from an older file read as null deterministically
-        # (and the tombstone filters treat null as live — see ``live()``).
+        # from many commits, and Spark's default single-sample-file
+        # inference would make column presence depend on WHICH file it
+        # sampled. With the committed schema, columns absent from an older
+        # file read as null deterministically (``live()`` treats a null
+        # ``_mr_deleted`` as live).
         return self.spark.read.schema(schema).parquet(*paths)
 
     def _gc(self, table: str, keep: int) -> None:
@@ -459,56 +466,52 @@ class IncrementalEngine:
 
     # -- bootstrap / resync (T8) --------------------------------------------
 
-    def resync(self, target: str, _epoch: bool = True) -> None:
+    def resync(self, target: str) -> None:
         """Full rebuild of one target — bootstrap and handler-upgrade path.
 
         Reference: ``resync.py:91-128`` walks every source id through the
         normal notification path in chunks of 100, with per-row same-version
         skips so an interrupted resync resumes. Here the rebuild is ONE
-        batch pipeline + atomic overwrite: interruption leaves the old
-        snapshot live, so the skip machinery is unnecessary.
-
-        ``_epoch`` (internal): the multi-target drivers (resync_all /
-        resync_changed / resync_interleaved) pass False and publish ONE
-        epoch after their last target — a per-target epoch would let a
-        concurrent snapshot() pin a half-rebuilt upgrade as consistent
-        (r13 self-review).
+        batch pipeline + one store transaction: the rebuilt table and its
+        handler version publish together, and an interruption leaves both
+        at their old versions, so the skip machinery is unnecessary.
         """
         sources = self.engine.config[target]
         first = next(iter(sources.values()))
-        if isinstance(first, REDUCE_SPECS):
-            ((src, spec),) = sources.items()
-            # stored snapshot if present; else batch-recompute the source
-            # (_resolve dispatches map vs reduce for deep DAGs)
-            map_df = self.store.read(src) if self.store.exists(src) \
-                else self.engine._resolve(src)
-            self.store.overwrite(target, self.engine.reduce_table(target, map_df))
-            self.store.set_handler_version(target, src, spec.version)
-        else:
-            # map-over-derived sources read the STORED upstream snapshot,
-            # not a catalog recompute (same preference as the reduce branch
-            # above and the incremental path): if the stored upstream lags
-            # the catalog (pending dead letters, undrained feed), a catalog
-            # rebuild would transiently diverge from the stored parent level
-            overrides = {src: self.store.read(src) for src in sources
-                         if src in self.engine.config
-                         and self.store.exists(src)}
-            self.store.overwrite(
-                target, self.engine.map_table(target, overrides or None))
-            for src, spec in sources.items():
+        with self.store.transaction():
+            if isinstance(first, REDUCE_SPECS):
+                ((src, spec),) = sources.items()
+                # stored snapshot if present; else batch-recompute the
+                # source (_resolve dispatches map vs reduce for deep DAGs)
+                map_df = self.store.read(src) if self.store.exists(src) \
+                    else self.engine._resolve(src)
+                self.store.overwrite(target,
+                                     self.engine.reduce_table(target, map_df))
                 self.store.set_handler_version(target, src, spec.version)
-        if _epoch:
-            self._commit_epoch()
+            else:
+                # map-over-derived sources read the STORED upstream
+                # snapshot, not a catalog recompute (same preference as the
+                # reduce branch above and the incremental path): if the
+                # stored upstream lags the catalog (pending dead letters,
+                # undrained feed), a catalog rebuild would transiently
+                # diverge from the stored parent level
+                overrides = {src: self.store.read(src) for src in sources
+                             if src in self.engine.config
+                             and self.store.exists(src)}
+                self.store.overwrite(
+                    target, self.engine.map_table(target, overrides or None))
+                for src, spec in sources.items():
+                    self.store.set_handler_version(target, src, spec.version)
 
     def resync_all(self) -> None:
         """Rebuild every target in dependency order — the reference's
         startup resync loop (``scripts/worker.py:66-71``); topological
-        order generalizes its map-then-reduce pass to deep DAGs. The
-        epoch publishes ONCE at the end: snapshots opened mid-rebuild
-        resolve to the whole pre-rebuild state."""
-        for target in self._topo_targets():
-            self.resync(target, _epoch=False)
-        self._commit_epoch()
+        order generalizes its map-then-reduce pass to deep DAGs. One
+        store transaction: snapshots opened mid-rebuild resolve to the
+        whole pre-rebuild state."""
+        with self.store.transaction():
+            for target in self._topo_targets():
+                self.resync(target)
 
     def _changed_targets(self) -> list[str]:
         """Targets whose configured handler version differs from the stored
@@ -544,14 +547,14 @@ class IncrementalEngine:
 
     def resync_changed(self) -> list[str]:
         """Resync only targets whose configured handler version differs from
-        the stored one (``resync.py:77-88`` version diff). One epoch at
-        the end, like resync_all — a handler upgrade's map and reduce
-        rebuilds land in the same consistent snapshot."""
+        the stored one (``resync.py:77-88`` version diff). One store
+        transaction, like resync_all — a handler upgrade's map and reduce
+        rebuilds and their handler versions publish together, so a crash
+        mid-upgrade leaves every target changed for the rerun."""
         changed = self._changed_targets()
-        for target in changed:
-            self.resync(target, _epoch=False)
-        if changed:
-            self._commit_epoch()
+        with self.store.transaction():
+            for target in changed:
+                self.resync(target)
         return changed
 
     def resync_interleaved(self, drain=None, chunks: int = 8) -> list[str]:
@@ -578,7 +581,9 @@ class IncrementalEngine:
         them for free), the chunked path must clean up drift explicitly: a
         final synthetic ``deleted`` batch removes map rows whose source row
         vanished without a delete notification, so the end state equals a
-        full recompute.
+        full recompute. Each slice commits atomically before ``drain()``;
+        handler versions publish after the last, so an interrupted
+        backfill reruns from the first slice.
         """
         drain = drain or (lambda: None)
         changed = self._changed_targets()
@@ -589,7 +594,7 @@ class IncrementalEngine:
                 ((src, spec),) = sources.items()
                 if not self.store.exists(src):
                     # no stored map yet: nothing to slice — one-shot bootstrap
-                    self.resync(target, _epoch=False)
+                    self.resync(target)
                 else:
                     for i in range(chunks):
                         keys = (self.store.read(src).select("_mr_key")
@@ -601,7 +606,7 @@ class IncrementalEngine:
                         # so each slice key recomputes its full group
                         with _held_frames() as held:
                             self._apply_reduce(target, sources, keys, None,
-                                               keys, True, held)
+                                               keys, held)
                         drain()
                 self.store.set_handler_version(target, src, spec.version)
             elif any(s in self.engine.config for s in sources):
@@ -609,7 +614,7 @@ class IncrementalEngine:
                 # resync pass rebuilds, so chunk-slicing the catalog makes
                 # no sense — one-shot rebuild after upstream finished
                 # (topo order of _changed_targets guarantees that)
-                self.resync(target, _epoch=False)
+                self.resync(target)
                 drain()
             else:
                 for i in range(chunks):
@@ -621,7 +626,6 @@ class IncrementalEngine:
                 for src, spec in sources.items():
                     self.store.set_handler_version(target, src, spec.version)
                 drain()
-        self._commit_epoch()
         return changed
 
     def _resync_batch(self, sources: dict, chunks: int, i: int) -> DataFrame:
@@ -677,11 +681,13 @@ class IncrementalEngine:
         propagation, so a 5-level pipeline stays O(delta) end to end. For
         strict (reference-shape) configs the topo order degenerates to
         "map targets first, then reduce targets", identical to before.
-        Each target's hand-off to its consumers — ``(dirty, fresh, touched,
-        lost)``, see :meth:`_apply_map` — stays in memory for the batch.
+        Each target's hand-off to its consumers — ``(dirty, fresh,
+        touched)``, see :meth:`_apply_map` — stays in memory for the batch.
+        The batch is one store transaction: a batch that raises leaves
+        every table at its pre-batch version for the replay.
         """
         handoff: dict[str, tuple] = {}
-        with _held_frames() as held:
+        with _held_frames() as held, self.store.transaction():
             # final change per resource id — replay-order equivalent (see
             # class doc)
             changes = changes.cache()
@@ -692,7 +698,7 @@ class IncrementalEngine:
                     (src,) = sources
                     dirty = self._apply_reduce(target, sources,
                                                *handoff[src], held)
-                    handoff[target] = (dirty, None, None, True)
+                    handoff[target] = (dirty, None, None)
                 else:
                     eff = changes
                     for src in sources:
@@ -701,9 +707,6 @@ class IncrementalEngine:
                                 src, handoff[src][0]))
                     handoff[target] = self._apply_map(target, sources, eff,
                                                       held)
-        # all targets committed: publish this batch's versions as ONE
-        # atomic epoch — the consistent-snapshot barrier (snapshot())
-        self._commit_epoch()
 
     def _topo_targets(self) -> list[str]:
         """Config targets in dependency order (sources before consumers),
@@ -745,33 +748,30 @@ class IncrementalEngine:
 
     def _source_df(self, source: str) -> DataFrame:
         """A map stage's input rows: catalog collection, or the STORED
-        snapshot of a derived target (live rows only — tombstones are
-        bookkeeping for the owning reduce, not data)."""
+        snapshot of a derived target (live rows only)."""
         if source in self.engine.config:
             return live(self.store.read(source))
         return self.catalog.get(source)
 
     def _apply_map(self, target: str, sources: dict, changes: DataFrame,
                    held: list) -> tuple:
-        """T2 upsert + T3 tombstone for one map target.
+        """T2 upsert + T3 delete for one map target.
 
         Commits the new map snapshot and returns this batch's hand-off to
-        the target's consumers, ``(dirty, fresh, touched, lost)``: the
-        dirty keys (keys the changed ids had before ∪ have now), the
-        freshly mapped rows, the keys that lost old rows, and whether any
-        key did. The frames read the OLD snapshot, so they are cached into
-        ``held`` and materialized before the commit. Everything is joins:
-        - surviving rows  = old anti-join dirty ids (per source type)
-        - tombstoned rows = old semi-join deleted ids, flagged
-        - fresh rows      = map(source semi-join upserted ids)
-        On Delta this whole function is one ``MERGE``; the shape (broadcast
+        the target's consumers, ``(dirty, fresh, touched)``: the dirty
+        keys (keys the changed ids had before ∪ have now), the freshly
+        mapped rows and the keys that lost old rows, cached into ``held``
+        for the consumers to reuse. Everything is joins:
+        - surviving rows = old anti-join changed ids (per source type)
+        - fresh rows     = map(source semi-join upserted ids)
+        A deleted id's rows simply go (T3, see the module docstring). On
+        Delta this whole function is one ``MERGE``; the shape (broadcast
         the small dirty-id set against the big map table) is identical.
         """
         old = self.store.read(target) if self.store.exists(target) else None
         parts = []
         fresh_parts = []
         touched_parts = []
-        deleted_parts = []
         for source, spec in sources.items():
             if "seq" not in changes.columns:
                 # F.last over groupBy is nondeterministic; without an order
@@ -787,7 +787,6 @@ class IncrementalEngine:
                   .groupBy("resource_id")
                   .agg(F.max_by("resource_change", F.col("seq")).alias("change")))
             upserted = ch.filter(F.col("change") != DELETED).select("resource_id")
-            deleted = ch.filter(F.col("change") == DELETED).select("resource_id")
             src_df = self._source_df(source)
             id_col = self.engine._id_col(source)
             # T11/T6 dead-letter: an upsert notification whose resource is
@@ -811,12 +810,7 @@ class IncrementalEngine:
                     F.broadcast(all_dirty),
                     mine["_mr_source_id"] == all_dirty["resource_id"],
                     "left_anti")
-                tombstoned = (mine.join(
-                    F.broadcast(deleted),
-                    mine["_mr_source_id"] == deleted["resource_id"],
-                    "left_semi")
-                    .withColumn("_mr_deleted", F.lit(True)))
-                parts += [survivors, tombstoned, fresh]
+                parts += [survivors, fresh]
                 # keys the changed ids had before
                 touched_parts.append(mine.join(
                     F.broadcast(all_dirty),
@@ -825,7 +819,6 @@ class IncrementalEngine:
             else:
                 parts.append(fresh)
             fresh_parts.append(fresh)
-            deleted_parts.append(deleted)
         out = _union(parts)
         # For the algebraic reduce path (_apply_reduce): this batch's freshly
         # mapped rows (the insert delta), and the keys that LOST old rows
@@ -838,33 +831,30 @@ class IncrementalEngine:
         lost = _hold(held, touched) > 0
         dirty = touched.unionByName(fresh_all.select("_mr_key")).distinct()
         _hold(held, dirty)
-        # PURE-APPEND detection: no delete notifications and no existing map
-        # rows under the changed ids ⇒ new = old ∪ fresh exactly, and a
-        # bucketed store may commit just the fresh rows (O(delta) even when
-        # a hot key's group holds millions of rows — the emptiness probe
-        # is a delta-bounded join, far cheaper than the rewrite it avoids).
-        insert_only = (old is not None and not lost
-                       and _union(deleted_parts).isEmpty())
+        # PURE-APPEND detection: no existing map rows under the changed ids
+        # ⇒ new = old ∪ fresh exactly, and a bucketed store may commit just
+        # the fresh rows (O(delta) even when a hot key's group holds
+        # millions of rows).
+        insert_only = old is not None and not lost
         # every row-level difference between old and new lives under a dirty
-        # key (survivors only lose dirty-source rows; fresh/tombstoned rows
-        # carry dirty keys), so a bucketed store may commit dirty buckets only
+        # key (survivors only lose dirty-source rows; fresh rows carry dirty
+        # keys), so a bucketed store may commit dirty buckets only
         self.store.overwrite(target, out, dirty_keys=dirty,
                              inserts=fresh_all if insert_only else None)
-        return dirty, fresh_all, touched, lost
+        return dirty, fresh_all, touched
 
     def _apply_reduce(self, target: str, sources: dict, dirty: DataFrame,
                       fresh: DataFrame | None, touched: DataFrame | None,
-                      lost: bool, held: list) -> DataFrame:
-        """T4/T5 dirty-key group recompute + A8 empty-group delete + T3 purge.
+                      held: list) -> DataFrame:
+        """T4/T5 dirty-key group recompute + A8 empty-group delete.
 
         new_reduce = old_reduce (keys not dirty)
                    ∪ recompute(map ⋉ ready dirty_keys)  — dropped groups
                                                            simply emit no row
-        Then purge tombstoned map rows of the dirty keys (two-phase done —
-        ``processor.py:406-409``). ``dirty``, ``fresh``, ``touched`` and
-        ``lost`` are the source's hand-off (:meth:`_apply_map`; ``fresh``
-        and ``touched`` are None for a reduce source). Returns the keys
-        this reduce recomputed, the hand-off to its own consumers.
+        ``dirty``, ``fresh`` and ``touched`` are the source's hand-off
+        (:meth:`_apply_map`; ``fresh`` and ``touched`` are None for a
+        reduce source). Returns the keys this reduce recomputed, the
+        hand-off to its own consumers.
 
         **Version barrier (T7)**: a dirty key whose live map rows mix
         handler versions — possible mid-:meth:`resync_interleaved`, when a
@@ -892,8 +882,7 @@ class IncrementalEngine:
                           .select("_mr_key").distinct())
             dirty = dirty.join(F.broadcast(stale_keys), "_mr_key",
                                "left_anti")
-            # consumers read it after later purges of src, which may GC
-            # map_df
+            # cached: the joins below and this reduce's consumers reuse it
             _hold(held, dirty)
         old = self.store.read(target) if self.store.exists(target) else None
 
@@ -931,19 +920,6 @@ class IncrementalEngine:
         if merged is not None:
             new = new.unionByName(merged, allowMissingColumns=True)
         self.store.overwrite(target, new, dirty_keys=dirty)
-        if "_mr_deleted" in map_df.columns and lost:
-            # purge tombstones for keys whose reduce has now succeeded —
-            # set form (no collect): drop rows matching (source_id, key)
-            # of tombstoned∩dirty. Tombstones only ever arise under keys
-            # that LOST rows, so a pure-insert batch — whose map commit
-            # was the store's O(delta) append path — skips the purge
-            # rewrite entirely.
-            tomb_dirty = (map_df.filter(F.col("_mr_deleted"))
-                          .join(F.broadcast(dirty), "_mr_key", "left_semi"))
-            purged = map_df.join(
-                tomb_dirty.select("_mr_source_id", "_mr_key").distinct(),
-                ["_mr_source_id", "_mr_key"], "left_anti")
-            self.store.overwrite(src, purged, dirty_keys=dirty)
         return dirty
 
     def _merge_reduce(self, old: DataFrame, delta: DataFrame,
@@ -1026,7 +1002,7 @@ class IncrementalEngine:
                     src_df[id_col].cast("string").alias("resource_id")),
                 "resource_id", "left_semi"))
         ready = _union(ready_parts)
-        with _held_frames() as held:
+        with _held_frames() as held, self.store.transaction():
             n = _hold(held, ready)
             if n == 0:
                 return 0
@@ -1044,9 +1020,8 @@ class IncrementalEngine:
             remaining = dl.join(
                 ready.select("resource_type", "resource_id"),
                 ["resource_type", "resource_id"], "left_anti")
-            # no epoch commit here: apply_changes above already published
-            # one, and the dead-letter table is outside engine.config so
-            # the trailing overwrite cannot change epoch content
+            # same transaction as the replayed batch: a crash cannot
+            # apply the entries without dequeuing them, or the reverse
             self.store.overwrite(table, remaining)
         return n
 
@@ -1059,53 +1034,34 @@ class IncrementalEngine:
         ``similarity.probe_ivf_store``)."""
         return self.store.read(target, keys=keys)
 
-    def _commit_epoch(self) -> None:
-        """Record the current per-table versions as one consistent epoch
-        — called after every batch/rebuild finished committing ALL its
-        targets (single-writer discipline: concurrent writers need the
-        streaming lease, same as every other commit path)."""
-        self.store.set_epoch(
-            {t: self.store.version(t) for t in self.engine.config
-             if self.store.exists(t)})
-
     def snapshot(self) -> "EngineSnapshot":
         """A CONSISTENT multi-table reader (r13, VERDICT r12 #8): pins
-        every maintained view at the version recorded by the last
-        completed batch's epoch commit, so map/reduce/view joins across
-        tables can never observe a half-applied ``apply_changes`` —
-        targets commit one at a time in topo order, and a reader opened
-        between two of those commits would otherwise join table A
-        post-batch against table B pre-batch. The epoch file is written
-        atomically AFTER the batch's last target committed, so
-        ``snapshot()`` taken mid-batch resolves to the previous epoch
-        (none of the batch) and taken after resolves to all of it —
-        pytest-pinned in tests/test_incremental.py.
+        every maintained view at its committed version, so map/reduce/view
+        joins across tables can never observe a half-applied
+        ``apply_changes``. Every batch and rebuild publishes all its
+        targets with one store transaction, so ``snapshot()`` taken
+        mid-batch resolves to the previous batch (none of the in-flight
+        one) and taken after resolves to all of it — pytest-pinned in
+        tests/test_incremental.py. Direct ``read`` calls return the
+        writer's view instead, in-flight commits included.
 
-        A table the engine config knows but no epoch has covered yet
-        (bootstrap before the first batch, or a store written by
-        pre-epoch code) pins at its CURRENT version, documented
-        weaker. Pinned versions stay readable for ``store.retain``
-        subsequent commits per table (the bucketed store's
+        Pinned versions stay readable for ``store.retain`` later
+        published versions per table (the bucketed store's
         manifest-closure GC protects every retained manifest's chain);
         long-lived snapshots across many batches need a raised
         ``retain``, same contract as any pinned reader."""
-        epoch = self.store.get_epoch()
-        versions: dict[str, int] = {}
-        for t in self.engine.config:
-            if t in epoch:
-                versions[t] = int(epoch[t])
-            elif self.store.exists(t):
-                versions[t] = self.store.version(t)
-        return EngineSnapshot(store=self.store, versions=versions)
+        tables = self.store.committed()["tables"]
+        return EngineSnapshot(store=self.store, versions={
+            t: tables[t] for t in self.engine.config if t in tables})
 
 
 @dataclass
 class EngineSnapshot:
     """A pinned, cross-table-consistent view of an engine's maintained
-    tables — every ``read`` resolves to the version set one epoch commit
-    recorded, regardless of what later batches do. Lazy frames: the pin
-    is the version number; the parquet files stay on disk for
-    ``store.retain`` commits (see :meth:`IncrementalEngine.snapshot`)."""
+    tables — every ``read`` resolves to the version set one store
+    transaction published, regardless of what later batches do. Lazy
+    frames: the pin is the version number; the parquet files stay on disk
+    for ``store.retain`` commits (see :meth:`IncrementalEngine.snapshot`)."""
 
     store: ParquetStateStore
     versions: dict

@@ -10,10 +10,10 @@ behavior with no engine story):
 
 - a resource type's **schema version** is durable metadata next to the
   snapshots (``_SCHEMAS.json``, same atomic tmp+rename discipline as
-  the handler-version file);
+  the state store's ``_STATE.json``);
 - a **migration step** is a declarative transform list applied as ONE
-  transactional snapshot rewrite (the versioned store's atomic pointer
-  swap — an interrupted migration leaves the previous snapshot fully
+  transactional snapshot rewrite (the versioned store's atomic state
+  file rename — an interrupted migration leaves the previous snapshot fully
   live, so there is no partially-migrated state to repair);
 - transforms are **idempotent by construction** (add skips when the
   column exists, rename skips when the source column is gone), so a
@@ -105,8 +105,8 @@ def apply_transforms(df: DataFrame, transforms) -> DataFrame:
 
 class SchemaRegistry:
     """Durable per-resource-type schema versions + migration history,
-    stored as ``{root}/_SCHEMAS.json`` (atomic tmp+rename, the
-    ``_handlers.json`` discipline). History records each applied step's
+    stored as ``{root}/_SCHEMAS.json`` (atomic tmp+rename, the state
+    store's ``_STATE.json`` discipline). History records each applied step's
     transforms so an operator can audit how v0 became vN — the
     reference keeps this in the prototype YAML chain."""
 

@@ -14,8 +14,9 @@ Spark re-expression (SURVEY §2.7 T1/T6):
   inside ``foreachBatch`` — the whole worker loop body becomes one call;
 - **ack = checkpoint commit**: the checkpointLocation records which files
   were consumed, so restart resumes exactly after the last completed batch —
-  at-least-once across crashes (a batch interrupted mid-apply re-runs, and
-  the snapshot-overwrite state store makes re-application idempotent);
+  at-least-once across crashes (a batch interrupted mid-apply re-runs;
+  each batch is one state-store transaction, so the interrupted run
+  published nothing and the re-run applies it exactly once);
 - drain-and-exit (the reference's non-forever mode) is
   ``trigger(availableNow=True)``; the forever mode is a processing-time
   trigger;

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-_EPOCH_NTZ = "1970-01-01 00:00:00"
+_UNIX_ZERO_NTZ = "1970-01-01 00:00:00"
 
 
 def ts_us(c: Column | str, dtype: str | None = None) -> Column:
@@ -49,7 +49,7 @@ def ts_us(c: Column | str, dtype: str | None = None) -> Column:
         return F.unix_micros(col)
     return F.timestamp_diff(
         "MICROSECOND",
-        F.lit(_EPOCH_NTZ).cast("timestamp_ntz"),
+        F.lit(_UNIX_ZERO_NTZ).cast("timestamp_ntz"),
         col.cast("timestamp_ntz"),
     )
 

@@ -131,18 +131,18 @@ def test_deep_dag_untouched_keys_stay_clean(spark, tmp_path):
     # the histogram map's dirty set in the last batch covers only the
     # propagated per_user keys (user 0's old count 1 and new count 2) —
     # never all 20 users
-    dirty = captured[0]     # the map commit; the tombstone purge follows
+    dirty = captured[0]     # the batch's one commit of the map
     assert dirty <= {"1", "2"}
     assert "2" in dirty
 
 
 def test_shared_upstream_handoff_survives_gc(spark, tmp_path):
-    """One map target feeds both a reduce (whose tombstone purge commits
-    the map again, GC-ing the snapshot the batch's dirty keys were read
-    from under ``retain=2``) and a map-over-map consumer applied after it.
-    Every view must equal a recompute after every batch; the dirty, fresh
-    and touched key sets never reach the state root, and every frame the
-    batch cached is released."""
+    """One map target feeds both a reduce and a map-over-map consumer
+    applied after it, so both read the batch's cached dirty keys under
+    ``retain=2``; the batch's one transaction GCs nothing until every
+    target has committed. Every view must equal a recompute after every
+    batch; the dirty, fresh and touched key sets never reach the state
+    root, and every frame the batch cached is released."""
     cat = Catalog(spark)
 
     def set_source(rows):

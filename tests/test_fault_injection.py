@@ -1,20 +1,23 @@
 """Crash-atomicity fault injection for the state stores (VERDICT r10
 item 4).
 
-The pointer-swap commit and the manifest-closure GC
+The state-file commit, its transactions and the manifest-closure GC
 (operators/incremental.py) are the engine's ACID story; these tests
 exercise them UNDER failure, not just on the happy path:
 
-(a) a commit killed after the data write but before the pointer swap
+(a) a commit killed after the data write but before it is published
     leaves the previous version fully readable — no torn state;
 (b) re-running the killed batch converges to exactly the full-recompute
-    answer (commits are idempotent at the batch level);
+    answer (a batch is one transaction: it publishes all or nothing),
+    also when it moves an id between keys or upgrades a handler;
 (c) a reader pinned at manifest k-1 survives a concurrent commit + GC
     (the retained-manifest closure rule);
 (d) the documented ``retain`` hazard is real — a reader held across
     more than ``retain`` overwrites hits FileNotFound at action time —
     and raising ``retain`` avoids it (the documented mitigation).
 """
+
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -29,7 +32,11 @@ from qvarn_mr_spark.operators.incremental import (
     BucketedParquetStateStore,
     notifications,
 )
-from qvarn_mr_spark.operators.mapreduce import map_item, reduce_agg
+from qvarn_mr_spark.operators.mapreduce import (
+    MERGE_ADD,
+    map_item,
+    reduce_agg,
+)
 
 
 class Crash(Exception):
@@ -40,11 +47,11 @@ class CrashingStore(BucketedParquetStateStore):
     """Injects a crash at armed points of the commit protocol.
 
     ``crash_before_commit``: after the version directory (data +
-    manifest) is fully written, before the pointer swap — the widest
-    window a real executor/driver death can hit.
+    manifest) is fully written, before the version is staged or
+    published — the widest window a real executor/driver death can hit.
     ``crash_tables``: restrict injection to named tables (so an
     engine-level batch can die on ONE view's commit with earlier views
-    already committed — the messiest real-world state).
+    already written and staged — the messiest real-world state).
     """
 
     def __init__(self, *a, **kw):
@@ -55,7 +62,7 @@ class CrashingStore(BucketedParquetStateStore):
     def _commit(self, table, v):
         if self.crash_before_commit and (
                 self.crash_tables is None or table in self.crash_tables):
-            raise Crash(f"injected before pointer swap of {table} v{v}")
+            raise Crash(f"injected before commit of {table} v{v}")
         super()._commit(table, v)
 
 
@@ -71,7 +78,7 @@ def test_killed_commit_leaves_previous_version_readable(spark, tmp_path):
     store.crash_before_commit = True
     with pytest.raises(Crash):
         store.overwrite("t", frame(spark, [("a", 10), ("b", 2), ("c", 3)]))
-    # pointer never moved; the v1 snapshot reads completely and correctly
+    # nothing published; the v1 snapshot reads completely and correctly
     assert store.version("t") == 1
     got = {(r["_mr_key"], r["v"]) for r in store.read("t").collect()}
     assert got == {("a", 1), ("b", 2)}
@@ -84,25 +91,35 @@ def test_killed_commit_leaves_previous_version_readable(spark, tmp_path):
     assert got == {("a", 10), ("b", 2), ("c", 3)}
 
 
-def test_killed_batch_replay_converges(spark, tmp_path):
-    """Engine level: a CDC batch dies on the REDUCE commit after the map
-    table already committed (the half-applied state). Re-running the
-    same batch must converge to the full-recompute answer — no double
-    counting, no lost keys."""
+def _sums_engine(spark, tmp_path, merge):
+    """src ids 0..8 with key ``id % 3`` and value ``id``, mapped to ``m``
+    and summed per key into ``sums``, on a CrashingStore."""
     cat = Catalog(spark)
 
     def set_source(rows):
         cat.register("src", spark.createDataFrame(
             rows, "id string, key long, value long"))
 
-    rows = [(str(i), i % 3, i) for i in range(9)]
-    set_source(rows)
+    set_source([(str(i), i % 3, i) for i in range(9)])
     eng = ViewEngine(cat, {
         "m": {"src": map_item("key", "value")},
-        "sums": {"m": reduce_agg({"total": lambda c: F.sum(c)})},
+        "sums": {"m": reduce_agg({"total": lambda c: F.sum(c)},
+                                 merge=merge)},
     }, id_cols={"src": "id"})
     store = CrashingStore(spark, str(tmp_path / "s"), buckets=2)
-    inc = IncrementalEngine(eng, store)
+    return eng, store, IncrementalEngine(eng, store), set_source
+
+
+def _totals(df):
+    return {r["_mr_key"]: r["total"] for r in df.collect()}
+
+
+def test_killed_batch_replay_converges(spark, tmp_path):
+    """Engine level: a CDC batch dies on the REDUCE commit after the map
+    table was already written and staged. Re-running the same batch
+    must converge to the full-recompute answer — no double counting,
+    no lost keys."""
+    eng, store, inc, set_source = _sums_engine(spark, tmp_path, None)
     inc.apply_changes(notifications(
         spark, [("src", "created", str(i)) for i in range(9)]))
 
@@ -124,8 +141,8 @@ def test_killed_batch_replay_converges(spark, tmp_path):
         inc.apply_changes(batch)
     # the dead batch released every frame it cached
     assert persistent().size() == before
-    # half-applied: map committed, reduce still shows the OLD total —
-    # a consistent (stale) view, never a torn one
+    # nothing of the batch published: the reduce still shows the OLD
+    # total — a consistent (stale) view, never a torn one
     assert totals()["1"] == 1 + 4 + 7
 
     # replaying the SAME batch converges
@@ -137,6 +154,109 @@ def test_killed_batch_replay_converges(spark, tmp_path):
     want = {r["_mr_key"]: r["total"]
             for r in eng.reduce_table("sums").collect()}
     assert totals() == want
+
+
+@pytest.mark.parametrize("merge", [None, {"total": MERGE_ADD}],
+                         ids=["recompute", "merge"])
+def test_key_move_crash_replay_converges(spark, tmp_path, merge):
+    """A batch that moves id 4 from key 1 to key 2 dies on the ``sums``
+    commit. Neither table may show any of it, and the replay must still
+    recompute key 1 — the key the id left, which only the old map row
+    records."""
+    eng, store, inc, set_source = _sums_engine(spark, tmp_path, merge)
+    inc.apply_changes(notifications(
+        spark, [("src", "created", str(i)) for i in range(9)]))
+
+    def contents():
+        return {t: {tuple(r) for r in inc.read(t).collect()}
+                for t in ("m", "sums")}
+
+    before = contents()
+    set_source([(str(i), 2 if i == 4 else i % 3, i) for i in range(9)])
+    batch = notifications(spark, [("src", "updated", "4")])
+    store.crash_before_commit = True
+    store.crash_tables = {"sums"}
+    with pytest.raises(Crash):
+        inc.apply_changes(batch)
+    assert contents() == before
+
+    store.crash_before_commit = False
+    inc.apply_changes(batch)
+    assert _totals(inc.read("sums")) == _totals(eng.reduce_table("sums"))
+    assert _totals(inc.read("sums")) == {"0": 9, "1": 1 + 7,
+                                         "2": 2 + 4 + 5 + 8}
+
+
+def test_handler_upgrade_crash_rerun_converges(spark, tmp_path):
+    """resync_changed dies on the ``sums`` rebuild after the map's new
+    handler was applied. The upgrade must publish nothing — handler
+    versions included — so the rerun still sees both targets changed."""
+    eng, store, inc, set_source = _sums_engine(spark, tmp_path, None)
+    inc.resync_all()
+    handlers = store.get_handler_versions()
+    eng.config["m"]["src"] = map_item("key", F.col("value") * 2, version=2)
+    store.crash_before_commit = True
+    store.crash_tables = {"sums"}
+    with pytest.raises(Crash):
+        inc.resync_changed()
+    assert store.get_handler_versions() == handlers
+
+    store.crash_before_commit = False
+    assert inc.resync_changed() == ["m", "sums"]
+    assert _totals(inc.read("sums")) == _totals(eng.reduce_table("sums"))
+    assert _totals(inc.read("sums")) == {"0": 18, "1": 24, "2": 30}
+
+
+@pytest.mark.parametrize("store_cls",
+                         [ParquetStateStore, BucketedParquetStateStore])
+def test_transaction_publishes_all_or_nothing(spark, tmp_path, store_cls):
+    """Inside ``transaction()`` the writer sees its own commits while the
+    committed state — and any other store on the root — keeps the old
+    versions; a block that raises leaves the state file byte-identical
+    and GCs nothing (``retain=1`` would drop v1 on any publish of v2)."""
+    root = str(tmp_path / "s")
+    store = store_cls(spark, root, retain=1)
+    store.overwrite("a", frame(spark, [("x", 1)]))
+    store.overwrite("b", frame(spark, [("y", 1)]))
+    store.set_handler_version("a", "src", 1)
+    state = os.path.join(root, "_STATE.json")
+    with open(state, "rb") as f:
+        before = f.read()
+    committed = store.committed()
+
+    def rows(s, table):
+        return {(r["_mr_key"], r["v"]) for r in s.read(table).collect()}
+
+    with pytest.raises(Crash):
+        with store.transaction():
+            store.overwrite("a", frame(spark, [("x", 2)]))
+            with store.transaction():           # joins the outer block
+                store.overwrite("b", frame(spark, [("y", 2)]))
+                store.set_handler_version("a", "src", 2)
+            assert (store.version("a"), store.version("b")) == (2, 2)
+            assert rows(store, "a") == {("x", 2)}
+            assert rows(store, "b") == {("y", 2)}
+            assert store.committed() == committed
+            other = store_cls(spark, root)
+            assert (other.version("a"), other.version("b")) == (1, 1)
+            assert rows(other, "a") == {("x", 1)}
+            assert other.get_handler_versions() == {"a\x00src": 1}
+            raise Crash("abort the block")
+    with open(state, "rb") as f:
+        assert f.read() == before
+    assert (store.version("a"), store.version("b")) == (1, 1)
+    assert rows(store, "a") == {("x", 1)}
+    assert rows(store, "b") == {("y", 1)}
+    assert store.get_handler_versions() == {"a\x00src": 1}
+
+    # a block that completes publishes every staged version at once
+    with store.transaction():
+        store.overwrite("a", frame(spark, [("x", 3)]))
+        store.overwrite("b", frame(spark, [("y", 3)]))
+    other = store_cls(spark, root)
+    assert (other.version("a"), other.version("b")) == (2, 2)
+    assert rows(other, "a") == {("x", 3)}
+    assert rows(other, "b") == {("y", 3)}
 
 
 def test_pinned_reader_survives_commit_and_gc(spark, tmp_path):

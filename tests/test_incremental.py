@@ -72,7 +72,8 @@ def test_lifecycle_sum(setup):
                 ("2", "source", "a", 1, 2)])
     inc.apply_changes(notifications(spark, [("source", "deleted", "3")]))
     assert read_sums(inc) == {"1": 4}
-    # tombstones purged after successful reduce (T3 two-phase)
+    # deleted ids leave no rows behind: the batch commits atomically,
+    # so no tombstone outlives it (T3)
     live = inc.read("source__map").filter("_mr_deleted").count()
     assert live == 0
 
@@ -323,14 +324,13 @@ def test_incremental_join_view_lifecycle(spark, tmp_path):
 
 # -- bucketed store: O(dirty-bucket) commits ---------------------------------
 
-def _bucket_files(root, table):
+def _bucket_files(store, table):
     """{bucket: {relpath: sha256}} for every bucket the manifest references."""
     import hashlib
     import json
     import os
-    tdir = os.path.join(root, table)
-    with open(os.path.join(tdir, "_LATEST")) as f:
-        v = int(f.read())
+    tdir = os.path.join(store.root, table)
+    v = store.version(table)
     with open(os.path.join(tdir, f"v{v}", "_MANIFEST.json")) as f:
         manifest = json.load(f)["buckets"]
     out = {}
@@ -372,7 +372,7 @@ def test_bucketed_store_rewrites_only_dirty_buckets(spark, tmp_path):
     inc.apply_changes(notifications(
         spark, [("source", "created", str(i)) for i in range(40)]))
 
-    before = _bucket_files(root, "source__map")
+    before = _bucket_files(store, "source__map")
     assert len(before) > 1                    # keys actually spread out
 
     # touch ONE resource (key 7) — only its bucket may be rewritten
@@ -380,7 +380,7 @@ def test_bucketed_store_rewrites_only_dirty_buckets(spark, tmp_path):
     set_source(rows)
     inc.apply_changes(notifications(spark, [("source", "updated", "7")]))
 
-    after = _bucket_files(root, "source__map")
+    after = _bucket_files(store, "source__map")
     dirty = F.pmod(F.hash(F.lit("7")), F.lit(8))
     dirty_b = str(spark.range(1).select(dirty).collect()[0][0])
     changed = {b for b in before if before[b] != after.get(b)}

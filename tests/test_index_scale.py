@@ -146,7 +146,7 @@ def test_hot_cluster_insert_commits_delta_not_cluster(spark, tmp_path):
     state["h3000"] = vec(1, flip=0.003)
     sync()
     inc.apply_changes(notifications(spark, [("emb", "created", "h3000")]))
-    last = int(open(os.path.join(root, "hot_idx", "_LATEST")).read())
+    last = inc.store.version("hot_idx")
     assert rows_written(spark, root, "hot_idx", last) == 1
     assert oracle()
 
