@@ -54,6 +54,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from qvarn_mr_spark.catalog import Catalog
 from qvarn_mr_spark.operators.mapreduce import (
@@ -85,6 +86,11 @@ def _union(frames: list[DataFrame]) -> DataFrame:
         lambda a, b: a.unionByName(b, allowMissingColumns=True), frames)
 
 
+def _schema(manifest: dict) -> T.StructType:
+    """The schema a version's manifest records."""
+    return T.StructType.fromJson(json.loads(manifest["schema"]))
+
+
 def _hold(held: list, df: DataFrame) -> int:
     """Cache ``df`` and count it, returning the count. Materialized once,
     the frame is reused by every later step of the batch instead of being
@@ -102,6 +108,14 @@ class ParquetStateStore:
     state of the whole root, written via tmp+rename so readers never see
     a torn one. A root without the file (such as one written by older
     code, which kept per-table pointers) reads as empty.
+
+    Each version directory also holds a ``_MANIFEST.json`` record,
+    ``{"schema": <the committed frame's schema JSON>}``, written after the
+    data and before the commit. :meth:`read` opens a snapshot with that
+    schema pinned, so opening one launches no Spark job — the table log,
+    not the data files, types the read, as in Delta/Iceberg. A version
+    directory without a record (written by older code) is read by
+    schema inference, one small Spark job per open.
 
     Every commit inside a :meth:`transaction` publishes with ONE rename,
     so a multi-table engine batch is atomic — the property the
@@ -125,6 +139,24 @@ class ParquetStateStore:
 
     def _dir(self, table: str) -> str:
         return os.path.join(self.root, table)
+
+    def _manifest_path(self, table: str, v: int) -> str:
+        return os.path.join(self._dir(table), f"v{v}", "_MANIFEST.json")
+
+    def _load_manifest(self, table: str, v: int) -> dict | None:
+        """The record of version ``v``, None for a directory without one."""
+        try:
+            with open(self._manifest_path(table, v)) as f:
+                return json.load(f)
+        except FileNotFoundError:
+            return None
+
+    def _write_manifest(self, table: str, v: int, manifest: dict) -> None:
+        """Record ``v``'s manifest. Called after the data write (whose
+        overwrite mode replaces the directory, an aborted attempt's
+        record included) and before :meth:`_commit`."""
+        with open(self._manifest_path(table, v), "w") as f:
+            json.dump(manifest, f)
 
     def committed(self) -> dict:
         """The published state, ``{"tables": {table: version},
@@ -184,11 +216,16 @@ class ParquetStateStore:
         read at a specific version instead of the writer's view — the
         consistent-snapshot path (:meth:`IncrementalEngine.snapshot`);
         pinned versions stay readable for ``retain`` later published
-        versions of the table."""
+        versions of the table. The recorded schema is pinned, so no
+        Spark job runs until the caller acts on the frame."""
         v = self.version(table) if version is None else int(version)
         if v is None:
             raise KeyError(f"no state for table {table!r}")
-        return self.spark.read.parquet(os.path.join(self._dir(table), f"v{v}"))
+        path = os.path.join(self._dir(table), f"v{v}")
+        manifest = self._load_manifest(table, v)
+        if manifest is None:
+            return self.spark.read.parquet(path)
+        return self.spark.read.schema(_schema(manifest)).parquet(path)
 
     def overwrite(self, table: str, df: DataFrame,
                   dirty_keys: DataFrame | None = None,
@@ -203,6 +240,7 @@ class ParquetStateStore:
         v = (self.version(table) or 0) + 1
         path = os.path.join(self._dir(table), f"v{v}")
         df.write.mode("overwrite").parquet(path)
+        self._write_manifest(table, v, {"schema": df.schema.json()})
         self._commit(table, v)
 
     def _commit(self, table: str, v: int) -> None:
@@ -247,8 +285,11 @@ class BucketedParquetStateStore(ParquetStateStore):
     driver work is one ≤B-row collect of dirty bucket ids — metadata-sized,
     independent of table size.
 
-    Tables lacking ``key_col`` (e.g. dead-letter queues) fall back to the
-    plain full-rewrite path and carry no manifest.
+    The manifest is the base store's per-version record extended with
+    ``buckets``: ``{"buckets": {bucket: [owner versions, oldest first]},
+    "schema": ...}``. Reads pin the recorded schema, as the base store's
+    do. Tables lacking ``key_col`` (e.g. dead-letter queues) fall back to
+    the plain full-rewrite path, whose record carries only ``schema``.
     """
 
     def __init__(self, spark: SparkSession, root: str, retain: int = 2,
@@ -265,29 +306,17 @@ class BucketedParquetStateStore(ParquetStateStore):
     def _bucket_expr(self):
         return F.pmod(F.hash(F.col(self.key_col)), F.lit(self.buckets))
 
-    def _manifest_path(self, table: str, v: int) -> str:
-        return os.path.join(self._dir(table), f"v{v}", "_MANIFEST.json")
-
-    def _load_manifest(self, table: str, v: int) -> dict | None:
-        try:
-            with open(self._manifest_path(table, v)) as f:
-                m = json.load(f)
-        except FileNotFoundError:
-            return None
-        # owner chains: each bucket maps to the LIST of version dirs whose
-        # files compose it, oldest first (a pre-chain manifest holds a
-        # single int — normalize on load, so old snapshots stay readable)
-        m["buckets"] = {b: (ver if isinstance(ver, list) else [ver])
-                        for b, ver in m["buckets"].items()}
-        return m
-
     def overwrite(self, table: str, df: DataFrame,
                   dirty_keys: DataFrame | None = None,
                   inserts: DataFrame | None = None) -> None:
         if self.key_col not in df.columns:
             return super().overwrite(table, df)
         prev_v = self.version(table)
-        prev = self._load_manifest(table, prev_v) if prev_v is not None else None
+        # the owner chains of the previous version; None when it has none
+        # (no previous version, or one written by the full-rewrite path)
+        prev = None
+        if prev_v is not None:
+            prev = (self._load_manifest(table, prev_v) or {}).get("buckets")
         v = (prev_v or 0) + 1
         path = os.path.join(self._dir(table), f"v{v}")
 
@@ -308,7 +337,7 @@ class BucketedParquetStateStore(ParquetStateStore):
                 # (compaction), keeping read fan-in bounded.
                 append_buckets = {
                     b for b in dirty_buckets
-                    if len(prev["buckets"].get(str(b), []))
+                    if len(prev.get(str(b), []))
                     < self.compact_after}
                 compact = dirty_buckets - append_buckets
                 data = inserts.filter(
@@ -328,12 +357,12 @@ class BucketedParquetStateStore(ParquetStateStore):
         else:
             # untouched buckets keep their owning versions; a dirty bucket
             # that came out empty (all its keys vanished) drops out entirely
-            buckets = {b: ver for b, ver in prev["buckets"].items()
+            buckets = {b: ver for b, ver in prev.items()
                        if int(b) not in dirty_buckets}
             # a pure-append bucket EXTENDS its owner chain (older files
             # still hold live rows); a rewritten bucket resets to [v]
             buckets.update({
-                str(b): (prev["buckets"].get(str(b), []) + [v]
+                str(b): (prev.get(str(b), []) + [v]
                          if b in append_buckets else [v])
                 for b in written})
             # an append into a previously-present bucket that wrote no
@@ -341,11 +370,10 @@ class BucketedParquetStateStore(ParquetStateStore):
             # carry-over above only if it wasn't dirty; dirty-but-unwritten
             # append buckets must still carry their old files forward
             for b in append_buckets - written:
-                if str(b) in prev["buckets"]:
-                    buckets[str(b)] = prev["buckets"][str(b)]
-        manifest = {"buckets": buckets, "schema": df.schema.json()}
-        with open(self._manifest_path(table, v), "w") as f:
-            json.dump(manifest, f)
+                if str(b) in prev:
+                    buckets[str(b)] = prev[str(b)]
+        self._write_manifest(table, v, {"buckets": buckets,
+                                        "schema": df.schema.json()})
         self._commit(table, v)
 
     def read(self, table: str, keys=None,
@@ -365,17 +393,11 @@ class BucketedParquetStateStore(ParquetStateStore):
         if v is None:
             raise KeyError(f"no state for table {table!r}")
         manifest = self._load_manifest(table, v)
-        if manifest is None:
-            return super().read(table, version=version)
-        from pyspark.sql import types as T
+        if manifest is None or "buckets" not in manifest:
+            return super().read(table, version=v)
         buckets = manifest["buckets"]
-        # a manifest written before the schema field existed still has
-        # valid bucket pointers: keep the chain read, but skip the keys
-        # pruning (needs the key's committed type to hash faithfully)
-        # and read with mergeSchema instead of a pinned schema
-        schema = (T.StructType.fromJson(json.loads(manifest["schema"]))
-                  if "schema" in manifest else None)
-        if keys is not None and schema is not None:
+        schema = _schema(manifest)
+        if keys is not None:
             kt = T.StructType([T.StructField(
                 self.key_col, schema[self.key_col].dataType)])
             wanted = {str(r["b"]) for r in self.spark.createDataFrame(
@@ -388,19 +410,7 @@ class BucketedParquetStateStore(ParquetStateStore):
                  for b, vers in buckets.items()
                  for ver in vers]
         if not paths:
-            if schema is not None:
-                return self.spark.createDataFrame([], schema)
-            # pre-schema manifest AND zero buckets: the version dir holds
-            # no part files (a partitionBy write of zero rows emits only
-            # _SUCCESS), so there is nothing to infer a schema from —
-            # raise a contract error instead of Spark's opaque
-            # 'Unable to infer schema' at action time
-            raise ValueError(
-                f"table {table!r}: empty pre-schema manifest — no rows "
-                f"and no committed schema to type an empty frame with")
-        if schema is None:
-            return (self.spark.read.option("mergeSchema", "true")
-                    .parquet(*paths))
+            return self.spark.createDataFrame([], schema)
         # Pin the read schema to the manifest's: an owner chain mixes files
         # from many commits, and Spark's default single-sample-file
         # inference would make column presence depend on WHICH file it
@@ -422,11 +432,10 @@ class BucketedParquetStateStore(ParquetStateStore):
         """
         referenced = set()
         for v in range(max(1, keep - self.retain + 1), keep + 1):
-            manifest = self._load_manifest(table, v)
-            if manifest:
-                referenced |= {int(ver)
-                               for vers in manifest["buckets"].values()
-                               for ver in vers}
+            manifest = self._load_manifest(table, v) or {}
+            referenced |= {int(ver)
+                           for vers in manifest.get("buckets", {}).values()
+                           for ver in vers}
         d = self._dir(table)
         for name in os.listdir(d):
             if name.startswith("v") and name[1:].isdigit():

@@ -24,8 +24,10 @@ behavior with no engine story):
   reads the new schema and ``IncrementalEngine.resync_changed()`` (T8)
   rebuilds exactly the affected views under the version barrier (T7).
   Purely ADDITIVE migrations need no handler change at all — Spark's
-  ``unionByName(allowMissingColumns=True)`` ingest and parquet
-  ``mergeSchema`` reads absorb new nullable columns.
+  ``unionByName(allowMissingColumns=True)`` ingest absorbs new nullable
+  columns, and each snapshot version reads with the schema recorded at
+  its commit (the state store's per-version ``_MANIFEST.json``), so the
+  migrated version reads the new columns and older versions their own.
 
 Scale shape: one migration = one full-table rewrite (unavoidable for
 rename/retype — the reference's ALTER TABLE does the same work), a

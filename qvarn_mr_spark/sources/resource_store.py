@@ -160,12 +160,24 @@ class ResourceStore:
 
         Like the reference client, a caller that omits ``revision`` gets
         last-writer-wins (auto-fetch, ``clients/qvarn.py:157-168``)."""
+        self._checked(resource_type, rid, revision)
+        return self._replace(resource_type, rid, doc)
+
+    def _checked(self, resource_type: str, rid: str,
+                 revision: str | None) -> dict:
+        """The current row of ``rid``: ``KeyError`` when it is missing,
+        :class:`RevisionConflict` when a given ``revision`` is stale."""
         current = self.get(resource_type, rid)
         if current is None:
             raise KeyError(f"{resource_type}/{rid} not found")
         if revision is not None and revision != current["revision"]:
             raise RevisionConflict(
                 f"{resource_type}/{rid}: revision {revision!r} is stale")
+        return current
+
+    def _replace(self, resource_type: str, rid: str, doc: dict) -> str:
+        """Write ``doc`` as ``rid``'s row under a fresh revision and emit
+        ``updated``; the caller has already checked the row."""
         new_rev = uuid.uuid4().hex
         doc = {**doc, "type": resource_type, "id": rid, "revision": new_rev}
         others = self.table(resource_type).filter(F.col("id") != rid)
@@ -190,8 +202,10 @@ class ResourceStore:
     def put_subresource(self, resource_type: str, rid: str, sub: str,
                         doc: dict, revision: str | None = None) -> str:
         """Upsert the ``sub`` document of resource ``rid``; bumps the parent
-        revision (optimistic check as in :meth:`update`) and emits
-        ``updated`` for the parent."""
+        revision (optimistic check as in :meth:`update`, BEFORE the sub
+        write, so a rejected put leaves no trace) and emits ``updated``
+        for the parent."""
+        parent = self._checked(resource_type, rid, revision)
         table = self._sub_table(resource_type, sub)
         row = {**doc, "id": rid}
         if self._store.exists(table):
@@ -201,13 +215,8 @@ class ResourceStore:
         else:
             merged = self.spark.createDataFrame([row])
         self._store.overwrite(table, merged)
-        # reuse update() for the revision bump + notification; parent fields
-        # unchanged
-        parent = self.get(resource_type, rid)
-        if parent is None:
-            raise KeyError(f"{resource_type}/{rid} not found")
-        parent.pop("revision", None)
-        return self.update(resource_type, rid, parent, revision=revision)
+        # revision bump + notification; parent fields unchanged
+        return self._replace(resource_type, rid, parent)
 
     def get_subresource(self, resource_type: str, rid: str,
                         sub: str) -> dict | None:
@@ -241,12 +250,7 @@ class ResourceStore:
         check BEFORE the blob write, as the reference's server rejects the
         PUT up front); bumps the parent revision and emits ``updated`` for
         the parent. Returns the new parent revision."""
-        parent = self.get(resource_type, rid)
-        if parent is None:
-            raise KeyError(f"{resource_type}/{rid} not found")
-        if revision is not None and revision != parent["revision"]:
-            raise RevisionConflict(
-                f"{resource_type}/{rid}: revision {revision!r} is stale")
+        parent = self._checked(resource_type, rid, revision)
         table = self._file_table(resource_type, sub)
         new = self.spark.createDataFrame(
             [(rid, content_type, bytearray(body))],
@@ -255,8 +259,7 @@ class ResourceStore:
             new = self._store.read(table).filter(F.col("id") != rid) \
                 .unionByName(new)
         self._store.overwrite(table, new)
-        parent.pop("revision", None)
-        return self.update(resource_type, rid, parent)
+        return self._replace(resource_type, rid, parent)
 
     def get_file(self, resource_type: str, rid: str,
                  sub: str) -> tuple[bytes, str] | None:

@@ -529,3 +529,107 @@ def test_resync_publishes_one_epoch(setup):
             .select("_mr_value").collect()} == {10, 20, 30}
     assert {r["_mr_key"]: r["_mr_value"]
             for r in snap.read("sum_target").collect()} == {"1": 60}
+
+
+# -- schema records: a snapshot opens without a Spark job ---------------------
+
+_GROUP_PROPS = ("spark.jobGroup.id", "spark.job.description",
+                "spark.job.interruptOnCancel")
+
+
+def _jobs(spark, fn):
+    """``(n, fn())``: the number of Spark jobs ``fn`` launched, counted
+    under a job group of its own."""
+    import uuid
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    saved = [sc.getLocalProperty(p) for p in _GROUP_PROPS]
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        for prop, value in zip(_GROUP_PROPS, saved):
+            sc.setLocalProperty(prop, value)
+    # the status tracker learns of jobs through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
+def test_opening_a_snapshot_launches_no_spark_job(setup):
+    """Every snapshot open takes its schema from the version's record, so
+    it launches no Spark job: published versions of key and non-key
+    tables, versions staged inside a transaction, and an older version
+    pinned by ``EngineSnapshot``. A plain inference read of the same
+    directory does launch one (the control), and a search runs exactly
+    the one job that answers it."""
+    import os
+
+    from qvarn_mr_spark.query import search
+
+    spark, cat, inc, set_source = setup
+    store = inc.store
+    inc.resync_all()
+    store.overwrite("plain", spark.createDataFrame(
+        [("x", 1)], "id string, n long"))
+    snap = inc.snapshot()
+    set_source([("1", "source", "a", 1, 1),
+                ("2", "source", "a", 1, 2),
+                ("3", "source", "b", 1, 5)])
+    inc.apply_changes(notifications(spark, [("source", "updated", "3")]))
+
+    n, frames = _jobs(spark, lambda: [
+        store.read("source__map"), store.read("sum_target"),
+        store.read("plain"), snap.read("sum_target")])
+    assert n == 0
+    assert {r["_mr_key"]: r["_mr_value"]
+            for r in frames[1].collect()} == {"1": 8}
+    assert {r["_mr_key"]: r["_mr_value"]
+            for r in frames[3].collect()} == {"1": 6}
+
+    with store.transaction():
+        store.overwrite("plain", spark.createDataFrame(
+            [("y", 2)], "id string, n long"))
+        n, staged = _jobs(spark, lambda: store.read("plain"))
+        assert n == 0
+        assert [tuple(r) for r in staged.collect()] == [("y", 2)]
+
+    path = os.path.join(store._dir("plain"), f"v{store.version('plain')}")
+    n, _ = _jobs(spark, lambda: spark.read.parquet(path))
+    assert n >= 1
+
+    n, rows = _jobs(spark, lambda: search(
+        inc.read("sum_target"), _mr_key="1").collect())
+    assert n == 1 and [r["_mr_value"] for r in rows] == [8]
+
+
+def test_each_version_reads_with_its_own_schema(spark, tmp_path):
+    """A table whose schema grows between versions reads each version
+    with that version's columns: a read pinned before the change sees
+    the old ones, the current read the new ones, and both equal an
+    inference read of the same directory. A version directory without a
+    schema record still reads, by inference."""
+    import os
+
+    from qvarn_mr_spark.sources import ResourceStore
+
+    rstore = ResourceStore(spark, str(tmp_path / "r"))
+    store = rstore._store
+    rstore.create_many("person", [{"name": "a"}])
+    old_v = store.version("person")
+    rstore.create_many("person", [{"name": "b", "age": 7}])
+
+    def rows(df):
+        return sorted(tuple(r[c] for c in ("id", "name", "age")
+                            if c in df.columns) for r in df.collect())
+
+    old, new = store.read("person", version=old_v), store.read("person")
+    assert "age" not in old.columns and "age" in new.columns
+    assert sorted(r[1:] for r in rows(new)) == [("a", None), ("b", 7)]
+    for v, df in ((old_v, old), (store.version("person"), new)):
+        inferred = spark.read.parquet(
+            os.path.join(store._dir("person"), f"v{v}"))
+        assert df.schema == inferred.schema
+        assert rows(df) == rows(inferred)
+
+    os.remove(store._manifest_path("person", old_v))
+    assert rows(store.read("person", version=old_v)) == rows(old)

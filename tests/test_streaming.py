@@ -108,6 +108,32 @@ def test_subresources(loop):
     assert rstore.get_subresource("source", rid, "nothere") is None
 
 
+def test_rejected_subresource_put_writes_nothing(loop, tmp_path):
+    """A subresource put checks the parent before it writes: a stale
+    revision (the reference's 409) and a missing parent both raise with
+    the sub document, the sub table and the feed left as they were."""
+    import os
+
+    rstore, _, _ = loop
+    rid = rstore.create("source", {"key": 1, "value": 1})
+    rev0 = rstore.get("source", rid)["revision"]
+    rstore.put_subresource("source", rid, "private", {"secret": "s1"},
+                           revision=rev0)
+    feed = set(os.listdir(tmp_path / "feed"))
+
+    with pytest.raises(RevisionConflict):
+        rstore.put_subresource("source", rid, "private", {"secret": "s2"},
+                               revision=rev0)
+    with pytest.raises(KeyError):
+        rstore.put_subresource("source", "no-such-id", "private",
+                               {"secret": "orphan"})
+
+    assert rstore.get_subresource("source", rid, "private")["secret"] == "s1"
+    assert [r["id"] for r in rstore.subresource_table(
+        "source", "private").collect()] == [rid]
+    assert set(os.listdir(tmp_path / "feed")) == feed
+
+
 def test_file_subresources_end_to_end(loop, spark):
     """File subresource (reference clients/qvarn.py:120-122,193-200):
     blob + content-type round-trip, parent revision bump + ``updated``
