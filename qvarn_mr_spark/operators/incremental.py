@@ -18,9 +18,11 @@ state update out. The semantics preserved (SURVEY.md §2.7):
 - **T4 dirty-key tracking**: re-reduce only keys touched by this batch
   (``processor.py:345-360,373-382``). Set form: dirty keys = keys of old ∪
   new map rows of the dirty source ids; recompute = semi-join + groupBy.
-  Like the reference's in-memory hand-off, the dirty keys pass from the
-  map pass to the reduce pass as cached frames that live for one batch;
-  a crashed batch publishes nothing, so its replay re-derives them.
+  Like the reference's in-memory hand-off, the map pass hands the reduce
+  pass one cached signed delta frame that lives for one batch: the map
+  rows plus ``_mr_weight`` (+1 inserted, −1 retracted — the counting
+  algorithm's and DBSP's Z-set form of a change); a crashed batch
+  publishes nothing, so its replay re-derives it.
 - **T5 full-group recompute**: reduce re-runs over the entire key group, not
   an incremental delta (``processor.py:192-227``) — always correct for
   non-decomposable aggregates; Catalyst still does partial aggregation
@@ -89,6 +91,12 @@ def _union(frames: list[DataFrame]) -> DataFrame:
 def _schema(manifest: dict) -> T.StructType:
     """The schema a version's manifest records."""
     return T.StructType.fromJson(json.loads(manifest["schema"]))
+
+
+def _keys(delta: DataFrame, *weights: int) -> DataFrame:
+    """The keys of ``delta``'s rows weighted one of ``weights``, repeats
+    kept: a semi- or anti-join against them needs no ``distinct()``."""
+    return delta.filter(F.col("_mr_weight").isin(*weights)).select("_mr_key")
 
 
 def _hold(held: list, df: DataFrame) -> int:
@@ -606,16 +614,14 @@ class IncrementalEngine:
                     self.resync(target)
                 else:
                     for i in range(chunks):
-                        keys = (self.store.read(src).select("_mr_key")
-                                .distinct()
-                                .filter(F.pmod(F.xxhash64("_mr_key"),
-                                               F.lit(chunks)) == F.lit(i)))
-                        # every slice key counts as touched, with no fresh
-                        # rows: this dirty set didn't come from _apply_map,
-                        # so each slice key recomputes its full group
+                        # the slice's stored rows, all retracted and none
+                        # inserted: each slice key recomputes its full group
+                        delta = (self.store.read(src)
+                                 .filter(F.pmod(F.xxhash64("_mr_key"),
+                                                F.lit(chunks)) == F.lit(i))
+                                 .withColumn("_mr_weight", F.lit(-1)))
                         with _held_frames() as held:
-                            self._apply_reduce(target, sources, keys, None,
-                                               keys, held)
+                            self._apply_reduce(target, sources, delta, held)
                         drain()
                 self.store.set_handler_version(target, src, spec.version)
             elif any(s in self.engine.config for s in sources):
@@ -690,12 +696,12 @@ class IncrementalEngine:
         propagation, so a 5-level pipeline stays O(delta) end to end. For
         strict (reference-shape) configs the topo order degenerates to
         "map targets first, then reduce targets", identical to before.
-        Each target's hand-off to its consumers — ``(dirty, fresh,
-        touched)``, see :meth:`_apply_map` — stays in memory for the batch.
-        The batch is one store transaction: a batch that raises leaves
-        every table at its pre-batch version for the replay.
+        Each target's hand-off to its consumers — one signed delta frame,
+        see :meth:`_apply_map` and :meth:`_apply_reduce` — stays in memory
+        for the batch. The batch is one store transaction: a batch that
+        raises leaves every table at its pre-batch version for the replay.
         """
-        handoff: dict[str, tuple] = {}
+        handoff: dict[str, DataFrame] = {}
         with _held_frames() as held, self.store.transaction():
             # final change per resource id — replay-order equivalent (see
             # class doc)
@@ -705,15 +711,14 @@ class IncrementalEngine:
                 sources = self.engine.config[target]
                 if isinstance(next(iter(sources.values())), REDUCE_SPECS):
                     (src,) = sources
-                    dirty = self._apply_reduce(target, sources,
-                                               *handoff[src], held)
-                    handoff[target] = (dirty, None, None)
+                    handoff[target] = self._apply_reduce(
+                        target, sources, handoff[src], held)
                 else:
                     eff = changes
                     for src in sources:
                         if src in handoff:
                             eff = eff.unionByName(self._derived_changes(
-                                src, handoff[src][0]))
+                                src, handoff[src]))
                     handoff[target] = self._apply_map(target, sources, eff,
                                                       held)
 
@@ -737,13 +742,13 @@ class IncrementalEngine:
             visit(t)
         return out
 
-    def _derived_changes(self, source: str, dirty: DataFrame) -> DataFrame:
-        """Synthetic notifications for a DERIVED source: the ``dirty`` keys
-        its own apply returned this batch become ``updated`` (key still
-        live in the stored table) or ``deleted`` (key vanished —
+    def _derived_changes(self, source: str, delta: DataFrame) -> DataFrame:
+        """Synthetic notifications for a DERIVED source: the keys of the
+        ``delta`` its own apply returned this batch become ``updated`` (key
+        still live in the stored table) or ``deleted`` (key vanished —
         empty-group elimination upstream)."""
-        dirty = dirty.select(F.col("_mr_key").cast("string")
-                             .alias("resource_id"))
+        dirty = _keys(delta, 1, -1).select(
+            F.col("_mr_key").cast("string").alias("resource_id"))
         cur = live(self.store.read(source)).select(
             F.col("_mr_key").cast("string").alias("resource_id")).distinct()
         flagged = dirty.join(
@@ -763,14 +768,17 @@ class IncrementalEngine:
         return self.catalog.get(source)
 
     def _apply_map(self, target: str, sources: dict, changes: DataFrame,
-                   held: list) -> tuple:
+                   held: list) -> DataFrame:
         """T2 upsert + T3 delete for one map target.
 
         Commits the new map snapshot and returns this batch's hand-off to
-        the target's consumers, ``(dirty, fresh, touched)``: the dirty
-        keys (keys the changed ids had before ∪ have now), the freshly
-        mapped rows and the keys that lost old rows, cached into ``held``
-        for the consumers to reuse. Everything is joins:
+        the target's consumers: ONE signed delta frame, cached into
+        ``held`` — the map columns plus ``_mr_weight``, +1 for each freshly
+        mapped row, −1 for each old row of a changed id, and 0 for an
+        upserted id missing from its source (a dead letter; only
+        ``_mr_source_type``/``_mr_source_id`` set). One Spark action counts
+        its rows per weight: a −1 row means the batch is not insert-only,
+        a 0 row that dead letters are due. Everything is joins:
         - surviving rows = old anti-join changed ids (per source type)
         - fresh rows     = map(source semi-join upserted ids)
         A deleted id's rows simply go (T3, see the module docstring). On
@@ -778,9 +786,7 @@ class IncrementalEngine:
         the small dirty-id set against the big map table) is identical.
         """
         old = self.store.read(target) if self.store.exists(target) else None
-        parts = []
-        fresh_parts = []
-        touched_parts = []
+        survivors, parts = [], []
         for source, spec in sources.items():
             if "seq" not in changes.columns:
                 # F.last over groupBy is nondeterministic; without an order
@@ -798,72 +804,59 @@ class IncrementalEngine:
             upserted = ch.filter(F.col("change") != DELETED).select("resource_id")
             src_df = self._source_df(source)
             id_col = self.engine._id_col(source)
-            # T11/T6 dead-letter: an upsert notification whose resource is
-            # absent from the source (the reference's not-yet-replicated 404,
-            # processor.py:346-355, retried then dropped) is recorded rather
-            # than silently producing nothing.
-            missing = upserted.join(
-                src_df.select(src_df[id_col].cast("string").alias("resource_id")),
-                "resource_id", "left_anti")
-            self._record_dead_letters(target, source, missing)
-            fresh = self.engine._map_one(
+            parts.append(self.engine._map_one(
                 source, spec,
                 src_df.join(
                     F.broadcast(upserted),
                     src_df[id_col].cast("string") == upserted["resource_id"],
-                    "left_semi"))
+                    "left_semi")).withColumn("_mr_weight", F.lit(1)))
             if old is not None:
                 mine = old.filter(F.col("_mr_source_type") == source)
-                all_dirty = ch.select("resource_id")
-                survivors = mine.join(
-                    F.broadcast(all_dirty),
-                    mine["_mr_source_id"] == all_dirty["resource_id"],
-                    "left_anti")
-                parts += [survivors, fresh]
-                # keys the changed ids had before
-                touched_parts.append(mine.join(
-                    F.broadcast(all_dirty),
-                    mine["_mr_source_id"] == all_dirty["resource_id"],
-                    "left_semi").select("_mr_key"))
-            else:
-                parts.append(fresh)
-            fresh_parts.append(fresh)
-        out = _union(parts)
-        # For the algebraic reduce path (_apply_reduce): this batch's freshly
-        # mapped rows (the insert delta), and the keys that LOST old rows
-        # (update/delete — only these need a full-group recompute). Both are
-        # batch-delta-sized, independent of table size.
-        fresh_all = _union(fresh_parts)
-        touched = (_union(touched_parts) if touched_parts
-                   else fresh_all.select("_mr_key").limit(0)).distinct()
-        _hold(held, fresh_all)
-        lost = _hold(held, touched) > 0
-        dirty = touched.unionByName(fresh_all.select("_mr_key")).distinct()
-        _hold(held, dirty)
+                changed = F.broadcast(ch.select("resource_id"))
+                on = mine["_mr_source_id"] == changed["resource_id"]
+                survivors.append(mine.join(changed, on, "left_anti"))
+                parts.append(mine.join(changed, on, "left_semi")
+                             .withColumn("_mr_weight", F.lit(-1)))
+            # T11/T6 dead-letter: an upsert notification whose resource is
+            # absent from the source (the reference's not-yet-replicated 404,
+            # processor.py:346-355, retried then dropped) is recorded rather
+            # than silently producing nothing.
+            parts.append(upserted.join(
+                src_df.select(src_df[id_col].cast("string").alias("resource_id")),
+                "resource_id", "left_anti").select(
+                    F.lit(source).alias("_mr_source_type"),
+                    F.col("resource_id").alias("_mr_source_id"),
+                    F.lit(0).alias("_mr_weight")))
+        delta = _union(parts)
+        held.append(delta.cache())
+        weights = dict(delta.groupBy("_mr_weight").count().collect())
+        inserts = delta.filter(F.col("_mr_weight") == 1).drop("_mr_weight")
         # PURE-APPEND detection: no existing map rows under the changed ids
-        # ⇒ new = old ∪ fresh exactly, and a bucketed store may commit just
-        # the fresh rows (O(delta) even when a hot key's group holds
-        # millions of rows).
-        insert_only = old is not None and not lost
-        # every row-level difference between old and new lives under a dirty
-        # key (survivors only lose dirty-source rows; fresh rows carry dirty
-        # keys), so a bucketed store may commit dirty buckets only
-        self.store.overwrite(target, out, dirty_keys=dirty,
-                             inserts=fresh_all if insert_only else None)
-        return dirty, fresh_all, touched
+        # ⇒ new = old ∪ inserts exactly, and a bucketed store may commit
+        # just those rows (O(delta) even when a hot key's group holds
+        # millions of rows). Every row-level difference between old and new
+        # lives under a dirty key (survivors only lose dirty-source rows;
+        # inserts carry dirty keys), so a bucketed store may commit dirty
+        # buckets only.
+        self.store.overwrite(
+            target, _union(survivors + [inserts]),
+            dirty_keys=_keys(delta, 1, -1),
+            inserts=inserts if old is not None and -1 not in weights else None)
+        if 0 in weights:
+            self._record_dead_letters(target, delta)
+        return delta
 
-    def _apply_reduce(self, target: str, sources: dict, dirty: DataFrame,
-                      fresh: DataFrame | None, touched: DataFrame | None,
+    def _apply_reduce(self, target: str, sources: dict, delta: DataFrame,
                       held: list) -> DataFrame:
         """T4/T5 dirty-key group recompute + A8 empty-group delete.
 
         new_reduce = old_reduce (keys not dirty)
                    ∪ recompute(map ⋉ ready dirty_keys)  — dropped groups
                                                            simply emit no row
-        ``dirty``, ``fresh`` and ``touched`` are the source's hand-off
-        (:meth:`_apply_map`; ``fresh`` and ``touched`` are None for a
-        reduce source). Returns the keys this reduce recomputed, the
-        hand-off to its own consumers.
+        ``delta`` is the source's hand-off (:meth:`_apply_map`); its dirty
+        keys are those of its non-zero rows. Returns the keys this reduce
+        recomputed as a keys-only delta, all weighted −1 — the hand-off to
+        its own consumers.
 
         **Version barrier (T7)**: a dirty key whose live map rows mix
         handler versions — possible mid-:meth:`resync_interleaved`, when a
@@ -877,10 +870,12 @@ class IncrementalEngine:
         """
         ((src, spec),) = sources.items()
         map_df = self.store.read(src)
+        dirty = _keys(delta, 1, -1).distinct()
         # version-barrier postponement applies to map-table sources; a
         # reduce-of-reduce source has no per-row handler versions (its
         # atomic overwrite IS the barrier)
-        if "_mr_version" in map_df.columns:
+        from_map = "_mr_version" in map_df.columns
+        if from_map:
             ver_map = F.create_map(*[
                 x for st, mspec in self.engine.config[src].items()
                 for x in (F.lit(st), F.lit(mspec.version))])
@@ -902,19 +897,20 @@ class IncrementalEngine:
         # are maintained as merge(old_value, reduce(delta rows)). Work is
         # O(batch delta), not O(Σ dirty groups): a hot key with 10⁸ map rows
         # costs the same to maintain as one with 10. Keys that lost rows
-        # (update/delete, in ``touched``) still recompute their whole group,
-        # which is what keeps non-invertible merges (min/max) exact.
+        # (update/delete: keys of the −1 rows) still recompute their whole
+        # group, which is what keeps non-invertible merges (min/max) exact.
         merges = getattr(spec, "merge", None)
         merged = None
         if (merges and set(merges) == set(spec.aggs) and old is not None
-                and fresh is not None):
-            merge_keys = dirty.join(F.broadcast(touched), "_mr_key", "left_anti")
-            recompute_keys = dirty.join(F.broadcast(touched), "_mr_key",
-                                        "left_semi")
-            delta = self.engine.reduce_table(
+                and from_map):
+            touched = F.broadcast(_keys(delta, -1))
+            merge_keys = dirty.join(touched, "_mr_key", "left_anti")
+            recompute_keys = dirty.join(touched, "_mr_key", "left_semi")
+            inserts = delta.filter(F.col("_mr_weight") == 1).drop("_mr_weight")
+            reduced = self.engine.reduce_table(
                 target,
-                fresh.join(F.broadcast(merge_keys), "_mr_key", "left_semi"))
-            merged = self._merge_reduce(old, delta, merge_keys, merges)
+                inserts.join(F.broadcast(merge_keys), "_mr_key", "left_semi"))
+            merged = self._merge_reduce(old, reduced, merge_keys, merges)
         else:
             recompute_keys = dirty
 
@@ -929,7 +925,7 @@ class IncrementalEngine:
         if merged is not None:
             new = new.unionByName(merged, allowMissingColumns=True)
         self.store.overwrite(target, new, dirty_keys=dirty)
-        return dirty
+        return dirty.withColumn("_mr_weight", F.lit(-1))
 
     def _merge_reduce(self, old: DataFrame, delta: DataFrame,
                       merge_keys: DataFrame, merges: dict) -> DataFrame:
@@ -959,17 +955,16 @@ class IncrementalEngine:
                  .alias(a))
         return j.select(*cols)
 
-    def _record_dead_letters(self, target: str, source: str,
-                             missing: DataFrame) -> None:
-        """Append (set-union) missing-resource notifications to
-        ``{target}__dead_letter`` — the replacement for the reference's
-        drop-after-3-retries (``processor.py:261-280``): nothing is silently
-        lost, and an operator can replay the table once the source catches
-        up."""
-        if missing.isEmpty():
-            return
-        dl = missing.select(
-            F.lit(source).alias("resource_type"), "resource_id")
+    def _record_dead_letters(self, target: str, delta: DataFrame) -> None:
+        """Append (set-union) the missing-resource notifications of every
+        source — the weight-0 rows of ``target``'s batch ``delta`` — to
+        ``{target}__dead_letter`` in one commit: the replacement for the
+        reference's drop-after-3-retries (``processor.py:261-280``): nothing
+        is silently lost, and an operator can replay the table once the
+        source catches up."""
+        dl = delta.filter(F.col("_mr_weight") == 0).select(
+            F.col("_mr_source_type").alias("resource_type"),
+            F.col("_mr_source_id").alias("resource_id"))
         table = target + "__dead_letter"
         if self.store.exists(table):
             dl = self.store.read(table).unionByName(dl).distinct()

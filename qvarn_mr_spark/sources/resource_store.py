@@ -161,7 +161,9 @@ class ResourceStore:
         Like the reference client, a caller that omits ``revision`` gets
         last-writer-wins (auto-fetch, ``clients/qvarn.py:157-168``)."""
         self._checked(resource_type, rid, revision)
-        return self._replace(resource_type, rid, doc)
+        new_rev = self._replace(resource_type, rid, doc)
+        self._emit(resource_type, "updated", [rid])
+        return new_rev
 
     def _checked(self, resource_type: str, rid: str,
                  revision: str | None) -> dict:
@@ -176,14 +178,27 @@ class ResourceStore:
         return current
 
     def _replace(self, resource_type: str, rid: str, doc: dict) -> str:
-        """Write ``doc`` as ``rid``'s row under a fresh revision and emit
-        ``updated``; the caller has already checked the row."""
+        """Commit ``doc`` as ``rid``'s row under a fresh revision and return
+        it; the caller has already checked the row and emits ``updated``
+        once the commit is published."""
         new_rev = uuid.uuid4().hex
         doc = {**doc, "type": resource_type, "id": rid, "revision": new_rev}
         others = self.table(resource_type).filter(F.col("id") != rid)
         merged = others.unionByName(self.spark.createDataFrame([doc]),
                                     allowMissingColumns=True)
         self._store.overwrite(resource_type, merged)
+        return new_rev
+
+    def _put_side(self, resource_type: str, rid: str, parent: dict,
+                  table: str, new: DataFrame) -> str:
+        """Commit ``new`` as side table ``table`` together with the parent
+        revision bump in ONE store transaction, then emit ``updated`` for
+        the parent: a failed commit leaves both tables and the feed as
+        they were."""
+        with self._store.transaction():
+            self._store.overwrite(table, new)
+            # parent fields unchanged
+            new_rev = self._replace(resource_type, rid, parent)
         self._emit(resource_type, "updated", [rid])
         return new_rev
 
@@ -203,8 +218,9 @@ class ResourceStore:
                         doc: dict, revision: str | None = None) -> str:
         """Upsert the ``sub`` document of resource ``rid``; bumps the parent
         revision (optimistic check as in :meth:`update`, BEFORE the sub
-        write, so a rejected put leaves no trace) and emits ``updated``
-        for the parent."""
+        write, so a rejected put leaves no trace) in the same store
+        transaction as the sub write, and emits ``updated`` for the
+        parent."""
         parent = self._checked(resource_type, rid, revision)
         table = self._sub_table(resource_type, sub)
         row = {**doc, "id": rid}
@@ -214,9 +230,7 @@ class ResourceStore:
                                         allowMissingColumns=True)
         else:
             merged = self.spark.createDataFrame([row])
-        self._store.overwrite(table, merged)
-        # revision bump + notification; parent fields unchanged
-        return self._replace(resource_type, rid, parent)
+        return self._put_side(resource_type, rid, parent, table, merged)
 
     def get_subresource(self, resource_type: str, rid: str,
                         sub: str) -> dict | None:
@@ -248,8 +262,9 @@ class ResourceStore:
                  content_type: str, revision: str | None = None) -> str:
         """Upsert the ``sub`` blob of resource ``rid`` (optimistic revision
         check BEFORE the blob write, as the reference's server rejects the
-        PUT up front); bumps the parent revision and emits ``updated`` for
-        the parent. Returns the new parent revision."""
+        PUT up front); bumps the parent revision in the same store
+        transaction and emits ``updated`` for the parent. Returns the new
+        parent revision."""
         parent = self._checked(resource_type, rid, revision)
         table = self._file_table(resource_type, sub)
         new = self.spark.createDataFrame(
@@ -258,8 +273,7 @@ class ResourceStore:
         if self._store.exists(table):
             new = self._store.read(table).filter(F.col("id") != rid) \
                 .unionByName(new)
-        self._store.overwrite(table, new)
-        return self._replace(resource_type, rid, parent)
+        return self._put_side(resource_type, rid, parent, table, new)
 
     def get_file(self, resource_type: str, rid: str,
                  sub: str) -> tuple[bytes, str] | None:

@@ -165,3 +165,86 @@ def test_merge_disabled_without_full_coverage(spark, tmp_path):
     inc.apply_changes(notifications(spark, [("source", "created", "3")]))
     got = {r["_mr_key"]: (r["s"], r["avg"]) for r in inc.read("v").collect()}
     assert got == {"1": (60, 20.0)}
+
+
+def _chunked(spark, tmp_path):
+    """A summing view with a merge, over twelve ids in two keys."""
+    cat = Catalog(spark)
+    rows = {str(i): (i % 2, i) for i in range(1, 13)}
+
+    def set_source():
+        cat.register("source", spark.createDataFrame(
+            [(rid, k, v) for rid, (k, v) in rows.items()],
+            "id string, key long, value long"))
+
+    set_source()
+    eng = ViewEngine(cat, {
+        "m": {"source": map_item("key", "value")},
+        "v": {"m": reduce_agg(F.sum, merge=MERGE_ADD)},
+    }, id_cols={"source": "id"})
+    inc = IncrementalEngine(eng, ParquetStateStore(spark, str(tmp_path / "s")))
+    inc.resync_all()
+    return eng, inc, rows, set_source
+
+
+def _sums(df):
+    return {r["_mr_key"]: r["_mr_value"] for r in df.collect()}
+
+
+def test_chunked_resync_of_algebraic_reduce_converges(spark, tmp_path):
+    """A reduce-handler bump resyncs an algebraic reduce slice by slice:
+    each slice reaches the reduce as its stored map rows, all retracted
+    and none inserted, so every slice key recomputes its whole group
+    under the new handler instead of merging into the old value. Live
+    batches drained between the chunks take the merge path; the end state
+    equals a full recompute."""
+    eng, inc, rows, set_source = _chunked(spark, tmp_path)
+    eng.config["v"]["m"] = reduce_agg(lambda c: F.sum(c) * 10,
+                                      merge=MERGE_ADD, version=2)
+    live = [{"13": (0, 100)},                  # insert-only
+            {"2": (1, 50), "13": None}]         # key move + delete
+
+    def drain():
+        if live:
+            batch = []
+            for rid, kv in live.pop(0).items():
+                change = ("deleted" if kv is None
+                          else "updated" if rid in rows else "created")
+                batch.append(("source", change, rid))
+                if kv is None:
+                    del rows[rid]
+                else:
+                    rows[rid] = kv
+            set_source()
+            inc.apply_changes(notifications(spark, batch))
+
+    assert inc.resync_interleaved(drain=drain, chunks=2) == ["v"]
+    assert live == []
+    want = _sums(eng.recompute_all()["v"])
+    assert want == {"0": 10 * (2 + 4 + 6 + 8 + 10 + 12 - 2),
+                    "1": 10 * (1 + 3 + 5 + 7 + 9 + 11 + 50)}
+    assert _sums(inc.read("v")) == want
+
+
+def test_chunked_map_resync_keeps_algebraic_values_whole(spark, tmp_path):
+    """A map-handler bump re-maps the ids chunk by chunk, then resyncs the
+    algebraic reduce in all-retracted slices: at every drain each key
+    shows its complete old or its complete new value, never a mix."""
+    from qvarn_mr_spark.operators import map_expr
+
+    eng, inc, _, _ = _chunked(spark, tmp_path)
+    old = _sums(inc.read("v"))
+    assert old == {"0": 42, "1": 36}
+    eng.config["m"]["source"] = map_expr("key", F.col("value") * 2,
+                                         version=2)
+    new = {k: 2 * v for k, v in old.items()}
+    seen = []
+
+    def drain():
+        got = _sums(inc.read("v"))
+        assert all(got[k] in (old[k], new[k]) for k in old), got
+        seen.append(got)
+
+    assert inc.resync_interleaved(drain=drain, chunks=4) == ["m", "v"]
+    assert _sums(inc.read("v")) == new == _sums(eng.recompute_all()["v"])
+    assert any(got != new for got in seen)     # postponement observed

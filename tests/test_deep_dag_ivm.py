@@ -138,11 +138,12 @@ def test_deep_dag_untouched_keys_stay_clean(spark, tmp_path):
 
 def test_shared_upstream_handoff_survives_gc(spark, tmp_path):
     """One map target feeds both a reduce and a map-over-map consumer
-    applied after it, so both read the batch's cached dirty keys under
+    applied after it, so both read the batch's cached delta frame under
     ``retain=2``; the batch's one transaction GCs nothing until every
     target has committed. Every view must equal a recompute after every
-    batch; the dirty, fresh and touched key sets never reach the state
-    root, and every frame the batch cached is released."""
+    batch; no hand-off key set reaches the state root (no ``__dirty``,
+    ``__fresh`` or ``__touched`` table), and every frame the batch cached
+    is released."""
     cat = Catalog(spark)
 
     def set_source(rows):

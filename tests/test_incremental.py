@@ -246,6 +246,38 @@ def test_dead_letter_replay_converges(setup):
     assert dl == {"ghost"}          # still-missing entry stays queued
 
 
+def test_dead_letters_of_every_source_commit_once(spark, tmp_path):
+    """A map target with two sources, one batch in which each source has
+    an upserted id that is missing: both ids are dead-lettered under
+    their own source type by ONE commit of the dead-letter table, and no
+    hand-off column reaches the stored map table."""
+    cat = Catalog(spark)
+    for src in ("a", "b"):
+        cat.register(src, spark.createDataFrame(
+            [(f"{src}1", 1, 1)], "id string, key long, value long"))
+    eng = ViewEngine(cat, {
+        "m": {"a": map_item("key", "value"), "b": map_item("key", "value")},
+        "sums": {"m": reduce_agg(F.sum)},
+    })
+    inc = IncrementalEngine(eng, ParquetStateStore(spark, str(tmp_path / "s")))
+    inc.apply_changes(notifications(spark, [
+        ("a", "created", "a1"), ("b", "created", "b1"),
+        ("a", "created", "a-early")]))
+    v0 = inc.store.version("m__dead_letter")
+    assert v0 is not None
+
+    inc.apply_changes(notifications(spark, [
+        ("a", "created", "a-ghost"), ("b", "updated", "b-ghost"),
+        ("b", "updated", "b1")]))
+    assert inc.store.version("m__dead_letter") == v0 + 1
+    assert {(r["resource_type"], r["resource_id"])
+            for r in inc.dead_letters("m").collect()} == {
+        ("a", "a-early"), ("a", "a-ghost"), ("b", "b-ghost")}
+    assert inc.read("m").columns == eng.map_table("m").columns
+    assert {r["_mr_key"]: r["_mr_value"]
+            for r in inc.read("sums").collect()} == {"1": 2}
+
+
 def test_seqless_change_batch_rejected(setup):
     # F.last-without-order would be nondeterministic: require seq
     spark, cat, inc, set_source = setup

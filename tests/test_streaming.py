@@ -134,6 +134,52 @@ def test_rejected_subresource_put_writes_nothing(loop, tmp_path):
     assert set(os.listdir(tmp_path / "feed")) == feed
 
 
+@pytest.mark.parametrize("kind", ["sub", "file"])
+def test_side_put_with_failed_parent_commit_writes_nothing(loop, tmp_path,
+                                                           monkeypatch, kind):
+    """A subresource or file put commits the side table and the parent
+    revision bump in one store transaction: when the parent's commit
+    fails, the side document, the parent revision and the feed all stay
+    as they were."""
+    import os
+
+    rstore, _, _ = loop
+    rid = rstore.create("source", {"key": 1, "value": 1})
+
+    def put(value):
+        if kind == "sub":
+            rstore.put_subresource("source", rid, "private",
+                                   {"secret": value})
+        else:
+            rstore.put_file("source", rid, "voice", value.encode(),
+                            "text/plain")
+
+    def side():
+        if kind == "sub":
+            return rstore.get_subresource("source", rid,
+                                          "private")["secret"]
+        return rstore.get_file("source", rid, "voice")[0].decode()
+
+    put("s1")
+    rev = rstore.get("source", rid)["revision"]
+    feed = set(os.listdir(tmp_path / "feed"))
+
+    real = rstore._store.overwrite
+
+    def failing(table, df, **hints):
+        if table == "source":
+            raise OSError("injected: parent commit failed")
+        return real(table, df, **hints)
+
+    monkeypatch.setattr(rstore._store, "overwrite", failing)
+    with pytest.raises(OSError, match="injected"):
+        put("s2")
+
+    assert side() == "s1"
+    assert rstore.get("source", rid)["revision"] == rev
+    assert set(os.listdir(tmp_path / "feed")) == feed
+
+
 def test_file_subresources_end_to_end(loop, spark):
     """File subresource (reference clients/qvarn.py:120-122,193-200):
     blob + content-type round-trip, parent revision bump + ``updated``
