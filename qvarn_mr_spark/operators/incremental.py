@@ -22,7 +22,10 @@ state update out. The semantics preserved (SURVEY.md §2.7):
   pass one cached signed delta frame that lives for one batch: the map
   rows plus ``_mr_weight`` (+1 inserted, −1 retracted — the counting
   algorithm's and DBSP's Z-set form of a change); a crashed batch
-  publishes nothing, so its replay re-derives it.
+  publishes nothing, so its replay re-derives it. Bookkeeping is
+  batch-sized: last-change-wins runs once per batch, the reduce takes
+  its key sets from the delta with no count or cache, and a batch that
+  changes no map row publishes nothing.
 - **T5 full-group recompute**: reduce re-runs over the entire key group, not
   an incremental delta (``processor.py:192-227``) — always correct for
   non-decomposable aggregates; Catalyst still does partial aggregation
@@ -30,8 +33,9 @@ state update out. The semantics preserved (SURVEY.md §2.7):
 - **A8 empty-group elimination**: a key whose live mapped rows all vanished
   loses its reduce row (``processor.py:214-217``, ``utils.py:31-37``).
 - **T7 version barrier**: a rebuilt view and its handler version publish
-  in one transaction; half-synced keys of a chunked resync are postponed
-  (``processor.py:168-178``, see :meth:`IncrementalEngine._apply_reduce`).
+  in one transaction; half-synced keys are postponed while a map's stored
+  and configured handler versions differ (``processor.py:168-178``, see
+  :meth:`IncrementalEngine._apply_reduce`).
 - **T8 resync/backfill**: full recompute through the same builders +
   transactional overwrite (``resync.py:15-49,77-128``) — versioned-state
   skip machinery becomes unnecessary because the overwrite is atomic.
@@ -97,14 +101,6 @@ def _keys(delta: DataFrame, *weights: int) -> DataFrame:
     """The keys of ``delta``'s rows weighted one of ``weights``, repeats
     kept: a semi- or anti-join against them needs no ``distinct()``."""
     return delta.filter(F.col("_mr_weight").isin(*weights)).select("_mr_key")
-
-
-def _hold(held: list, df: DataFrame) -> int:
-    """Cache ``df`` and count it, returning the count. Materialized once,
-    the frame is reused by every later step of the batch instead of being
-    recomputed from the snapshots it reads."""
-    held.append(df.cache())
-    return df.count()
 
 
 class ParquetStateStore:
@@ -695,32 +691,46 @@ class IncrementalEngine:
         from that target's dirty keys of this batch — per-edge dirty
         propagation, so a 5-level pipeline stays O(delta) end to end. For
         strict (reference-shape) configs the topo order degenerates to
-        "map targets first, then reduce targets", identical to before.
-        Each target's hand-off to its consumers — one signed delta frame,
-        see :meth:`_apply_map` and :meth:`_apply_reduce` — stays in memory
-        for the batch. The batch is one store transaction: a batch that
-        raises leaves every table at its pre-batch version for the replay.
+        "map targets first, then reduce targets". The batch is reduced to
+        its last change per ``(resource_type, resource_id)`` once, cached
+        for every map target. Each target's hand-off to its consumers —
+        one signed delta frame, see :meth:`_apply_map` and
+        :meth:`_apply_reduce` — stays in memory for the batch; a map
+        target that hands nothing on (no map row changed) skips its
+        reduces. The batch is one store transaction: a batch that raises
+        leaves every table at its pre-batch version for the replay.
         """
+        if "seq" not in changes.columns:
+            # without an order column "which change wins" would depend on
+            # task scheduling; the feed contract always provides seq
+            raise ValueError(
+                "change batch lacks a 'seq' ordering column; "
+                "last-change-wins needs a deterministic order "
+                "(see notifications() / NOTIFICATION_SCHEMA)")
         handoff: dict[str, DataFrame] = {}
         with _held_frames() as held, self.store.transaction():
             # final change per resource id — replay-order equivalent (see
-            # class doc)
-            changes = changes.cache()
-            held.append(changes)
+            # class doc); one aggregate, cached, serves every map target
+            changes = (changes.groupBy("resource_type", "resource_id")
+                       .agg(F.max_by("resource_change", "seq")
+                            .alias("change")))
+            held.append(changes.cache())
             for target in self._topo_targets():
                 sources = self.engine.config[target]
                 if isinstance(next(iter(sources.values())), REDUCE_SPECS):
                     (src,) = sources
-                    handoff[target] = self._apply_reduce(
-                        target, sources, handoff[src], held)
-                else:
-                    eff = changes
-                    for src in sources:
-                        if src in handoff:
-                            eff = eff.unionByName(self._derived_changes(
-                                src, handoff[src]))
-                    handoff[target] = self._apply_map(target, sources, eff,
-                                                      held)
+                    if src in handoff:
+                        handoff[target] = self._apply_reduce(
+                            target, sources, handoff[src], held)
+                    continue
+                eff = changes
+                for src in sources:
+                    if src in handoff:
+                        eff = eff.unionByName(self._derived_changes(
+                            src, handoff[src]))
+                delta = self._apply_map(target, sources, eff, held)
+                if delta is not None:
+                    handoff[target] = delta
 
     def _topo_targets(self) -> list[str]:
         """Config targets in dependency order (sources before consumers),
@@ -743,22 +753,22 @@ class IncrementalEngine:
         return out
 
     def _derived_changes(self, source: str, delta: DataFrame) -> DataFrame:
-        """Synthetic notifications for a DERIVED source: the keys of the
-        ``delta`` its own apply returned this batch become ``updated`` (key
-        still live in the stored table) or ``deleted`` (key vanished —
-        empty-group elimination upstream)."""
+        """Synthetic notifications for a DERIVED source, in the shape
+        :meth:`apply_changes` gives a batch after last-change-wins: each
+        key of the ``delta`` its own apply returned this batch, once,
+        with ``change`` ``updated`` (key still live in the stored table)
+        or ``deleted`` (key vanished — empty-group elimination upstream)."""
         dirty = _keys(delta, 1, -1).select(
-            F.col("_mr_key").cast("string").alias("resource_id"))
+            F.col("_mr_key").cast("string").alias("resource_id")).distinct()
         cur = live(self.store.read(source)).select(
             F.col("_mr_key").cast("string").alias("resource_id")).distinct()
         flagged = dirty.join(
             cur.withColumn("_live", F.lit(True)), "resource_id", "left")
         return flagged.select(
             F.lit(source).alias("resource_type"),
-            F.when(F.col("_live").isNotNull(), F.lit(UPDATED))
-             .otherwise(F.lit(DELETED)).alias("resource_change"),
             "resource_id",
-            F.lit(1).cast("long").alias("seq"))
+            F.when(F.col("_live").isNotNull(), F.lit(UPDATED))
+             .otherwise(F.lit(DELETED)).alias("change"))
 
     def _source_df(self, source: str) -> DataFrame:
         """A map stage's input rows: catalog collection, or the STORED
@@ -768,17 +778,23 @@ class IncrementalEngine:
         return self.catalog.get(source)
 
     def _apply_map(self, target: str, sources: dict, changes: DataFrame,
-                   held: list) -> DataFrame:
+                   held: list) -> DataFrame | None:
         """T2 upsert + T3 delete for one map target.
 
-        Commits the new map snapshot and returns this batch's hand-off to
-        the target's consumers: ONE signed delta frame, cached into
-        ``held`` — the map columns plus ``_mr_weight``, +1 for each freshly
-        mapped row, −1 for each old row of a changed id, and 0 for an
-        upserted id missing from its source (a dead letter; only
-        ``_mr_source_type``/``_mr_source_id`` set). One Spark action counts
-        its rows per weight: a −1 row means the batch is not insert-only,
-        a 0 row that dead letters are due. Everything is joins:
+        ``changes`` holds one ``(resource_type, resource_id, change)`` row
+        per changed id (see :meth:`apply_changes`). Commits the new map
+        snapshot and returns this batch's hand-off to the target's
+        consumers: ONE signed delta frame — the map columns plus
+        ``_mr_weight``, +1 for each freshly mapped row, −1 for each old
+        row of a changed id, and 0 for an upserted id missing from its
+        source (a dead letter; only ``_mr_source_type``/``_mr_source_id``
+        set). The frame is cached into ``held`` with the partitioning of
+        the scans it is built from; its readers get it coalesced to one
+        task per core. One Spark action counts its rows per weight: a −1
+        row means the batch is not insert-only, a 0 row that dead letters
+        are due, and no ±1 row that the map table is unchanged — then
+        nothing is committed and None is returned, so consumers skip the
+        batch. Everything is joins:
         - surviving rows = old anti-join changed ids (per source type)
         - fresh rows     = map(source semi-join upserted ids)
         A deleted id's rows simply go (T3, see the module docstring). On
@@ -788,28 +804,17 @@ class IncrementalEngine:
         old = self.store.read(target) if self.store.exists(target) else None
         survivors, parts = [], []
         for source, spec in sources.items():
-            if "seq" not in changes.columns:
-                # F.last over groupBy is nondeterministic; without an order
-                # column, "which change wins" would depend on task scheduling
-                # (delete-vs-update flips). The feed contract (reference
-                # ``last_modified`` ordering, NOTIFICATION_SCHEMA) always
-                # provides seq, so absence is a caller bug.
-                raise ValueError(
-                    "change batch lacks a 'seq' ordering column; "
-                    "last-change-wins needs a deterministic order "
-                    "(see notifications() / NOTIFICATION_SCHEMA)")
-            ch = (changes.filter(F.col("resource_type") == source)
-                  .groupBy("resource_id")
-                  .agg(F.max_by("resource_change", F.col("seq")).alias("change")))
-            upserted = ch.filter(F.col("change") != DELETED).select("resource_id")
+            ch = changes.filter(F.col("resource_type") == source)
+            upserted = ch.filter(F.col("change") != DELETED).select(
+                "resource_id")
             src_df = self._source_df(source)
             id_col = self.engine._id_col(source)
-            parts.append(self.engine._map_one(
-                source, spec,
-                src_df.join(
-                    F.broadcast(upserted),
-                    src_df[id_col].cast("string") == upserted["resource_id"],
-                    "left_semi")).withColumn("_mr_weight", F.lit(1)))
+            hit = src_df.join(
+                F.broadcast(upserted),
+                src_df[id_col].cast("string") == upserted["resource_id"],
+                "left_semi")
+            parts.append(self.engine._map_one(source, spec, hit)
+                         .withColumn("_mr_weight", F.lit(1)))
             if old is not None:
                 mine = old.filter(F.col("_mr_source_type") == source)
                 changed = F.broadcast(ch.select("resource_id"))
@@ -820,31 +825,38 @@ class IncrementalEngine:
             # T11/T6 dead-letter: an upsert notification whose resource is
             # absent from the source (the reference's not-yet-replicated 404,
             # processor.py:346-355, retried then dropped) is recorded rather
-            # than silently producing nothing.
+            # than silently producing nothing. Probed against the ids the
+            # batch found, not the source's whole id column; not inferred
+            # from the +1 rows, which a ``where=`` map may drop
+            found = hit.select(hit[id_col].cast("string").alias("resource_id"))
             parts.append(upserted.join(
-                src_df.select(src_df[id_col].cast("string").alias("resource_id")),
-                "resource_id", "left_anti").select(
+                F.broadcast(found), "resource_id", "left_anti").select(
                     F.lit(source).alias("_mr_source_type"),
                     F.col("resource_id").alias("_mr_source_id"),
                     F.lit(0).alias("_mr_weight")))
         delta = _union(parts)
         held.append(delta.cache())
         weights = dict(delta.groupBy("_mr_weight").count().collect())
-        inserts = delta.filter(F.col("_mr_weight") == 1).drop("_mr_weight")
-        # PURE-APPEND detection: no existing map rows under the changed ids
-        # ⇒ new = old ∪ inserts exactly, and a bucketed store may commit
-        # just those rows (O(delta) even when a hot key's group holds
-        # millions of rows). Every row-level difference between old and new
-        # lives under a dirty key (survivors only lose dirty-source rows;
-        # inserts carry dirty keys), so a bucketed store may commit dirty
-        # buckets only.
-        self.store.overwrite(
-            target, _union(survivors + [inserts]),
-            dirty_keys=_keys(delta, 1, -1),
-            inserts=inserts if old is not None and -1 not in weights else None)
+        delta = delta.coalesce(
+            self.catalog.spark.sparkContext.defaultParallelism)
+        rows_changed = bool(weights.keys() & {1, -1})
+        if rows_changed:
+            inserts = delta.filter(F.col("_mr_weight") == 1).drop("_mr_weight")
+            # PURE-APPEND detection: no existing map rows under the changed
+            # ids ⇒ new = old ∪ inserts exactly, and a bucketed store may
+            # commit just those rows (O(delta) even when a hot key's group
+            # holds millions of rows). Every row-level difference between
+            # old and new lives under a dirty key (survivors only lose
+            # dirty-source rows; inserts carry dirty keys), so a bucketed
+            # store may commit dirty buckets only.
+            self.store.overwrite(
+                target, _union(survivors + [inserts]),
+                dirty_keys=_keys(delta, 1, -1),
+                inserts=inserts if old is not None and -1 not in weights
+                else None)
         if 0 in weights:
             self._record_dead_letters(target, delta)
-        return delta
+        return delta if rows_changed else None
 
     def _apply_reduce(self, target: str, sources: dict, delta: DataFrame,
                       held: list) -> DataFrame:
@@ -853,10 +865,11 @@ class IncrementalEngine:
         new_reduce = old_reduce (keys not dirty)
                    ∪ recompute(map ⋉ ready dirty_keys)  — dropped groups
                                                            simply emit no row
-        ``delta`` is the source's hand-off (:meth:`_apply_map`); its dirty
-        keys are those of its non-zero rows. Returns the keys this reduce
-        recomputed as a keys-only delta, all weighted −1 — the hand-off to
-        its own consumers.
+        ``delta`` is the source's hand-off (:meth:`_apply_map`): the dirty
+        keys are those of its ±1 rows, the lost keys those of its −1 rows,
+        both with repeats (semi- and anti-joins need no ``distinct()``).
+        Returns the dirty keys as a keys-only delta, all weighted −1 — the
+        hand-off to this reduce's own consumers.
 
         **Version barrier (T7)**: a dirty key whose live map rows mix
         handler versions — possible mid-:meth:`resync_interleaved`, when a
@@ -866,18 +879,26 @@ class IncrementalEngine:
         ``tests/test_processor.py:160-232``). The chunk that re-maps the
         key's last old row marks it dirty again and it reduces then; an
         aborted resync leaves the stored handler version unchanged, so the
-        next startup resync finishes the job.
+        next startup resync finishes the job. The scan for such keys runs
+        only while the stored handler version of some source of the map
+        differs from the configured one (mid-:meth:`resync_interleaved`,
+        or after a handler bump before its resync): otherwise every live
+        row has the configured version. The versions come from the state
+        file, with no Spark job.
         """
         ((src, spec),) = sources.items()
         map_df = self.store.read(src)
-        dirty = _keys(delta, 1, -1).distinct()
+        dirty, lost = _keys(delta, 1, -1), _keys(delta, -1)
         # version-barrier postponement applies to map-table sources; a
         # reduce-of-reduce source has no per-row handler versions (its
         # atomic overwrite IS the barrier)
         from_map = "_mr_version" in map_df.columns
-        if from_map:
+        stored = self.store.get_handler_versions()
+        mspecs = self.engine.config[src].items()
+        if from_map and any(stored.get(f"{src}\x00{st}") != mspec.version
+                            for st, mspec in mspecs):
             ver_map = F.create_map(*[
-                x for st, mspec in self.engine.config[src].items()
+                x for st, mspec in mspecs
                 for x in (F.lit(st), F.lit(mspec.version))])
             stale_keys = (live(map_df.join(F.broadcast(dirty), "_mr_key",
                                            "left_semi"))
@@ -887,73 +908,49 @@ class IncrementalEngine:
             dirty = dirty.join(F.broadcast(stale_keys), "_mr_key",
                                "left_anti")
             # cached: the joins below and this reduce's consumers reuse it
-            _hold(held, dirty)
+            held.append(dirty.cache())
+            lost = lost.join(F.broadcast(dirty), "_mr_key", "left_semi")
         old = self.store.read(target) if self.store.exists(target) else None
 
         # Algebraic IVM (beyond the reference's always-full-group recompute,
         # processor.py:192-227): when the spec declares a merge for EVERY
-        # output alias, insert-only dirty keys — keys that gained rows this
+        # output alias, gained keys — dirty keys that gained rows this
         # batch but lost none (the dominant case for append-heavy feeds) —
         # are maintained as merge(old_value, reduce(delta rows)). Work is
         # O(batch delta), not O(Σ dirty groups): a hot key with 10⁸ map rows
-        # costs the same to maintain as one with 10. Keys that lost rows
-        # (update/delete: keys of the −1 rows) still recompute their whole
-        # group, which is what keeps non-invertible merges (min/max) exact.
+        # costs the same to maintain as one with 10. Lost keys (update/
+        # delete: keys of the −1 rows) still recompute their whole group,
+        # which is what keeps non-invertible merges (min/max) exact. One
+        # reduce covers both; every gained key has a +1 row, so it is on
+        # the left of the join that merges its old value in.
         merges = getattr(spec, "merge", None)
-        merged = None
         if (merges and set(merges) == set(spec.aggs) and old is not None
                 and from_map):
-            touched = F.broadcast(_keys(delta, -1))
-            merge_keys = dirty.join(touched, "_mr_key", "left_anti")
-            recompute_keys = dirty.join(touched, "_mr_key", "left_semi")
+            gained = F.broadcast(dirty.join(F.broadcast(lost), "_mr_key",
+                                            "left_anti"))
             inserts = delta.filter(F.col("_mr_weight") == 1).drop("_mr_weight")
-            reduced = self.engine.reduce_table(
-                target,
-                inserts.join(F.broadcast(merge_keys), "_mr_key", "left_semi"))
-            merged = self._merge_reduce(old, reduced, merge_keys, merges)
+            reduced = self.engine.reduce_table(target, _union([
+                map_df.join(F.broadcast(lost), "_mr_key", "left_semi"),
+                inserts.join(gained, "_mr_key", "left_semi")]))
+            prior = (old.join(gained, "_mr_key", "left_semi")
+                     .select("_mr_key",
+                             *[F.col(a).alias(f"__old_{a}") for a in merges])
+                     .withColumn("__has_old", F.lit(True)))
+            # presence flag, not value nullness, decides whether an old
+            # value exists, so a legitimately-NULL aggregate merges too
+            new = reduced.join(F.broadcast(prior), "_mr_key", "left").select(
+                "_mr_key",
+                *[F.when(F.col("__has_old").isNull(), F.col(a))
+                  .otherwise(fn(F.col(f"__old_{a}"), F.col(a))).alias(a)
+                  for a, fn in merges.items()])
         else:
-            recompute_keys = dirty
-
-        dirty_map = map_df.join(F.broadcast(recompute_keys), "_mr_key",
-                                "left_semi")
-        recomputed = self.engine.reduce_table(target, dirty_map)
+            new = self.engine.reduce_table(target, map_df.join(
+                F.broadcast(dirty), "_mr_key", "left_semi"))
         if old is not None:
             keep = old.join(F.broadcast(dirty), "_mr_key", "left_anti")
-            new = keep.unionByName(recomputed, allowMissingColumns=True)
-        else:
-            new = recomputed
-        if merged is not None:
-            new = new.unionByName(merged, allowMissingColumns=True)
+            new = keep.unionByName(new, allowMissingColumns=True)
         self.store.overwrite(target, new, dirty_keys=dirty)
         return dirty.withColumn("_mr_weight", F.lit(-1))
-
-    def _merge_reduce(self, old: DataFrame, delta: DataFrame,
-                      merge_keys: DataFrame, merges: dict) -> DataFrame:
-        """Combine stored reduce values with delta aggregates per merge key.
-
-        Full-outer on ``_mr_key``: a key new to the view takes the delta
-        value alone, an existing key merges. Presence flags (not value
-        nullness) decide which side exists, so legitimately-NULL aggregate
-        values merge correctly. ``merge_keys`` is batch-sized, so the
-        old-side semi-join broadcasts and the outer join is delta×delta.
-        """
-        o = (old.join(F.broadcast(merge_keys), "_mr_key", "left_semi")
-             .select("_mr_key",
-                     *[F.col(a).alias(f"__old_{a}") for a in merges])
-             .withColumn("__has_old", F.lit(True)))
-        d = (delta
-             .select("_mr_key",
-                     *[F.col(a).alias(f"__new_{a}") for a in merges])
-             .withColumn("__has_new", F.lit(True)))
-        j = o.join(d, "_mr_key", "full_outer")
-        cols = [F.col("_mr_key")]
-        for a, fn in merges.items():
-            cols.append(
-                F.when(F.col("__has_old").isNull(), F.col(f"__new_{a}"))
-                 .when(F.col("__has_new").isNull(), F.col(f"__old_{a}"))
-                 .otherwise(fn(F.col(f"__old_{a}"), F.col(f"__new_{a}")))
-                 .alias(a))
-        return j.select(*cols)
 
     def _record_dead_letters(self, target: str, delta: DataFrame) -> None:
         """Append (set-union) the missing-resource notifications of every
@@ -1007,7 +1004,8 @@ class IncrementalEngine:
                 "resource_id", "left_semi"))
         ready = _union(ready_parts)
         with _held_frames() as held, self.store.transaction():
-            n = _hold(held, ready)
+            held.append(ready.cache())
+            n = ready.count()
             if n == 0:
                 return 0
             # deterministic seq: replay order within the batch is

@@ -72,9 +72,8 @@ class StreamingMaintainer:
     checkpoint_dir: str
 
     def _apply(self, batch: DataFrame, batch_id: int) -> None:
-        # empty trigger batches are a no-op, like the reference's idle poll
-        if batch.isEmpty():
-            return
+        # an empty trigger batch publishes nothing (apply_changes commits
+        # only the tables a batch changes), like the reference's idle poll
         self.inc.apply_changes(batch)
 
     def run_available(self) -> None:

@@ -201,6 +201,27 @@ def test_version_barrier_postpones_half_synced_keys(setup):
     assert old_val in seen                          # postponement observed
 
 
+def test_version_barrier_holds_a_half_synced_key_until_resync(setup):
+    """Fast sibling of the sweep above: with the map handler version
+    bumped in the config but not yet resynced, an update re-maps one row
+    of a two-row key under the new version, so the key's live rows mix
+    versions and it keeps its old reduce value. ``resync_changed()``
+    re-maps the other row and the key shows the new value."""
+    spark, cat, inc, set_source = setup
+    set_source([("1", "source", "a", 1, 1), ("2", "source", "a", 1, 2)])
+    inc.resync_all()
+    assert read_sums(inc) == {"1": 3}
+
+    inc.engine.config["source__map"]["source"] = map_item(
+        "key", "value", version=2)
+    set_source([("1", "source", "b", 1, 5), ("2", "source", "a", 1, 2)])
+    inc.apply_changes(notifications(spark, [("source", "updated", "1")]))
+    assert read_sums(inc) == {"1": 3}
+
+    assert inc.resync_changed() == ["source__map", "sum_target"]
+    assert read_sums(inc) == {"1": 7}
+
+
 def test_multiple_changes_same_id_in_batch(setup):
     # created then deleted within one batch → final state wins
     spark, cat, inc, set_source = setup
@@ -244,6 +265,24 @@ def test_dead_letter_replay_converges(setup):
     dl = {r["resource_id"]
           for r in inc.dead_letters("source__map").collect()}
     assert dl == {"ghost"}          # still-missing entry stays queued
+
+
+def test_dead_letter_probe_keeps_rows_a_where_map_drops(setup):
+    """A map with ``where=`` drops a row that exists; an upsert of that
+    row is no dead letter. Only the id missing from the source is
+    dead-lettered, and the view equals a full recompute."""
+    spark, cat, inc, set_source = setup
+    inc.engine.config["source__map"]["source"] = map_item(
+        "key", "value", where="value > 1")
+    set_source([("1", "source", "a", 1, 1), ("2", "source", "a", 1, 2)])
+    inc.apply_changes(notifications(spark, [
+        ("source", "created", "1"), ("source", "created", "2"),
+        ("source", "created", "ghost")]))
+    assert {r["resource_id"]
+            for r in inc.dead_letters("source__map").collect()} == {"ghost"}
+    want = inc.engine.recompute_all()["sum_target"]
+    assert read_sums(inc) == {r["_mr_key"]: r["_mr_value"]
+                              for r in want.collect()} == {"1": 2}
 
 
 def test_dead_letters_of_every_source_commit_once(spark, tmp_path):
@@ -665,3 +704,54 @@ def test_each_version_reads_with_its_own_schema(spark, tmp_path):
 
     os.remove(store._manifest_path("person", old_v))
     assert rows(store.read("person", version=old_v)) == rows(old)
+
+
+# -- a batch's bookkeeping is batch-sized -------------------------------------
+
+def test_empty_batch_publishes_nothing(setup):
+    """An empty notification frame changes no map row, so it commits no
+    table version: the published state stays byte-for-byte the same."""
+    spark, cat, inc, set_source = setup
+    inc.resync_all()
+    before = inc.store.committed()
+    inc.apply_changes(notifications(spark, []))
+    assert inc.store.committed() == before
+    assert read_sums(inc) == {"1": 6}
+
+
+def test_small_apply_job_budget(spark, tmp_path):
+    """One mixed create/update/delete batch on an algebraic (merge)
+    view whose handler versions match the stored ones: the change batch
+    is deduplicated once, the reduce holds no dirty-key set and skips
+    the version-barrier scan, and merges and recomputes in one reduce.
+    The apply stays within its job budget, and the view equals a full
+    recompute."""
+    from qvarn_mr_spark.operators.mapreduce import MERGE_ADD
+
+    cat = Catalog(spark)
+
+    def set_source(rows):
+        cat.register("source", spark.createDataFrame(
+            rows, "id string, key long, value long"))
+
+    set_source([(str(i), i % 3, i) for i in range(1, 10)])
+    eng = ViewEngine(cat, {
+        "m": {"source": map_item("key", "value")},
+        "v": {"m": reduce_agg({"s": F.sum, "n": F.count},
+                              merge={"s": MERGE_ADD, "n": MERGE_ADD})},
+    })
+    inc = IncrementalEngine(eng, ParquetStateStore(spark, str(tmp_path / "s")))
+    inc.resync_all()
+    # create 10 (key 1) and 11 (new key 5), update 2 (value 2 → 20),
+    # delete 3 (key 0)
+    set_source([(str(i), i % 3, 20 if i == 2 else i)
+                for i in range(1, 10) if i != 3] + [("10", 1, 10),
+                                                   ("11", 5, 11)])
+    n, _ = _jobs(spark, lambda: inc.apply_changes(notifications(spark, [
+        ("source", "created", "10"), ("source", "created", "11"),
+        ("source", "updated", "2"), ("source", "deleted", "3")])))
+    assert n <= 23, n
+    want = {r["_mr_key"]: (r["s"], r["n"])
+            for r in eng.recompute_all()["v"].collect()}
+    assert {r["_mr_key"]: (r["s"], r["n"])
+            for r in inc.read("v").collect()} == want
