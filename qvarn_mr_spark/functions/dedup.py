@@ -974,7 +974,7 @@ def lsh_index_views(source: str = "documents", id_col: str = "doc_id",
 
     Driven by the incremental engine, a CDC delta costs O(delta):
     changed docs re-map to ≤ ``n_bands`` rows each (delete-then-insert,
-    T2), deletes tombstone the doc's rows out (T3), and a pure-insert
+    T2), deletes drop the doc's rows (T3), and a pure-insert
     batch commits through the bucketed store's append fast path —
     commit cost scales with the delta, not with any bucket's
     population (tests/test_index_scale.py). The companion
@@ -1030,8 +1030,6 @@ def probe_lsh_index(delta: DataFrame, index: DataFrame, id_col: str,
     scanning the whole index per probe batch. ``None`` disables (plan
     stays fully lazy; the join alone still touches only matching rows
     after the scan)."""
-    from qvarn_mr_spark.operators.mapreduce import live
-
     # spread the delta first: it often arrives as ONE file/partition, and
     # the per-row key expression (nested higher-order functions, runs
     # interpreted) would otherwise serialize on a single task
@@ -1039,7 +1037,7 @@ def probe_lsh_index(delta: DataFrame, index: DataFrame, id_col: str,
         F.col(id_col).alias("probe_id"),
         F.explode(minhash_band_keys_col(text_col, n_hashes, n_bands))
         .alias("_mr_key"))
-    members = live(index).select(
+    members = index.select(
         "_mr_key", F.col("_mr_value").alias("member_id"))
     members, keys = _push_probe_keys(keys, members, push_keys)
     return (keys.join(members, "_mr_key")

@@ -492,7 +492,6 @@ def corpus_gate_stream(stream: DataFrame, id_col: str = "doc_id",
         MINHASH_N,
         minhash_band_keys_col,
     )
-    from qvarn_mr_spark.operators.mapreduce import live
     n_hashes = MINHASH_N if lsh_n_hashes is None else int(lsh_n_hashes)
     n_bands = MINHASH_BANDS if lsh_n_bands is None else int(lsh_n_bands)
     gated = deduped.withColumn(
@@ -501,7 +500,7 @@ def corpus_gate_stream(stream: DataFrame, id_col: str = "doc_id",
         # fresh alias per band: the same index frame joins n_bands
         # times and left-anti output carries no right-side columns,
         # but distinct aliases keep every join's resolution unambiguous
-        idx = live(lsh_index).select(
+        idx = lsh_index.select(
             F.col("_mr_key").alias(f"_ik{b}"),
             F.col("_mr_value").alias(f"_im{b}"))
         gated = gated.join(

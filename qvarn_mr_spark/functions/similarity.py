@@ -786,7 +786,6 @@ def probe_embedding_lsh_index(delta: DataFrame, corpus: DataFrame,
         _push_probe_keys,
         ensure_min_partitions,
     )
-    from qvarn_mr_spark.operators.mapreduce import live
 
     # spread the delta first — same single-file-delta hazard as
     # dedup.probe_lsh_index (the 32-dot-product key expression would
@@ -798,7 +797,7 @@ def probe_embedding_lsh_index(delta: DataFrame, corpus: DataFrame,
                    _as_double(delta, vec_col))).alias("_pn"),
         F.explode(embedding_band_keys_col(vec_col, planes, bands, dim,
                                           seed)).alias("_mr_key"))
-    members = live(index).select(
+    members = index.select(
         "_mr_key", F.col("_mr_value").alias("member_id"))
     members, keys = _push_probe_keys(keys, members, push_keys)
     cand = (keys.join(members, "_mr_key")
@@ -966,7 +965,7 @@ def ivf_index_views(centroids, source: str = "embeddings",
 
     Upkeep is genuinely O(delta): the engine's map path (T2/T3)
     maintains the view by delete-then-insert of ONLY the changed
-    members' rows — inserts append, deletes tombstone — and a
+    members' rows — inserts append, deletes drop rows — and a
     pure-insert CDC batch commits through the bucketed store's append
     fast path (O(|delta|) files, hot-cluster-size-independent; pinned
     by tests/test_index_scale.py). The companion ``{index_name}__stats``
@@ -1061,11 +1060,8 @@ def _ivf_probe_score(keys: DataFrame, probed: list, index: DataFrame,
     """Shared probe scoring over normalized index rows: filter to the
     probed clusters (literal IN — pushed to the scan), join, exact
     cosine against the index-carried vectors, per-query top-k."""
-    from qvarn_mr_spark.operators.mapreduce import live
-
     m = _with_norm(
-        live(index)
-        .filter(F.col("_mr_key").isin(probed))
+        index.filter(F.col("_mr_key").isin(probed))
         .select("_mr_key", F.col("_mr_value.m_id").alias("n_id"),
                 F.col("_mr_value.m_vec").alias("_n_vec")),
         "_n_vec", "_nn")

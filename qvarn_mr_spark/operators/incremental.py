@@ -14,7 +14,8 @@ state update out. The semantics preserved (SURVEY.md §2.7):
   keys still reach the reduce through T4's dirty set. The reference
   tombstones instead and purges after the reduce (``processor.py:133-148,
   406-409``) because its map and reduce commit separately; here one batch
-  is one store transaction, which collapses both phases (SURVEY T3).
+  is one store transaction, which collapses both phases (SURVEY T3), so
+  a stored map row carries no tombstone flag and no reader filters one.
 - **T4 dirty-key tracking**: re-reduce only keys touched by this batch
   (``processor.py:345-360,373-382``). Set form: dirty keys = keys of old ∪
   new map rows of the dirty source ids; recompute = semi-join + groupBy.
@@ -66,12 +67,14 @@ from qvarn_mr_spark.catalog import Catalog
 from qvarn_mr_spark.operators.mapreduce import (
     REDUCE_SPECS,
     ViewEngine,
-    live,
 )
 
 #: Change kinds in the reference's notification feed
 #: (``processor.py:17-27``; ``[qvarn] listener_resource.py:319-399``).
 CREATED, UPDATED, DELETED = "created", "updated", "deleted"
+
+#: The entry kinds of a state file: each maps a name to a version.
+_STATE_KINDS = ("tables", "handlers", "schemas")
 
 
 @contextmanager
@@ -108,10 +111,11 @@ class ParquetStateStore:
     stand-in for Delta/Iceberg transactional tables on plain parquet.
 
     Layout: ``{root}/{table}/v{n}/*.parquet`` + ``{root}/_STATE.json``
-    holding ``{"tables": {table: n}, "handlers": {...}}``, the committed
-    state of the whole root, written via tmp+rename so readers never see
-    a torn one. A root without the file (such as one written by older
-    code, which kept per-table pointers) reads as empty.
+    holding ``{"tables": {table: n}, "handlers": {...}, "schemas":
+    {...}}``, the committed state of the whole root, written via
+    tmp+rename so readers never see a torn one. A root without the file
+    (such as one written by older code, which kept per-table pointers)
+    reads as empty, and a missing kind as no entries.
 
     Each version directory also holds a ``_MANIFEST.json`` record,
     ``{"schema": <the committed frame's schema JSON>}``, written after the
@@ -164,13 +168,15 @@ class ParquetStateStore:
 
     def committed(self) -> dict:
         """The published state, ``{"tables": {table: version},
-        "handlers": {key: version}}`` — what a fresh store on this root
-        sees, whatever transaction is open."""
+        "handlers": {key: version}, "schemas": {type: version}}`` — what
+        a fresh store on this root sees, whatever transaction is open."""
+        state = {kind: {} for kind in _STATE_KINDS}
         try:
             with open(self._state) as f:
-                return json.load(f)
+                state.update(json.load(f))
         except FileNotFoundError:
-            return {"tables": {}, "handlers": {}}
+            pass
+        return state
 
     def _view(self, kind: str) -> dict:
         """The writer's view of ``kind``: committed entries overlaid by
@@ -191,13 +197,13 @@ class ParquetStateStore:
         if self._staged is not None:
             yield
             return
-        self._staged = staged = {"tables": {}, "handlers": {}}
+        self._staged = staged = {kind: {} for kind in _STATE_KINDS}
         try:
             yield
         finally:
             self._staged = None
         state = self.committed()
-        for kind in state:
+        for kind in staged:
             state[kind].update(staged[kind])
         with open(self._state + ".tmp", "w") as f:
             json.dump(state, f, sort_keys=True)
@@ -270,6 +276,15 @@ class ParquetStateStore:
     def set_handler_version(self, target: str, source: str, version: int) -> None:
         with self.transaction():
             self._staged["handlers"][f"{target}\x00{source}"] = version
+
+    # -- schema versions of the tables a ResourceStore migrates -------------
+
+    def get_schema_versions(self) -> dict:
+        return self._view("schemas")
+
+    def set_schema_version(self, name: str, version: int) -> None:
+        with self.transaction():
+            self._staged["schemas"][name] = version
 
 
 class BucketedParquetStateStore(ParquetStateStore):
@@ -419,8 +434,7 @@ class BucketedParquetStateStore(ParquetStateStore):
         # from many commits, and Spark's default single-sample-file
         # inference would make column presence depend on WHICH file it
         # sampled. With the committed schema, columns absent from an older
-        # file read as null deterministically (``live()`` treats a null
-        # ``_mr_deleted`` as live).
+        # file read as null deterministically.
         return self.spark.read.schema(schema).parquet(*paths)
 
     def _gc(self, table: str, keep: int) -> None:
@@ -756,25 +770,28 @@ class IncrementalEngine:
         """Synthetic notifications for a DERIVED source, in the shape
         :meth:`apply_changes` gives a batch after last-change-wins: each
         key of the ``delta`` its own apply returned this batch, once,
-        with ``change`` ``updated`` (key still live in the stored table)
-        or ``deleted`` (key vanished — empty-group elimination upstream)."""
-        dirty = _keys(delta, 1, -1).select(
-            F.col("_mr_key").cast("string").alias("resource_id")).distinct()
-        cur = live(self.store.read(source)).select(
-            F.col("_mr_key").cast("string").alias("resource_id")).distinct()
+        with ``change`` ``updated`` (key still in the stored table) or
+        ``deleted`` (key vanished — empty-group elimination upstream).
+        The stored table is semi-joined with the batch's keys before
+        anything aggregates it, so the liveness check is batch-sized."""
+        keys = _keys(delta, 1, -1)
+        cur = (self.store.read(source)
+               .select(F.col("_mr_key").cast("string").alias("_mr_key"))
+               .join(F.broadcast(keys), "_mr_key", "left_semi").distinct())
+        dirty = keys.distinct()
         flagged = dirty.join(
-            cur.withColumn("_live", F.lit(True)), "resource_id", "left")
+            cur.withColumn("_live", F.lit(True)), "_mr_key", "left")
         return flagged.select(
             F.lit(source).alias("resource_type"),
-            "resource_id",
+            F.col("_mr_key").cast("string").alias("resource_id"),
             F.when(F.col("_live").isNotNull(), F.lit(UPDATED))
              .otherwise(F.lit(DELETED)).alias("change"))
 
     def _source_df(self, source: str) -> DataFrame:
         """A map stage's input rows: catalog collection, or the STORED
-        snapshot of a derived target (live rows only)."""
+        snapshot of a derived target."""
         if source in self.engine.config:
-            return live(self.store.read(source))
+            return self.store.read(source)
         return self.catalog.get(source)
 
     def _apply_map(self, target: str, sources: dict, changes: DataFrame,
@@ -900,8 +917,8 @@ class IncrementalEngine:
             ver_map = F.create_map(*[
                 x for st, mspec in mspecs
                 for x in (F.lit(st), F.lit(mspec.version))])
-            stale_keys = (live(map_df.join(F.broadcast(dirty), "_mr_key",
-                                           "left_semi"))
+            stale_keys = (map_df.join(F.broadcast(dirty), "_mr_key",
+                                      "left_semi")
                           .filter(F.col("_mr_version")
                                   != ver_map[F.col("_mr_source_type")])
                           .select("_mr_key").distinct())

@@ -5,7 +5,10 @@ Reference semantics (/root/reference/qvarnmr):
 - A *map handler* turns one source row into zero or more ``(key, value)``
   pairs stored in a derived map table with bookkeeping columns
   ``(_mr_key, _mr_value | inlined fields, _mr_source_id, _mr_source_type,
-  _mr_version, _mr_deleted)`` (``processor.py:52-71``, ``README.rst:437-474``).
+  _mr_version)`` (``processor.py:52-71``, ``README.rst:437-474``). The
+  reference also stores a tombstone flag, purged after the reduce
+  commits (``processor.py:133-148``); here a batch's map and reduce
+  publish in one store transaction, so deleted rows are simply dropped.
 - A *reduce handler* turns the group of mapped rows for one key into one
   output row ``(_mr_key, _mr_value | inlined fields)``
   (``processor.py:74-96,192-227``).
@@ -38,10 +41,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from qvarn_mr_spark.catalog import Catalog
-
-MR_COLS = ("_mr_key", "_mr_value", "_mr_source_id", "_mr_source_type",
-           "_mr_version", "_mr_deleted", "_mr_order")
-
 
 # ---------------------------------------------------------------------------
 # Handler specs
@@ -258,16 +257,8 @@ def _as_col(df: DataFrame, c: str | Column) -> Column:
 
 
 def live(df: DataFrame) -> DataFrame:
-    """Live rows of a derived map table — tombstoned rows excluded.
-
-    Tombstones (``_mr_deleted``, reference ``processor.py:133-148``) are
-    reduce-stage bookkeeping, not data; every consumer that treats a map
-    table AS the data (the normalized LSH/IVF index views, map-over-map
-    DAGs) must filter them. No-op for frames without the column."""
-    if "_mr_deleted" in df.columns:
-        # null-safe: a row from a file written before the column existed
-        # reads as null under a pinned schema — not tombstoned, so live
-        return df.filter(~F.coalesce(F.col("_mr_deleted"), F.lit(False)))
+    """Identity. Map tables store no tombstones, so every row is live;
+    kept only for callers that still import it."""
     return df
 
 
@@ -335,11 +326,6 @@ class ViewEngine:
             df[id_col].cast("string").alias("_mr_source_id"),
             F.lit(source).alias("_mr_source_type"),
             F.lit(spec.version).alias("_mr_version"),
-            F.lit(False).alias("_mr_deleted"),
-            # deterministic "insertion order" stand-in: the source id itself.
-            # Spark has no implicit row order (SURVEY §4 item 4); views that
-            # need a real ordering pass JoinReduceSpec.order_by explicitly.
-            df[id_col].cast("string").alias("_mr_order"),
         ]
         if spec.fields:
             cols += [_as_col(df, expr).alias(out) for out, expr in spec.fields.items()]
@@ -366,13 +352,14 @@ class ViewEngine:
     def reduce_table(self, target: str, map_df: DataFrame | None = None) -> DataFrame:
         """Aggregate a map table into the reduce (view result) table.
 
-        Tombstoned rows are excluded from reduce input
-        (``processor.py:171-172``); empty groups emit no row — the
-        reference's empty-group elimination (``processor.py:214-217``) is the
-        natural semantics of ``groupBy().agg()``.
+        Every stored map row is live (no tombstones, so the reference's
+        ``processor.py:171-172`` filter has nothing to drop); empty groups
+        emit no row — the reference's empty-group elimination
+        (``processor.py:214-217``) is the natural semantics of
+        ``groupBy().agg()``.
         """
         ((source, spec),) = self.config[target].items()
-        mdf = live(map_df if map_df is not None else self._resolve(source))
+        mdf = map_df if map_df is not None else self._resolve(source)
         if isinstance(spec, AggReduceSpec):
             return self._reduce_agg(mdf, spec)
         if isinstance(spec, JoinReduceSpec):
@@ -421,10 +408,12 @@ class ViewEngine:
                 proj.append(F.col(ob).alias("__ord"))
             src_p = src.select(*proj)
             side = mdf.filter(F.col("_mr_source_type") == source).select(
-                "_mr_key", "_mr_source_id", "_mr_order")
+                "_mr_key", "_mr_source_id")
             joined = side.join(
                 src_p, side["_mr_source_id"] == src_p["__src_id"], "inner")
-            order = F.col("__ord") if ob else F.col("_mr_order")
+            # without order_by the source id stands in for insertion order:
+            # Spark has no implicit row order (SURVEY §4 item 4)
+            order = F.col("__ord") if ob else F.col("_mr_source_id")
             agg_cols = [F.max_by(F.col(f"__v_{out_f}"), order).alias(out_f)
                         for out_f in renames]
             per_type = joined.groupBy("_mr_key").agg(*agg_cols)

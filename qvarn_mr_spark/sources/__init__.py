@@ -3,7 +3,6 @@ change-notification emission, CDC feeds (SURVEY §2.1)."""
 
 from qvarn_mr_spark.sources.migration import (
     MigrationError,
-    SchemaRegistry,
     apply_transforms,
 )
 from qvarn_mr_spark.sources.resource_store import ResourceStore, RevisionConflict
@@ -14,5 +13,5 @@ from qvarn_mr_spark.sources.writers import (
 )
 
 __all__ = ["MigrationError", "ResourceStore", "RevisionConflict",
-           "SchemaRegistry", "apply_transforms", "read_partitioned",
-           "write_bucketed", "write_partitioned"]
+           "apply_transforms", "read_partitioned", "write_bucketed",
+           "write_partitioned"]

@@ -8,17 +8,18 @@ the version chain and applies the missing steps). This module is the
 Spark-native re-expression (VERDICT r10 item 3 — the last reference
 behavior with no engine story):
 
-- a resource type's **schema version** is durable metadata next to the
-  snapshots (``_SCHEMAS.json``, same atomic tmp+rename discipline as
-  the state store's ``_STATE.json``);
+- a resource type's **schema version** is durable metadata in the
+  state store's ``_STATE.json``, next to the table versions;
 - a **migration step** is a declarative transform list applied as ONE
-  transactional snapshot rewrite (the versioned store's atomic state
-  file rename — an interrupted migration leaves the previous snapshot fully
-  live, so there is no partially-migrated state to repair);
-- transforms are **idempotent by construction** (add skips when the
-  column exists, rename skips when the source column is gone), so a
-  crash BETWEEN the snapshot commit and the metadata bump is repaired
-  by simply re-running the migration;
+  snapshot rewrite, published together with the new schema version in
+  one store transaction (one rename of the state file). A crashed
+  migration publishes neither, so the previous snapshot and version stay
+  live and re-running the migration replays it from them — there is no
+  partially-migrated state to repair;
+- transforms skip work already done (add skips an existing column,
+  rename skips a gone source column), but replay safety rests on the
+  transaction, not on them: renaming ``name`` and then adding a new
+  ``name`` raises when applied to its own output;
 - **dependent views** cascade through the machinery that already
   exists: bump the view fragment's handler ``version`` to one that
   reads the new schema and ``IncrementalEngine.resync_changed()`` (T8)
@@ -39,9 +40,6 @@ versioned store should not fork physical and logical schemas).
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -60,8 +58,8 @@ VERBS = ("add", "rename", "retype", "drop")
 
 def apply_transforms(df: DataFrame, transforms) -> DataFrame:
     """Apply a migration step's transforms to one DataFrame — a pure
-    narrow projection (no shuffle, no Python), idempotent so a replay
-    over already-migrated data is a no-op:
+    narrow projection (no shuffle, no Python). Each transform skips
+    work already done:
 
     - ``add`` of an existing column leaves it untouched;
     - ``rename`` whose source column is gone (already renamed) is
@@ -103,44 +101,3 @@ def apply_transforms(df: DataFrame, transforms) -> DataFrame:
             raise MigrationError(
                 f"unknown transform verb {verb!r} (one of {VERBS})")
     return df
-
-
-class SchemaRegistry:
-    """Durable per-resource-type schema versions + migration history,
-    stored as ``{root}/_SCHEMAS.json`` (atomic tmp+rename, the state
-    store's ``_STATE.json`` discipline). History records each applied step's
-    transforms so an operator can audit how v0 became vN — the
-    reference keeps this in the prototype YAML chain."""
-
-    def __init__(self, root: str):
-        self.root = root
-        os.makedirs(root, exist_ok=True)
-
-    def _path(self) -> str:
-        return os.path.join(self.root, "_SCHEMAS.json")
-
-    def _load(self) -> dict:
-        try:
-            with open(self._path()) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            return {}
-
-    def version(self, resource_type: str) -> int:
-        return self._load().get(resource_type, {}).get("version", 0)
-
-    def history(self, resource_type: str) -> list:
-        return self._load().get(resource_type, {}).get("history", [])
-
-    def record(self, resource_type: str, version: int,
-               transforms) -> None:
-        meta = self._load()
-        ent = meta.setdefault(resource_type, {"version": 0, "history": []})
-        ent["version"] = version
-        ent["history"].append({
-            "version": version,
-            "transforms": [list(t) for t in transforms]})
-        tmp = self._path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(meta, f)
-        os.replace(tmp, self._path())

@@ -315,9 +315,10 @@ class ResourceStore:
 
     def schema_version(self, resource_type: str) -> int:
         """Current schema version of a type — or of one of its side
-        collections via the path form (``"person/private"``)."""
-        from qvarn_mr_spark.sources.migration import SchemaRegistry
-        return SchemaRegistry(self.root).version(resource_type)
+        collections via the path form (``"person/private"``). It is
+        recorded in the store's state file, in the transaction that
+        publishes the migrated table."""
+        return self._store.get_schema_versions().get(resource_type, 0)
 
     def _migration_table(self, resource_type: str) -> str:
         """Resolve a migration target to its physical store table.
@@ -328,9 +329,9 @@ class ResourceStore:
         ``"person/private"`` addresses the subresource table of
         ``person``'s ``private`` prototype (falling back to the file
         table for blob subresources). The plain form is the main
-        table. Each (type, sub) carries its OWN version chain in
-        ``_SCHEMAS.json`` — sub prototypes version independently of
-        the parent, exactly as separate YAML prototypes do."""
+        table. Each (type, sub) carries its OWN schema version —
+        sub prototypes version independently of the parent, exactly as
+        separate YAML prototypes do."""
         from qvarn_mr_spark.sources.migration import MigrationError
         if "/" not in resource_type:
             return resource_type
@@ -347,13 +348,13 @@ class ResourceStore:
                 transforms) -> bool:
         """Migrate ``resource_type`` to schema ``to_version`` by applying
         the declarative ``transforms`` (see ``migration.VERBS``) as ONE
-        atomic snapshot rewrite, then bump the durable schema version.
+        snapshot rewrite, published together with the new schema version
+        in one store transaction.
 
         Returns False (no-op) when the type is already AT or PAST
-        ``to_version`` — re-running an interrupted migration is safe: the
-        snapshot swap is atomic and every transform is idempotent, so a
-        crash between the rewrite and the metadata bump is repaired by
-        calling migrate again with the same arguments. Skipping versions
+        ``to_version``. A crashed migration publishes neither the
+        rewrite nor the version, so calling migrate again with the same
+        arguments replays it from the old snapshot. Skipping versions
         raises: migrations form a chain (v0→v1→…), the reference's
         contract.
 
@@ -374,7 +375,6 @@ class ResourceStore:
         views and ``get_subresource`` stand on."""
         from qvarn_mr_spark.sources.migration import (
             MigrationError,
-            SchemaRegistry,
             apply_transforms,
         )
         table = self._migration_table(resource_type)
@@ -400,8 +400,7 @@ class ResourceStore:
                     f"{resource_type}: cannot {t[0]} protected "
                     f"column {t[1]!r} (the accessor contract reads "
                     f"it)")
-        reg = SchemaRegistry(self.root)
-        cur = reg.version(resource_type)
+        cur = self.schema_version(resource_type)
         if to_version <= cur:
             return False
         if to_version != cur + 1:
@@ -409,6 +408,7 @@ class ResourceStore:
                 f"{resource_type}: cannot migrate v{cur}→v{to_version}; "
                 f"versions step by 1 (apply v{cur + 1} first)")
         migrated = apply_transforms(self._store.read(table), transforms)
-        self._store.overwrite(table, migrated)
-        reg.record(resource_type, to_version, transforms)
+        with self._store.transaction():
+            self._store.overwrite(table, migrated)
+            self._store.set_schema_version(resource_type, to_version)
         return True

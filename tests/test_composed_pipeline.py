@@ -175,10 +175,9 @@ def test_composed_streaming_corpus_pipeline(spark, tmp_path):
     assert ("d1", "d4") in t2
     assert ("d1", "d4") in e2
     # gated docs never leaked into any bucket
-    from qvarn_mr_spark.operators.mapreduce import live
-    members = live(engine["inc"].read("text_buckets")).select(
+    members = engine["inc"].read("text_buckets").select(
         F.col("_mr_value").alias("m")).union(
-        live(engine["inc"].read("emb_buckets")).select(
+        engine["inc"].read("emb_buckets").select(
             F.col("_mr_value").alias("m"))).collect()
     assert {r["m"] for r in members}.isdisjoint({"d2", "d5"})
 
@@ -187,8 +186,8 @@ def test_composed_streaming_corpus_pipeline(spark, tmp_path):
     apply_cdc([("kept", "deleted", "d1")])
     t3, e3 = assert_stream_equals_batch()
     assert not any("d1" in p for p in t3 | e3)
-    members = live(engine["inc"].read("text_buckets")).select(
+    members = engine["inc"].read("text_buckets").select(
         F.col("_mr_value").alias("m")).union(
-        live(engine["inc"].read("emb_buckets")).select(
+        engine["inc"].read("emb_buckets").select(
             F.col("_mr_value").alias("m"))).collect()
     assert all(r["m"] != "d1" for r in members)

@@ -15,10 +15,15 @@ from qvarn_mr_spark.operators import (
     IncrementalEngine,
     ParquetStateStore,
     ViewEngine,
+    map_expr,
     map_item,
     reduce_agg,
 )
 from qvarn_mr_spark.operators.incremental import notifications
+
+#: The engine columns of every stored map row (a map's ``fields`` add more).
+MAP_COLUMNS = ["_mr_key", "_mr_value", "_mr_source_id", "_mr_source_type",
+               "_mr_version"]
 
 
 @pytest.fixture(params=["plain", "bucketed"])
@@ -73,9 +78,9 @@ def test_lifecycle_sum(setup):
     inc.apply_changes(notifications(spark, [("source", "deleted", "3")]))
     assert read_sums(inc) == {"1": 4}
     # deleted ids leave no rows behind: the batch commits atomically,
-    # so no tombstone outlives it (T3)
-    live = inc.read("source__map").filter("_mr_deleted").count()
-    assert live == 0
+    # so nothing of a deleted id outlives it (T3)
+    assert {r["_mr_source_id"] for r in
+            inc.read("source__map").collect()} == {"1", "2"}
 
     # delete everything → empty-group elimination (A8)
     set_source([])
@@ -317,6 +322,47 @@ def test_dead_letters_of_every_source_commit_once(spark, tmp_path):
             for r in inc.read("sums").collect()} == {"1": 2}
 
 
+@pytest.mark.parametrize("store_cls", [ParquetStateStore,
+                                       BucketedParquetStateStore])
+def test_stored_map_rows_carry_only_engine_columns(spark, tmp_path,
+                                                   store_cls):
+    """A stored map row holds its key, value, source id, source type and
+    handler version, plus the fields its map declares, and nothing else:
+    after a rebuild and after an apply that creates, updates and deletes."""
+    cat = Catalog(spark)
+
+    def set_source(src, rows):
+        cat.register(src, spark.createDataFrame(
+            rows, "id string, key long, value long"))
+
+    set_source("a", [("a1", 1, 1), ("a2", 2, 5)])
+    set_source("b", [("b1", 1, 2), ("b2", 2, 3)])
+    eng = ViewEngine(cat, {
+        "m": {"a": map_item("key", "value")},
+        "mf": {"a": map_expr(key="key", value="value",
+                             fields={"twice": F.col("value") * 2}),
+               "b": map_item("key", "value")},
+        "sums": {"m": reduce_agg(F.sum)},
+    })
+    inc = IncrementalEngine(eng, store_cls(spark, str(tmp_path / "s")))
+    want = {"m": sorted(MAP_COLUMNS), "mf": sorted(MAP_COLUMNS + ["twice"])}
+
+    def stored():
+        return {t: sorted(inc.read(t).columns) for t in want}
+
+    inc.resync_all()
+    assert stored() == want
+    set_source("a", [("a1", 1, 7), ("a2", 2, 5), ("a3", 3, 1)])
+    set_source("b", [("b1", 1, 2)])
+    inc.apply_changes(notifications(spark, [
+        ("a", "updated", "a1"), ("a", "created", "a3"),
+        ("b", "deleted", "b2")]))
+    assert stored() == want
+    assert {t: sorted(eng.map_table(t).columns) for t in want} == want
+    assert {r["_mr_key"]: r["_mr_value"]
+            for r in inc.read("sums").collect()} == {"1": 7, "2": 5, "3": 1}
+
+
 def test_seqless_change_batch_rejected(setup):
     # F.last-without-order would be nondeterministic: require seq
     spark, cat, inc, set_source = setup
@@ -538,11 +584,8 @@ def test_snapshot_is_all_or_none_across_tables(setup):
     assert ("1", 5) in mid["direct_map"]
     # post-batch snapshot: the whole NEW state, both tables
     snap = inc.snapshot()
-    live = snap.read("source__map")
-    if "_mr_deleted" in live.columns:
-        live = live.filter(~F.coalesce(F.col("_mr_deleted"), F.lit(False)))
     assert {(r["_mr_key"], r["_mr_value"]) for r in
-            live.select("_mr_key", "_mr_value").collect()} \
+            snap.read("source__map").collect()} \
         == {("1", 1), ("1", 2), ("1", 5)}
     assert {r["_mr_key"]: r["_mr_value"]
             for r in snap.read("sum_target").collect()} == {"1": 8}

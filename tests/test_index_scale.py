@@ -32,7 +32,6 @@ from qvarn_mr_spark.operators.incremental import (
     BucketedParquetStateStore,
     notifications,
 )
-from qvarn_mr_spark.operators.mapreduce import live
 
 DIM = 8
 
@@ -63,7 +62,7 @@ def hot_rows(n_hot, n_cold, start=0):
 
 def read_members(inc, name="ivf_members"):
     out = {}
-    for r in live(inc.read(name)).collect():
+    for r in inc.read(name).collect():
         out.setdefault(r["_mr_key"], []).append(r["_mr_value"]["m_id"])
     return {c: sorted(ids) for c, ids in out.items()}
 
@@ -436,35 +435,30 @@ def test_probe_ranking_is_two_phase_bounded(spark, tmp_path):
 
 
 def test_chain_read_schema_pinned_to_manifest(spark, tmp_path):
-    """r12 (ADVICE r11): an owner chain mixes files WITH ``_mr_deleted``
-    (tombstone rewrites) and files WITHOUT it (pure-append inserts);
-    reads must not depend on which file Spark samples for schema. The
-    manifest's committed schema is applied to the whole chain: the
-    column is always present, appended rows read it as null, and
-    ``live()`` treats null as live — tombstones never resurface, fresh
-    appends never vanish."""
+    """An owner chain mixes files WITH an optional column (the full
+    write) and files WITHOUT it (a pure-append insert); reads must not
+    depend on which file Spark samples for schema. The manifest's
+    committed schema is applied to the whole chain: the column is
+    always present and the appended rows read it as null."""
     store = BucketedParquetStateStore(
         spark, str(tmp_path / "s"), buckets=1, retain=4, compact_after=8)
 
-    full = "_mr_key string, v long, _mr_deleted boolean"
-    v1 = spark.createDataFrame(
-        [("a", 1, False), ("b", 2, True)], full)      # b tombstoned
+    full = "_mr_key string, v long, note string"
+    v1 = spark.createDataFrame([("a", 1, "x"), ("b", 2, "y")], full)
     store.overwrite("t", v1)
 
-    # pure-append commit whose insert files LACK the tombstone column
+    # pure-append commit whose insert files LACK the note column
     ins = spark.createDataFrame([("c", 3)], "_mr_key string, v long")
-    v2 = v1.unionByName(ins.withColumn("_mr_deleted", F.lit(False)))
+    v2 = v1.unionByName(ins, allowMissingColumns=True)
     store.overwrite("t", v2, dirty_keys=ins.select("_mr_key"),
                     inserts=ins)
 
     got = store.read("t")
-    assert set(got.columns) == {"_mr_key", "v", "_mr_deleted"}
-    rows = {(r["_mr_key"], r["v"], r["_mr_deleted"])
-            for r in got.collect()}
+    assert set(got.columns) == {"_mr_key", "v", "note"}
+    rows = {(r["_mr_key"], r["v"], r["note"]) for r in got.collect()}
     # the appended file had no column → deterministic null, never a
     # sampled-file accident
-    assert rows == {("a", 1, False), ("b", 2, True), ("c", 3, None)}
-    assert {r["_mr_key"] for r in live(got).collect()} == {"a", "c"}
+    assert rows == {("a", 1, "x"), ("b", 2, "y"), ("c", 3, None)}
 
 
 def test_read_keys_on_pre_feature_manifest_and_push_keys_zero(

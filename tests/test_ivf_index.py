@@ -68,10 +68,9 @@ def df_of(spark, rows):
 
 def read_members(inc, name="ivf_members"):
     """Cluster → sorted member ids from the NORMALIZED index (one
-    (_mr_key, struct(m_id, m_vec)) row per member, tombstones excluded)."""
-    from qvarn_mr_spark.operators.mapreduce import live
+    (_mr_key, struct(m_id, m_vec)) row per member)."""
     out = {}
-    for r in live(inc.read(name)).collect():
+    for r in inc.read(name).collect():
         out.setdefault(r["_mr_key"], []).append(r["_mr_value"]["m_id"])
     return {c: sorted(ids) for c, ids in out.items()}
 

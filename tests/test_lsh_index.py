@@ -102,13 +102,12 @@ def test_lsh_index_maintains_through_cdc(spark, tmp_path):
     inc.apply_changes(notifications(spark, [("doc", "deleted", "1")]))
     assert probe_all() == batch()
     assert not any("1" in (a, b) for a, b, _ in probe_all())
-    from qvarn_mr_spark.operators.mapreduce import live
-    members = live(inc.read("lsh_buckets")).select(
+    members = inc.read("lsh_buckets").select(
         F.col("_mr_value").alias("m")).collect()
     assert all(r["m"] != "1" for r in members)
-    # stats view: algebraic per-bucket counts equal the live row counts
+    # stats view: algebraic per-bucket counts equal the stored row counts
     counts = {}
-    for r in live(inc.read("lsh_buckets")).collect():
+    for r in inc.read("lsh_buckets").collect():
         counts[r["_mr_key"]] = counts.get(r["_mr_key"], 0) + 1
     stats = {r["_mr_key"]: r["n_docs"]
              for r in inc.read("lsh_buckets__stats").collect()}
@@ -219,8 +218,7 @@ def test_embedding_lsh_index_maintains_through_cdc(spark, tmp_path):
     rows = [r for r in rows if r[0] != "a"]
     set_source(rows)
     inc.apply_changes(notifications(spark, [("emb", "deleted", "a")]))
-    from qvarn_mr_spark.operators.mapreduce import live
-    members = live(inc.read("emb_lsh_buckets")).select(
+    members = inc.read("emb_lsh_buckets").select(
         F.col("_mr_value").alias("m")).collect()
     assert all(r["m"] != "a" for r in members)
 

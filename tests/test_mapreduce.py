@@ -159,21 +159,6 @@ def test_map_where_filters(spark):
     assert got["k"]["_mr_value"] == 1
 
 
-def test_tombstones_excluded_from_reduce(spark):
-    cat = make_catalog(spark, src=[
-        Row(id="1", type="s", revision="r", key="k", value=1),
-        Row(id="2", type="s", revision="r", key="k", value=2),
-    ])
-    eng = ViewEngine(cat, {
-        "m": {"src": map_item("key", "value")},
-        "v": {"m": reduce_agg(F.sum)},
-    })
-    mdf = eng.map_table("m").withColumn(
-        "_mr_deleted", F.col("_mr_source_id") == "2")
-    got = rows_by_key(eng.reduce_table("v", mdf))
-    assert got["k"]["_mr_value"] == 1
-
-
 def test_validation_rules(spark):
     cat = Catalog(spark)
     # mixed map+reduce in one target

@@ -141,6 +141,36 @@ def test_migration_guards_and_idempotence(spark, tmp_path):
     assert dict(once.dtypes)["n"] == "double"
 
 
+def test_crashed_migration_reruns_from_the_old_snapshot(
+        spark, tmp_path, monkeypatch):
+    """A migration that crashes after its table rewrite commits publishes
+    neither the rewrite nor the schema version, so rerunning a step that
+    cannot be applied twice (rename ``name``, then add a new ``name``)
+    migrates from the old snapshot."""
+    root = str(tmp_path / "store")
+    rstore = ResourceStore(spark, root)
+    rid = rstore.create("doc", {"name": "Alpha", "n": 3})
+    step = [("rename", "name", "title"), ("add", "name", "string")]
+    overwrite = rstore._store.overwrite
+
+    def commit_then_crash(table, df, *args, **kwargs):
+        overwrite(table, df, *args, **kwargs)
+        raise RuntimeError("crash after the table commit")
+
+    monkeypatch.setattr(rstore._store, "overwrite", commit_then_crash)
+    with pytest.raises(RuntimeError, match="crash"):
+        rstore.migrate("doc", 1, step)
+    monkeypatch.undo()
+
+    assert rstore.migrate("doc", 1, step) is True
+    fresh = ResourceStore(spark, root)
+    assert fresh.schema_version("doc") == 1
+    assert sorted(fresh.table("doc").columns) == sorted(
+        ["id", "type", "revision", "title", "n", "name"])
+    row = fresh.get("doc", rid)
+    assert (row["title"], row["name"], row["n"]) == ("Alpha", None, 3)
+
+
 def test_additive_migration_needs_no_handler_change(spark, tmp_path):
     """A purely ADDITIVE migration leaves existing views untouched and
     valid: handlers that never read the new column keep their version,

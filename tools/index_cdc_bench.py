@@ -19,7 +19,7 @@ Two sweeps:
 - probe-under-churn sweeps: pinned probe wall time while a writer
   thread lands concurrent commits — once with insert-only batches
   (append fast path) and once (r13, VERDICT r12 #5) with an
-  update/delete MIX per commit (tombstone appends, chain compaction
+  update/delete MIX per commit (bucket rewrites, chain compaction
   folds, manifest-closure GC — the expensive maintenance mode), with
   the pinned answer asserted byte-identical throughout and the final
   live membership asserted equal to the mutated catalog.
@@ -143,7 +143,7 @@ def measure_probe_under_churn(spark, d, delta_n, runs, tag,
     maintenance mode). ``mix=True`` (r13, VERDICT r12 #5): each batch
     is half inserts, a quarter UPDATES of live corpus ids and a
     quarter DELETES of (distinct) corpus ids — the expensive mode that
-    exercises tombstone appends, chain compaction folds and
+    exercises bucket rewrites, chain compaction folds and
     manifest-closure GC while the reader stays pinned; afterwards the
     live index membership is asserted equal to the mutated catalog."""
     import threading
@@ -263,11 +263,10 @@ def measure_probe_under_churn(spark, d, delta_n, runs, tag,
     # post-churn: the pinned plan still answers (GC closure held)
     assert {tuple(r) for r in probe.collect()} == want
     if mix:
-        # conformance: after update/delete churn the LIVE index
-        # membership equals the mutated catalog — tombstones really
-        # removed the deleted ids, updates kept theirs
-        from qvarn_mr_spark.operators.mapreduce import live
-        live_ids = {r["m"] for r in live(inc.read("idx"))
+        # conformance: after update/delete churn the index membership
+        # equals the mutated catalog — deletes really removed their
+        # ids, updates kept theirs
+        live_ids = {r["m"] for r in inc.read("idx")
                     .select(F.col("_mr_value.m_id").alias("m"))
                     .collect()}
         want_ids = ({r["id"] for r in base.select("id").collect()}
@@ -322,7 +321,7 @@ def main():
                                 "probes_during_churn": n}
         print(f"probe sf{sf} MIXED churn (8 ins / 4 upd / 4 del per "
               f"commit): quiet={q}s under-churn={c}s ({n} probes "
-              f"during 6 concurrent commits incl. tombstone rewrites "
+              f"during 6 concurrent commits incl. delete rewrites "
               f"+ compaction; pinned answer identical throughout, "
               f"live membership == mutated catalog)", flush=True)
 
