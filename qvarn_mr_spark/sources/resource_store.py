@@ -12,26 +12,41 @@ through (SURVEY §2.1 S2/S6/S7/S8 and the listener notification machinery):
   the revision is regenerated on every update;
 - **delete** emits ``deleted`` (``clients/qvarn.py:202-209``).
 
-Storage is the versioned :class:`ParquetStateStore` (atomic snapshot
-overwrite); notifications append to a JSON-lines feed directory that
-:func:`qvarn_mr_spark.streaming.read_change_feed` consumes — together they
-close the reference's full loop: write → notification → incremental view
-maintenance.
+Storage is the versioned :class:`ParquetStateStore`. Creates, updates
+and deletes are delta commits (:meth:`ParquetStateStore.commit_delta`):
+the new rows go to one parquet file written in this process by pyarrow,
+with no Spark job, and the version's record adds the deleted ids and the
+replaced ``(id, revision)`` pairs to the table's delete sets, so a write
+costs O(rows written) whatever the table's size. A deleted key never
+comes back: ``create`` draws fresh ids, an update's row gets a fresh
+revision, and a ``backfill`` that reuses a deleted id rewrites the
+table, as ``migrate`` does, which clears the delete sets. The store also
+folds a table into one snapshot once it holds more than
+``COMPACT_AFTER`` delta files or ``MAX_DELETES`` delete values.
+Notifications append to a JSON-lines feed directory that
+:func:`qvarn_mr_spark.streaming.read_change_feed` consumes — together
+they close the reference's full loop: write → notification → incremental
+view maintenance. Each write reserves its feed ``seq`` range in the
+state file, in the transaction that publishes it, so ``seq`` keeps
+rising across store instances on one root.
 
-Scale note: single-document CRUD is inherently a small-data control path
-(the reference processes one REST call at a time); the bulk path at 100 TB
-is ``create_many``/backfill which writes one DataFrame snapshot. On a real
-cluster the store becomes a Delta table (``MERGE``/``DELETE`` instead of
-snapshot rewrite) and the feed becomes the table's Change Data Feed — same
-interface, zero engine changes.
+Scale note: single-document CRUD is a small-data control path (the
+reference processes one REST call at a time), and one instance serializes
+its writes under a lock; the bulk path at 100 TB is ``backfill``, which
+writes one DataFrame snapshot. On a real cluster the store becomes a
+Delta or Iceberg table (the same deletion records, kept per file) and the
+feed becomes the table's Change Data Feed — same interface, zero engine
+changes.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import threading
 import time
 import uuid
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -50,7 +65,9 @@ class ResourceStore:
     root: str
     feed_dir: str | None = None
     _store: ParquetStateStore = field(init=False)
-    _seq: int = field(init=False, default=0)
+    #: held by every write across its revision check, its commit, its
+    #: ``seq`` reservation and its emit
+    _lock: threading.Lock = field(init=False, default_factory=threading.Lock)
 
     def __post_init__(self):
         self._store = ParquetStateStore(self.spark, self.root)
@@ -59,17 +76,30 @@ class ResourceStore:
 
     # -- notification feed ---------------------------------------------------
 
-    def _emit(self, resource_type: str, change: str, ids: list[str]) -> None:
-        """One JSON-lines file per CRUD call — the feed's ``seq`` preserves
-        emission order (the reference's ``last_modified`` ordering)."""
+    @contextmanager
+    def _write(self, resource_type: str, change: str, ids: list[str]):
+        """Run the body's commits under the write lock in one store
+        transaction that also reserves ``seq`` numbers for ``ids``, then
+        emit ``change`` for them. A body that raises publishes and emits
+        nothing."""
+        with self._lock:
+            with self._store.transaction():
+                yield
+                first = (self._store.reserve("seq", len(ids))
+                         if self.feed_dir and ids else 0)
+            self._emit(resource_type, change, ids, first)
+
+    def _emit(self, resource_type: str, change: str, ids: list[str],
+              first: int) -> None:
+        """One JSON-lines file per CRUD call, numbered from ``first`` — the
+        feed's ``seq`` preserves emission order (the reference's
+        ``last_modified`` ordering)."""
         if not self.feed_dir or not ids:
             return
-        lines = []
-        for rid in ids:
-            self._seq += 1
-            lines.append(json.dumps({
-                "resource_type": resource_type, "resource_change": change,
-                "resource_id": rid, "seq": self._seq}))
+        lines = [json.dumps({
+            "resource_type": resource_type, "resource_change": change,
+            "resource_id": rid, "seq": seq})
+            for seq, rid in enumerate(ids, first)]
         name = f"{time.time_ns()}-{uuid.uuid4().hex[:8]}.json"
         tmp = os.path.join(self.feed_dir, "." + name)
         with open(tmp, "w") as f:
@@ -92,13 +122,9 @@ class ResourceStore:
         """S6 insert: assign id + revision, append, emit ``created``."""
         docs = [{**d, "type": resource_type, "id": uuid.uuid4().hex,
                  "revision": uuid.uuid4().hex} for d in docs]
-        new = self.spark.createDataFrame(docs)
-        if self._store.exists(resource_type):
-            new = self.table(resource_type).unionByName(
-                new, allowMissingColumns=True)
-        self._store.overwrite(resource_type, new)
         ids = [d["id"] for d in docs]
-        self._emit(resource_type, "created", ids)
+        with self._write(resource_type, "created", ids):
+            self._store.commit_delta(resource_type, docs)
         return ids
 
     def create(self, resource_type: str, doc: dict) -> str:
@@ -106,16 +132,17 @@ class ResourceStore:
 
     def backfill(self, resource_type: str, df: DataFrame,
                  id_col: str = "id", check_ids: bool = True) -> None:
-        """The BULK ingest path (class docstring: "the bulk path at
-        100 TB is create_many/backfill which writes one DataFrame
-        snapshot"): append a whole DataFrame as resources in ONE
+        """The BULK ingest path (module docstring: "the bulk path at
+        100 TB is ``backfill``, which writes one DataFrame snapshot"):
+        append a whole DataFrame as resources in ONE
         distributed write — no driver-side dict list, no per-row ids.
         ``id_col`` supplies the resource ids (cast to string);
         ``type``/``revision`` are stamped as columns. Emits NO
         notifications (a backfill's ids are corpus-sized — the feed is
         for trickle CRUD); drive dependent views with
         ``IncrementalEngine.resync*`` afterwards, exactly the
-        reference's bootstrap flow.
+        reference's bootstrap flow. The rewrite folds the table's delta
+        files and clears its delete sets.
 
         Unlike ``create_many`` (fresh uuid4 ids, collision-free by
         construction), the ids here are CALLER-supplied — a colliding
@@ -127,32 +154,33 @@ class ResourceStore:
         of the incoming frame (id-column only, pruned at the parquet
         scan); pass ``check_ids=False`` for re-ingest flows that have
         already proven uniqueness upstream."""
-        if check_ids:
-            ids = df.select(F.col(id_col).cast("string").alias("id"))
-            dup = (ids.groupBy("id").count()
-                   .filter(F.col("count") > 1).limit(1).collect())
-            if dup:
-                raise ValueError(
-                    f"backfill({resource_type!r}): duplicate id "
-                    f"{dup[0]['id']!r} within the incoming frame")
-            if self._store.exists(resource_type):
-                clash = (ids.join(self.table(resource_type)
-                                  .select("id"), "id", "left_semi")
-                         .limit(1).collect())
-                if clash:
+        with self._lock:
+            if check_ids:
+                ids = df.select(F.col(id_col).cast("string").alias("id"))
+                dup = (ids.groupBy("id").count()
+                       .filter(F.col("count") > 1).limit(1).collect())
+                if dup:
                     raise ValueError(
-                        f"backfill({resource_type!r}): id "
-                        f"{clash[0]['id']!r} already exists in the "
-                        f"table")
-        new = df.select(
-            F.col(id_col).cast("string").alias("id"),
-            F.lit(resource_type).alias("type"),
-            F.lit(uuid.uuid4().hex).alias("revision"),
-            *[c for c in df.columns if c != id_col])
-        if self._store.exists(resource_type):
-            new = self.table(resource_type).unionByName(
-                new, allowMissingColumns=True)
-        self._store.overwrite(resource_type, new)
+                        f"backfill({resource_type!r}): duplicate id "
+                        f"{dup[0]['id']!r} within the incoming frame")
+                if self._store.exists(resource_type):
+                    clash = (ids.join(self.table(resource_type)
+                                      .select("id"), "id", "left_semi")
+                             .limit(1).collect())
+                    if clash:
+                        raise ValueError(
+                            f"backfill({resource_type!r}): id "
+                            f"{clash[0]['id']!r} already exists in the "
+                            f"table")
+            new = df.select(
+                F.col(id_col).cast("string").alias("id"),
+                F.lit(resource_type).alias("type"),
+                F.lit(uuid.uuid4().hex).alias("revision"),
+                *[c for c in df.columns if c != id_col])
+            if self._store.exists(resource_type):
+                new = self.table(resource_type).unionByName(
+                    new, allowMissingColumns=True)
+            self._store.overwrite(resource_type, new)
 
     def update(self, resource_type: str, rid: str, doc: dict,
                revision: str | None = None) -> str:
@@ -160,10 +188,10 @@ class ResourceStore:
 
         Like the reference client, a caller that omits ``revision`` gets
         last-writer-wins (auto-fetch, ``clients/qvarn.py:157-168``)."""
-        self._checked(resource_type, rid, revision)
-        new_rev = self._replace(resource_type, rid, doc)
-        self._emit(resource_type, "updated", [rid])
-        return new_rev
+        with self._write(resource_type, "updated", [rid]):
+            current = self._checked(resource_type, rid, revision)
+            return self._replace(resource_type, rid, current["revision"],
+                                 doc)
 
     def _checked(self, resource_type: str, rid: str,
                  revision: str | None) -> dict:
@@ -177,30 +205,35 @@ class ResourceStore:
                 f"{resource_type}/{rid}: revision {revision!r} is stale")
         return current
 
-    def _replace(self, resource_type: str, rid: str, doc: dict) -> str:
-        """Commit ``doc`` as ``rid``'s row under a fresh revision and return
-        it; the caller has already checked the row and emits ``updated``
-        once the commit is published."""
+    def _replace(self, resource_type: str, rid: str, revision: str,
+                 doc: dict) -> str:
+        """Commit ``doc`` as ``rid``'s row under a fresh revision in place
+        of its row at ``revision``, and return the new revision; the
+        caller has already checked the row and emits ``updated`` once the
+        commit is published."""
         new_rev = uuid.uuid4().hex
         doc = {**doc, "type": resource_type, "id": rid, "revision": new_rev}
-        others = self.table(resource_type).filter(F.col("id") != rid)
-        merged = others.unionByName(self.spark.createDataFrame([doc]),
-                                    allowMissingColumns=True)
-        self._store.overwrite(resource_type, merged)
+        self._store.commit_delta(resource_type, [doc],
+                                 deletes={"id,revision": [[rid, revision]]})
         return new_rev
 
-    def _put_side(self, resource_type: str, rid: str, parent: dict,
-                  table: str, new: DataFrame) -> str:
-        """Commit ``new`` as side table ``table`` together with the parent
-        revision bump in ONE store transaction, then emit ``updated`` for
-        the parent: a failed commit leaves both tables and the feed as
-        they were."""
-        with self._store.transaction():
-            self._store.overwrite(table, new)
+    def _put_side(self, resource_type: str, rid: str, revision: str | None,
+                  table: str, row: DataFrame) -> str:
+        """Check the parent's revision, then commit ``row`` as ``rid``'s
+        row of side table ``table`` together with the parent revision bump
+        in ONE store transaction, then emit ``updated`` for the parent: a
+        rejected or failed put leaves both tables and the feed as they
+        were. A side row is replaced by id, which its successor reuses, so
+        the side table is rewritten whole."""
+        with self._write(resource_type, "updated", [rid]):
+            parent = self._checked(resource_type, rid, revision)
+            if self._store.exists(table):
+                row = self._store.read(table).filter(F.col("id") != rid) \
+                    .unionByName(row, allowMissingColumns=True)
+            self._store.overwrite(table, row)
             # parent fields unchanged
-            new_rev = self._replace(resource_type, rid, parent)
-        self._emit(resource_type, "updated", [rid])
-        return new_rev
+            return self._replace(resource_type, rid, parent["revision"],
+                                 parent)
 
     # -- subresources --------------------------------------------------------
     #
@@ -221,16 +254,9 @@ class ResourceStore:
         write, so a rejected put leaves no trace) in the same store
         transaction as the sub write, and emits ``updated`` for the
         parent."""
-        parent = self._checked(resource_type, rid, revision)
-        table = self._sub_table(resource_type, sub)
-        row = {**doc, "id": rid}
-        if self._store.exists(table):
-            others = self._store.read(table).filter(F.col("id") != rid)
-            merged = others.unionByName(self.spark.createDataFrame([row]),
-                                        allowMissingColumns=True)
-        else:
-            merged = self.spark.createDataFrame([row])
-        return self._put_side(resource_type, rid, parent, table, merged)
+        return self._put_side(
+            resource_type, rid, revision, self._sub_table(resource_type, sub),
+            self.spark.createDataFrame([{**doc, "id": rid}]))
 
     def get_subresource(self, resource_type: str, rid: str,
                         sub: str) -> dict | None:
@@ -265,15 +291,12 @@ class ResourceStore:
         PUT up front); bumps the parent revision in the same store
         transaction and emits ``updated`` for the parent. Returns the new
         parent revision."""
-        parent = self._checked(resource_type, rid, revision)
-        table = self._file_table(resource_type, sub)
-        new = self.spark.createDataFrame(
-            [(rid, content_type, bytearray(body))],
-            "id string, content_type string, body binary")
-        if self._store.exists(table):
-            new = self._store.read(table).filter(F.col("id") != rid) \
-                .unionByName(new)
-        return self._put_side(resource_type, rid, parent, table, new)
+        return self._put_side(
+            resource_type, rid, revision,
+            self._file_table(resource_type, sub),
+            self.spark.createDataFrame(
+                [(rid, content_type, bytearray(body))],
+                "id string, content_type string, body binary"))
 
     def get_file(self, resource_type: str, rid: str,
                  sub: str) -> tuple[bytes, str] | None:
@@ -296,9 +319,9 @@ class ResourceStore:
 
     def delete_many(self, resource_type: str, ids: list[str]) -> None:
         """S8 delete, emits ``deleted``."""
-        remaining = self.table(resource_type).filter(~F.col("id").isin(ids))
-        self._store.overwrite(resource_type, remaining)
-        self._emit(resource_type, "deleted", ids)
+        with self._write(resource_type, "deleted", ids):
+            self._store.commit_delta(resource_type, [],
+                                     deletes={"id": list(ids)})
 
     def delete(self, resource_type: str, rid: str) -> None:
         self.delete_many(resource_type, [rid])
@@ -400,15 +423,16 @@ class ResourceStore:
                     f"{resource_type}: cannot {t[0]} protected "
                     f"column {t[1]!r} (the accessor contract reads "
                     f"it)")
-        cur = self.schema_version(resource_type)
-        if to_version <= cur:
-            return False
-        if to_version != cur + 1:
-            raise MigrationError(
-                f"{resource_type}: cannot migrate v{cur}→v{to_version}; "
-                f"versions step by 1 (apply v{cur + 1} first)")
-        migrated = apply_transforms(self._store.read(table), transforms)
-        with self._store.transaction():
-            self._store.overwrite(table, migrated)
-            self._store.set_schema_version(resource_type, to_version)
+        with self._lock:
+            cur = self.schema_version(resource_type)
+            if to_version <= cur:
+                return False
+            if to_version != cur + 1:
+                raise MigrationError(
+                    f"{resource_type}: cannot migrate v{cur}→v{to_version}; "
+                    f"versions step by 1 (apply v{cur + 1} first)")
+            migrated = apply_transforms(self._store.read(table), transforms)
+            with self._store.transaction():
+                self._store.overwrite(table, migrated)
+                self._store.set_schema_version(resource_type, to_version)
         return True

@@ -92,6 +92,70 @@ def test_revision_conflict(loop):
     assert rstore.get("source", rid)["value"] == 4
 
 
+def test_feed_seq_keeps_rising_across_store_instances(spark, tmp_path,
+                                                      loop):
+    """Each write reserves its ``seq`` range in the store's state file, so a
+    second store on the same root and feed numbers after the first: one
+    drain of create, update (store A) and delete (store B) sees the delete
+    last, leaves the view equal to a recompute and dead-letters nothing."""
+    rstore, inc, sm = loop
+    keep = rstore.create("source", {"key": 1, "value": 5})
+    rid = rstore.create("source", {"key": 2, "value": 1})
+    rstore.update("source", rid, {"key": 2, "value": 2})
+    other = ResourceStore(spark, str(tmp_path / "store"),
+                          feed_dir=str(tmp_path / "feed"))
+    other.delete("source", rid)
+    sm.run_available()
+
+    want = inc.engine.recompute_all()["sums"]
+    assert sums(inc) == {r["_mr_key"]: r["_mr_value"]
+                         for r in want.collect()} == {"1": 5}
+    dead = [r["resource_id"] for r in inc.dead_letters("source__map")
+            .collect()]
+    assert rid not in dead and keep not in dead
+
+
+def test_concurrent_updates_with_one_revision_commit_once(loop, tmp_path):
+    """The revision check and the commit run under one lock: of eight
+    threads updating one id at the same revision, exactly one wins, seven
+    get ``RevisionConflict``, and the feed carries one ``updated`` line."""
+    import json
+    import os
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    rstore, _, _ = loop
+    rid = rstore.create("source", {"key": 1, "value": 0})
+    r0 = rstore.get("source", rid)["revision"]
+
+    def update(i):
+        try:
+            return rstore.update("source", rid, {"key": 1, "value": i},
+                                 revision=r0)
+        except RevisionConflict:
+            return None
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(max_workers=8) as pool:
+            futures = [pool.submit(update, i) for i in range(1, 9)]
+            results = [f.result(timeout=300) for f in futures]
+    finally:
+        sys.setswitchinterval(interval)
+    won = [r for r in results if r is not None]
+    assert len(won) == 1
+    row = rstore.get("source", rid)
+    assert row["revision"] == won[0]
+    assert row["value"] == results.index(won[0]) + 1
+    lines = [json.loads(line)
+             for f in os.listdir(tmp_path / "feed")
+             for line in open(tmp_path / "feed" / f)]
+    assert sorted(ln["resource_change"] for ln in lines) == [
+        "created", "updated"]
+    assert sorted(ln["seq"] for ln in lines) == [1, 2]
+
+
 def test_subresources(loop):
     rstore, _, _ = loop
     rid = rstore.create("source", {"key": 1, "value": 1})
@@ -164,14 +228,14 @@ def test_side_put_with_failed_parent_commit_writes_nothing(loop, tmp_path,
     rev = rstore.get("source", rid)["revision"]
     feed = set(os.listdir(tmp_path / "feed"))
 
-    real = rstore._store.overwrite
+    real = rstore._store.commit_delta
 
-    def failing(table, df, **hints):
+    def failing(table, *args, **kwargs):
         if table == "source":
             raise OSError("injected: parent commit failed")
-        return real(table, df, **hints)
+        return real(table, *args, **kwargs)
 
-    monkeypatch.setattr(rstore._store, "overwrite", failing)
+    monkeypatch.setattr(rstore._store, "commit_delta", failing)
     with pytest.raises(OSError, match="injected"):
         put("s2")
 
