@@ -83,6 +83,9 @@ _STATE_KINDS = ("tables", "handlers", "schemas", "counters")
 COMPACT_AFTER = 8
 #: ... or once its delete sets would hold more than this many values
 MAX_DELETES = 1024
+#: Spark's default ``spark.sql.optimizer.inSetConversionThreshold``: an
+#: ``IN`` list longer than this becomes one hash-set lookup
+_INSET_MIN = 10
 
 
 @contextmanager
@@ -116,16 +119,34 @@ def _sql_str(value: str) -> str:
 def _without(df: DataFrame, deletes: dict) -> DataFrame:
     """``df`` less every row whose key is in ``deletes[key]``: a key names
     one column (its values are strings) or several joined by ``,`` (its
-    values are lists of strings). One ``NOT IN`` per key, all in one
-    filter written as SQL text: parsing it is one JVM call, where a
-    ``Column`` per literal costs one each (0.44 s for 1,024 values)."""
+    values are lists of strings). One term per key, all in one filter
+    written as SQL text: parsing it is one JVM call, where a ``Column``
+    per literal costs one each (0.44 s for 1,024 values).
+
+    A term's generated code must not depend on how many values it holds,
+    or each delete would compile the table's scans anew. Spark turns a
+    ``NOT IN`` list longer than ``_INSET_MIN`` into one hash-set lookup
+    but compiles a shorter one to one comparison per value, so a shorter
+    list is a ``NOT array_contains`` over one array literal instead."""
     terms = []
     for key, values in deletes.items():
-        cols = ", ".join(f"`{c}`" for c in key.split(","))
-        literals = ", ".join(
-            _sql_str(v) if isinstance(v, str)
-            else "(" + ", ".join(map(_sql_str, v)) + ")" for v in values)
-        terms.append(f"({cols}) NOT IN ({literals})")
+        names = key.split(",")
+        cols = ", ".join(f"`{c}`" for c in names)
+        if len(values) > _INSET_MIN:
+            literals = ", ".join(
+                _sql_str(v) if isinstance(v, str)
+                else "(" + ", ".join(map(_sql_str, v)) + ")" for v in values)
+            terms.append(f"({cols}) NOT IN ({literals})")
+        elif len(names) == 1:
+            literals = ", ".join(map(_sql_str, values))
+            terms.append(f"NOT array_contains(array({literals}), {cols})")
+        else:
+            literals = ", ".join(
+                "named_struct(" + ", ".join(
+                    f"{_sql_str(c)}, {_sql_str(x)}" for c, x in zip(names, v))
+                + ")" for v in values)
+            terms.append(
+                f"NOT array_contains(array({literals}), struct({cols}))")
     return df.filter(" AND ".join(terms)) if terms else df
 
 

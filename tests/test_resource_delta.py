@@ -119,6 +119,37 @@ def test_read_is_one_scan_under_one_filter(spark, big):
     assert "Union" not in plan
 
 
+def _compiles(spark):
+    """The number of codegen classes this JVM has compiled so far."""
+    return (spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+            .METRIC_COMPILATION_TIME().getCount())
+
+
+def test_growing_delete_sets_compile_no_new_code(spark, big):
+    """A read's generated code does not depend on how many values its
+    delete sets hold, below and above Spark's IN-to-hash-set threshold
+    alike, so each further delete reads without a new compile."""
+    big.update("doc", "0", {"n": 1000})
+    gone = []
+    fresh = []
+    for i in range(1, 16):
+        big.delete("doc", str(i))
+        gone.append(str(i))
+        before = _compiles(spark)
+        assert big.get("doc", "0")["n"] == 1000
+        assert big.get("doc", str(i)) is None
+        fresh.append(_compiles(spark) - before)
+    # the first read of each term shape compiles: 1 id, and past
+    # incremental._INSET_MIN ids
+    assert sum(1 for n in fresh if n) <= 2, fresh
+    assert fresh[1:incremental._INSET_MIN] == [0] * (
+        incremental._INSET_MIN - 1), fresh
+    assert fresh[incremental._INSET_MIN + 1:] == [0] * (
+        len(fresh) - incremental._INSET_MIN - 1), fresh
+    ids = {r["id"] for r in big.table("doc").select("id").collect()}
+    assert len(ids) == 15000 - len(gone) and not ids & set(gone)
+
+
 def test_types_match_the_spark_path(spark, tmp_path):
     """Rows written by pyarrow read back with the types and values a Spark
     write of the same docs gives: timestamp, date, decimal,
