@@ -19,13 +19,13 @@ state update out. The semantics preserved (SURVEY.md §2.7):
 - **T4 dirty-key tracking**: re-reduce only keys touched by this batch
   (``processor.py:345-360,373-382``). Set form: dirty keys = keys of old ∪
   new map rows of the dirty source ids; recompute = semi-join + groupBy.
-  Like the reference's in-memory hand-off, the map pass hands the reduce
-  pass one cached signed delta frame that lives for one batch: the map
-  rows plus ``_mr_weight`` (+1 inserted, −1 retracted — the counting
-  algorithm's and DBSP's Z-set form of a change); a crashed batch
-  publishes nothing, so its replay re-derives it. Bookkeeping is
-  batch-sized: last-change-wins runs once per batch, the reduce takes
-  its key sets from the delta with no count or cache, and a batch that
+  Like the reference's in-memory hand-off, the map pass builds one
+  cached signed delta frame that lives for one batch: the map rows plus
+  ``_mr_weight`` (+1 inserted, −1 retracted — the counting algorithm's
+  and DBSP's Z-set form of a change); it hands the reduce pass the
+  delta's inserted rows and its dirty and lost keys. A crashed batch
+  publishes nothing, so its replay re-derives them. Bookkeeping is
+  batch-sized: last-change-wins runs once per batch, and a batch that
   changes no map row publishes nothing.
 - **T5 full-group recompute**: reduce re-runs over the entire key group, not
   an incremental delta (``processor.py:192-227``) — always correct for
@@ -45,9 +45,19 @@ State lives in a :class:`ParquetStateStore` — versioned parquet snapshots
 with one atomically-renamed state file. On a production cluster this role
 is played by Delta/Iceberg ``MERGE`` (ACID, file-level data skipping); the
 store isolates that choice behind ``read``/``overwrite`` so swapping the
-backend does not touch engine logic. All engine logic is DataFrame-level
-joins — no driver-side loops over ids — so a 100 TB map table with a
-1k-row dirty batch does a broadcast anti-join, not a full rewrite of logic.
+backend does not touch engine logic.
+
+Every batch-sized set of ids or keys (the upserted and changed ids, the
+ids found in a source, the dirty, lost and gained keys) is a *key set* in
+one of two forms, picked by the batch's size and filtered through one
+helper, :func:`_isin`. A batch of at most ``MAX_LITERALS`` (1,024) changed
+ids — a trickle of notifications, the reference's own traffic — is
+collected to the driver once, and its key sets are Python lists: literal
+filters that run inside the scans they filter and push down to them, so
+such a batch costs a handful of Spark jobs, where each broadcast would be
+a job of its own. A larger batch never reaches the driver: its key sets
+stay frames, and a 100 TB map table with a 10M-id batch does a broadcast
+anti-join, not a driver-side loop over ids.
 """
 
 from __future__ import annotations
@@ -56,6 +66,7 @@ import functools
 import json
 import os
 import shutil
+import threading
 from contextlib import contextmanager
 from dataclasses import dataclass
 
@@ -72,6 +83,8 @@ from qvarn_mr_spark.operators.mapreduce import (
 #: Change kinds in the reference's notification feed
 #: (``processor.py:17-27``; ``[qvarn] listener_resource.py:319-399``).
 CREATED, UPDATED, DELETED = "created", "updated", "deleted"
+#: A change set after last-change-wins, one row per changed id
+_CHANGE_SCHEMA = "resource_type string, resource_id string, change string"
 
 #: The entry kinds of a state file: each maps a name to a number (a
 #: table, handler or schema version, or a counter's high-water mark).
@@ -81,8 +94,10 @@ _STATE_KINDS = ("tables", "handlers", "schemas", "counters")
 #: the table would hold more than this many delta file sets beyond its
 #: base, which bounds a read's fan-in to ``COMPACT_AFTER + 1`` file sets
 COMPACT_AFTER = 8
-#: ... or once its delete sets would hold more than this many values
-MAX_DELETES = 1024
+#: The most values one literal key-set filter carries: a table whose
+#: delete sets would hold more folds instead, and an apply batch with more
+#: changed ids keeps its key sets as frames (see :func:`_isin`)
+MAX_LITERALS = 1024
 #: Spark's default ``spark.sql.optimizer.inSetConversionThreshold``: an
 #: ``IN`` list longer than this becomes one hash-set lookup
 _INSET_MIN = 10
@@ -111,49 +126,129 @@ def _schema(manifest: dict) -> T.StructType:
     return T.StructType.fromJson(json.loads(manifest["schema"]))
 
 
-def _sql_str(value: str) -> str:
+def _sql_str(value) -> str:
     """``value`` as a Spark SQL string literal."""
-    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    return "'" + str(value).replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
-def _without(df: DataFrame, deletes: dict) -> DataFrame:
-    """``df`` less every row whose key is in ``deletes[key]``: a key names
-    one column (its values are strings) or several joined by ``,`` (its
-    values are lists of strings). One term per key, all in one filter
-    written as SQL text: parsing it is one JVM call, where a ``Column``
-    per literal costs one each (0.44 s for 1,024 values).
+#: SQL literal suffixes of the integral types
+_INT_SUFFIX = {T.LongType: "L", T.IntegerType: "", T.ShortType: "S",
+               T.ByteType: "Y"}
 
-    A term's generated code must not depend on how many values it holds,
-    or each delete would compile the table's scans anew. Spark turns a
-    ``NOT IN`` list longer than ``_INSET_MIN`` into one hash-set lookup
-    but compiles a shorter one to one comparison per value, so a shorter
-    list is a ``NOT array_contains`` over one array literal instead."""
-    terms = []
-    for key, values in deletes.items():
-        names = key.split(",")
-        cols = ", ".join(f"`{c}`" for c in names)
-        if len(values) > _INSET_MIN:
-            literals = ", ".join(
-                _sql_str(v) if isinstance(v, str)
-                else "(" + ", ".join(map(_sql_str, v)) + ")" for v in values)
-            terms.append(f"({cols}) NOT IN ({literals})")
-        elif len(names) == 1:
-            literals = ", ".join(map(_sql_str, values))
-            terms.append(f"NOT array_contains(array({literals}), {cols})")
-        else:
-            literals = ", ".join(
-                "named_struct(" + ", ".join(
-                    f"{_sql_str(c)}, {_sql_str(x)}" for c, x in zip(names, v))
-                + ")" for v in values)
-            terms.append(
-                f"NOT array_contains(array({literals}), struct({cols}))")
+
+def _sql_lit(value, dtype: T.DataType) -> str:
+    """``value`` as a Spark SQL literal of type ``dtype``."""
+    if isinstance(dtype, T.StringType):
+        return _sql_str(value)
+    if type(dtype) in _INT_SUFFIX:
+        return f"{int(value)}{_INT_SUFFIX[type(dtype)]}"
+    return f"CAST({_sql_str(value)} AS {dtype.simpleString()})"
+
+
+def _member(schema: T.StructType, key: str, values: list,
+            anti: bool = False) -> str:
+    """One filter term as SQL text: is the key in ``values`` (with
+    ``anti``: not in them)? A key names one column of ``schema`` or
+    several joined by ``,`` (then each value is a list); each literal
+    carries its column's type.
+
+    The term's generated code depends on neither the number nor the
+    values of its literals, so a filter compiled once serves every later
+    key set: Spark runs an ``IN`` list longer than ``_INSET_MIN`` as one
+    hash-set lookup but compiles a shorter one to one comparison per
+    value (and inlines primitive values), so a shorter list is an
+    ``array_contains`` over one array literal, which constant-folds to one
+    reference. A null key matches nothing, so an anti term keeps a
+    null-keyed row, as a left anti-join does (a bare ``NOT IN`` or ``NOT
+    array_contains`` reads null and would drop it)."""
+    names = key.split(",")
+    types = [schema[c].dataType for c in names]
+    if len(names) == 1:
+        values = [[v] for v in values if v is not None]
+    rows = [[_sql_lit(x, t) for x, t in zip(v, types)] for v in values]
+    if not rows:
+        return "true" if anti else "false"
+    if len(names) == 1:
+        col = f"`{key}`"
+        literals = [x for (x,) in rows]
+        null = f"{col} IS NULL OR "
+    else:
+        col = "(" + ", ".join(f"`{c}`" for c in names) + ")"
+        literals = [f"({', '.join(r)})" for r in rows]
+        null = ""
+    if len(rows) > _INSET_MIN:
+        term = f"{col} IN ({', '.join(literals)})"
+    elif len(names) == 1:
+        term = f"array_contains(array({', '.join(literals)}), {col})"
+    else:
+        structs = ", ".join(
+            "named_struct(" + ", ".join(
+                f"{_sql_str(c)}, {x}" for c, x in zip(names, r)) + ")"
+            for r in rows)
+        term = f"array_contains(array({structs}), struct{col})"
+    return f"({null}NOT {term})" if anti else term
+
+
+def _without(df: DataFrame, deletes: dict,
+             schema: T.StructType | None = None) -> DataFrame:
+    """``df`` (whose schema is ``schema``, when given) less every row
+    whose key is in ``deletes[key]`` (see :func:`_member`): one anti term
+    per key, all in one filter written as SQL text — parsing it is one
+    JVM call, where a ``Column`` per literal costs one each (0.44 s for
+    1,024 values)."""
+    schema = schema or df.schema
+    terms = [_member(schema, key, values, anti=True)
+             for key, values in deletes.items()]
     return df.filter(" AND ".join(terms)) if terms else df
 
 
-def _keys(delta: DataFrame, *weights: int) -> DataFrame:
-    """The keys of ``delta``'s rows weighted one of ``weights``, repeats
-    kept: a semi- or anti-join against them needs no ``distinct()``."""
-    return delta.filter(F.col("_mr_weight").isin(*weights)).select("_mr_key")
+def _isin(df: DataFrame, col: str, keys, anti: bool = False) -> DataFrame:
+    """``df``'s rows whose column ``col`` is in the key set ``keys`` (with
+    ``anti``: is not, a null ``col`` included).
+
+    A key set has two forms (see :meth:`IncrementalEngine.apply_changes`).
+    A Python list is one literal filter (:func:`_member`): it runs inside
+    the job that reads ``df``, where a broadcast is a job of its own under
+    adaptive execution, and it pushes down to the parquet scan. A
+    one-column frame — the form of a batch too large to collect — is a
+    broadcast semi- or anti-join."""
+    if isinstance(keys, DataFrame):
+        keys = F.broadcast(keys.toDF("_mr_keyset"))
+        return df.join(keys, df[col] == keys["_mr_keyset"],
+                       "left_anti" if anti else "left_semi")
+    return df.filter(_member(df.schema, col, keys, anti))
+
+
+def _beside(big: DataFrame, small: DataFrame) -> DataFrame:
+    """``big`` ∪ ``small`` in ``big``'s partitions, for a ``small`` that a
+    batch of literal key sets bounds: its rows join a partition of
+    ``big``, with no shuffle, instead of each of its own partitions
+    writing a parquet file for a few rows."""
+    n = big.rdd.getNumPartitions()
+    return big.unionByName(small, allowMissingColumns=True).coalesce(
+        max(n, 1))
+
+
+def _distinct(values) -> list:
+    """``values`` without repeats or nulls, in first-seen order."""
+    return [v for v in dict.fromkeys(values) if v is not None]
+
+
+@dataclass
+class _Handoff:
+    """What a target hands its consumers for one batch, every key set in
+    one form (see :func:`_isin`): the keys of its changed rows
+    (``dirty``), the keys that lost a row (``lost``, a subset), and for a
+    map target its freshly mapped rows (``inserts``; None for a reduce,
+    whose hand-off is keys only, all of them lost)."""
+
+    dirty: list | DataFrame
+    lost: list | DataFrame
+    inserts: DataFrame | None = None
+
+    @property
+    def literal(self) -> bool:
+        return isinstance(self.dirty, list)
 
 
 class ParquetStateStore:
@@ -205,9 +300,20 @@ class ParquetStateStore:
         self.root = root
         self.retain = retain
         self._state = os.path.join(root, "_STATE.json")
-        #: the open transaction's staged versions, None outside one
-        self._staged: dict | None = None
+        self._thread = threading.local()
+        #: held across a publish's read-merge-rename of the state file
+        self._publish = threading.Lock()
         os.makedirs(root, exist_ok=True)
+
+    @property
+    def _staged(self) -> dict | None:
+        """The staged versions of this thread's open transaction, None
+        outside one: another thread neither sees nor joins them."""
+        return getattr(self._thread, "staged", None)
+
+    @_staged.setter
+    def _staged(self, staged: dict | None) -> None:
+        self._thread.staged = staged
 
     def _dir(self, table: str) -> str:
         return os.path.join(self.root, table)
@@ -244,7 +350,7 @@ class ParquetStateStore:
 
     def _view(self, kind: str) -> dict:
         """The writer's view of ``kind``: committed entries overlaid by
-        the open transaction's staged ones."""
+        the staged ones of this thread's open transaction."""
         view, staged = self.committed()[kind], self._staged
         if staged is not None:
             view.update(staged[kind])
@@ -257,7 +363,9 @@ class ParquetStateStore:
         that changed. Outside a block each commit publishes at once. A
         block that raises publishes nothing; the next attempt overwrites
         its unpublished ``v{n}`` directories. Re-entrant: an inner block
-        joins the outer one."""
+        joins the outer one of the same thread. A transaction is the
+        thread's own: other threads read only published versions while it
+        is open, and their commits publish on their own."""
         if self._staged is not None:
             yield
             return
@@ -266,12 +374,13 @@ class ParquetStateStore:
             yield
         finally:
             self._staged = None
-        state = self.committed()
-        for kind in staged:
-            state[kind].update(staged[kind])
-        with open(self._state + ".tmp", "w") as f:
-            json.dump(state, f, sort_keys=True)
-        os.replace(self._state + ".tmp", self._state)
+        with self._publish:
+            state = self.committed()
+            for kind in staged:
+                state[kind].update(staged[kind])
+            with open(self._state + ".tmp", "w") as f:
+                json.dump(state, f, sort_keys=True)
+            os.replace(self._state + ".tmp", self._state)
         for table, v in staged["tables"].items():
             self._gc(table, keep=v)
 
@@ -303,14 +412,16 @@ class ParquetStateStore:
         if "files" not in manifest:
             return self.spark.read.schema(_schema(manifest)).parquet(path)
         paths = [os.path.join(self._dir(table), f) for f in manifest["files"]]
-        return _without(self.spark.read.schema(_schema(manifest))
-                        .parquet(*paths), manifest["deletes"])
+        schema = _schema(manifest)
+        return _without(self.spark.read.schema(schema).parquet(*paths),
+                        manifest["deletes"], schema)
 
     def overwrite(self, table: str, df: DataFrame,
-                  dirty_keys: DataFrame | None = None,
+                  dirty_keys=None,
                   inserts: DataFrame | None = None) -> None:
         """Commit a new snapshot. ``dirty_keys`` (the keys this batch may
-        have touched) is a hint for stores that can commit less than the
+        have touched, a key set: a list of keys or a one-column frame) is
+        a hint for stores that can commit less than the
         full table; ``inserts``, when given, asserts the batch was PURE
         APPEND (``df`` equals the previous snapshot plus exactly these
         rows — no row was modified or removed), letting a store commit
@@ -338,7 +449,7 @@ class ParquetStateStore:
         Folds the table into one :meth:`overwrite` instead when the merge
         retypes a recorded column (not every older file reads as every
         wider type), when the table would hold more than ``COMPACT_AFTER``
-        delta file sets or ``MAX_DELETES`` delete values, or when its
+        delta file sets or ``MAX_LITERALS`` delete values, or when its
         current version is not a delta or snapshot record. A deleted value
         must never be written again by a later delta: the delete sets
         apply to every file set."""
@@ -364,7 +475,7 @@ class ParquetStateStore:
             for key, vals in deletes.items():
                 dels[key] = dels.get(key, []) + vals
             if (len(files) <= COMPACT_AFTER + 1
-                    and sum(map(len, dels.values())) <= MAX_DELETES
+                    and sum(map(len, dels.values())) <= MAX_LITERALS
                     and all(f.dataType.simpleString()
                             == schema[f.name].dataType.simpleString()
                             for f in recorded.fields)):
@@ -494,8 +605,19 @@ class BucketedParquetStateStore(ParquetStateStore):
     def _bucket_expr(self):
         return F.pmod(F.hash(F.col(self.key_col)), F.lit(self.buckets))
 
+    def _buckets_of(self, keys, dtype: T.DataType) -> set[int]:
+        """The buckets a key set (a list of ``dtype`` values, or a frame
+        with ``key_col``) hashes into: one tiny Spark job, with the exact
+        hash the writer used, so Python and JVM hashing can never drift."""
+        if isinstance(keys, list):
+            keys = self.spark.createDataFrame(
+                [(k,) for k in keys],
+                T.StructType([T.StructField(self.key_col, dtype)]))
+        return {r[0] for r in keys.select(
+            self._bucket_expr().alias("b")).distinct().collect()}
+
     def overwrite(self, table: str, df: DataFrame,
-                  dirty_keys: DataFrame | None = None,
+                  dirty_keys=None,
                   inserts: DataFrame | None = None) -> None:
         if self.key_col not in df.columns:
             return super().overwrite(table, df)
@@ -513,8 +635,8 @@ class BucketedParquetStateStore(ParquetStateStore):
             data, dirty_buckets = df, None          # full rewrite
         else:
             # ≤B distinct bucket ids — a metadata-sized collect by design
-            dirty_buckets = {r[0] for r in dirty_keys.select(
-                self._bucket_expr().alias("b")).distinct().collect()}
+            dirty_buckets = self._buckets_of(
+                dirty_keys, df.schema[self.key_col].dataType)
             if inserts is not None:
                 # PURE-APPEND commit (the O(delta) hot path for insert-only
                 # CDC batches): write only the inserted rows; untouched
@@ -586,14 +708,10 @@ class BucketedParquetStateStore(ParquetStateStore):
         buckets = manifest["buckets"]
         schema = _schema(manifest)
         if keys is not None:
-            kt = T.StructType([T.StructField(
-                self.key_col, schema[self.key_col].dataType)])
-            wanted = {str(r["b"]) for r in self.spark.createDataFrame(
-                [(k,) for k in keys], kt)
-                .select(self._bucket_expr().alias("b")).distinct()
-                .collect()}
+            wanted = self._buckets_of(list(keys),
+                                      schema[self.key_col].dataType)
             buckets = {b: vers for b, vers in buckets.items()
-                       if b in wanted}
+                       if int(b) in wanted}
         paths = [os.path.join(self._dir(table), f"v{ver}", f"_bucket={b}")
                  for b, vers in buckets.items()
                  for ver in vers]
@@ -769,14 +887,15 @@ class IncrementalEngine:
                     self.resync(target)
                 else:
                     for i in range(chunks):
-                        # the slice's stored rows, all retracted and none
-                        # inserted: each slice key recomputes its full group
-                        delta = (self.store.read(src)
-                                 .filter(F.pmod(F.xxhash64("_mr_key"),
-                                                F.lit(chunks)) == F.lit(i))
-                                 .withColumn("_mr_weight", F.lit(-1)))
+                        # the slice's stored keys, all lost and none
+                        # gained: each slice key recomputes its full group
+                        keys = (self.store.read(src)
+                                .filter(F.pmod(F.xxhash64("_mr_key"),
+                                               F.lit(chunks)) == F.lit(i))
+                                .select("_mr_key"))
                         with _held_frames() as held:
-                            self._apply_reduce(target, sources, delta, held)
+                            self._apply_reduce(target, sources,
+                                               _Handoff(keys, keys), held)
                         drain()
                 self.store.set_handler_version(target, src, spec.version)
             elif any(s in self.engine.config for s in sources):
@@ -850,14 +969,21 @@ class IncrementalEngine:
         from that target's dirty keys of this batch — per-edge dirty
         propagation, so a 5-level pipeline stays O(delta) end to end. For
         strict (reference-shape) configs the topo order degenerates to
-        "map targets first, then reduce targets". The batch is reduced to
-        its last change per ``(resource_type, resource_id)`` once, cached
-        for every map target. Each target's hand-off to its consumers —
-        one signed delta frame, see :meth:`_apply_map` and
-        :meth:`_apply_reduce` — stays in memory for the batch; a map
-        target that hands nothing on (no map row changed) skips its
-        reduces. The batch is one store transaction: a batch that raises
-        leaves every table at its pre-batch version for the replay.
+        "map targets first, then reduce targets".
+
+        The batch is reduced to its last change per ``(resource_type,
+        resource_id)`` once and collected once, at most ``MAX_LITERALS +
+        1`` rows of it. That bound picks the form of every key set the
+        batch derives (:func:`_isin`): a batch of at most ``MAX_LITERALS``
+        changed ids — a trickle of notifications, the reference's own
+        traffic — stays a Python list, and so does each key set after it,
+        each a literal filter; a larger one is cached for every map target
+        and its key sets stay frames, each a broadcast join. Each target's
+        hand-off to its consumers (see :meth:`_apply_map` and
+        :meth:`_apply_reduce`) stays in memory for the batch; a map target
+        that hands nothing on (no map row changed) skips its reduces. The
+        batch is one store transaction: a batch that raises leaves every
+        table at its pre-batch version for the replay.
         """
         if "seq" not in changes.columns:
             # without an order column "which change wins" would depend on
@@ -866,14 +992,18 @@ class IncrementalEngine:
                 "change batch lacks a 'seq' ordering column; "
                 "last-change-wins needs a deterministic order "
                 "(see notifications() / NOTIFICATION_SCHEMA)")
-        handoff: dict[str, DataFrame] = {}
+        handoff: dict[str, _Handoff] = {}
         with _held_frames() as held, self.store.transaction():
             # final change per resource id — replay-order equivalent (see
-            # class doc); one aggregate, cached, serves every map target
+            # class doc)
             changes = (changes.groupBy("resource_type", "resource_id")
                        .agg(F.max_by("resource_change", "seq")
                             .alias("change")))
-            held.append(changes.cache())
+            rows = changes.limit(MAX_LITERALS + 1).collect()
+            if len(rows) <= MAX_LITERALS:
+                changes = [tuple(r) for r in rows]
+            else:
+                held.append(changes.cache())
             for target in self._topo_targets():
                 sources = self.engine.config[target]
                 if isinstance(next(iter(sources.values())), REDUCE_SPECS):
@@ -885,11 +1015,20 @@ class IncrementalEngine:
                 eff = changes
                 for src in sources:
                     if src in handoff:
-                        eff = eff.unionByName(self._derived_changes(
-                            src, handoff[src]))
-                delta = self._apply_map(target, sources, eff, held)
-                if delta is not None:
-                    handoff[target] = delta
+                        eff = self._concat(eff, self._derived_changes(
+                            src, handoff[src].dirty))
+                out = self._apply_map(target, sources, eff, held)
+                if out is not None:
+                    handoff[target] = out
+
+    def _concat(self, a, b):
+        """Two change sets as one, a list while both are lists."""
+        if isinstance(a, list) and isinstance(b, list):
+            return a + b
+        a, b = (x if isinstance(x, DataFrame) else
+                self.catalog.spark.createDataFrame(x, _CHANGE_SCHEMA)
+                for x in (a, b))
+        return a.unionByName(b)
 
     def _topo_targets(self) -> list[str]:
         """Config targets in dependency order (sources before consumers),
@@ -911,20 +1050,26 @@ class IncrementalEngine:
             visit(t)
         return out
 
-    def _derived_changes(self, source: str, delta: DataFrame) -> DataFrame:
+    def _derived_changes(self, source: str, dirty):
         """Synthetic notifications for a DERIVED source, in the shape
         :meth:`apply_changes` gives a batch after last-change-wins: each
-        key of the ``delta`` its own apply returned this batch, once,
-        with ``change`` ``updated`` (key still in the stored table) or
-        ``deleted`` (key vanished — empty-group elimination upstream).
-        The stored table is semi-joined with the batch's keys before
-        anything aggregates it, so the liveness check is batch-sized."""
-        keys = _keys(delta, 1, -1)
-        cur = (self.store.read(source)
-               .select(F.col("_mr_key").cast("string").alias("_mr_key"))
-               .join(F.broadcast(keys), "_mr_key", "left_semi").distinct())
-        dirty = keys.distinct()
-        flagged = dirty.join(
+        of the ``dirty`` keys its own apply handed on this batch (a key
+        set: a list, or a frame whose ``_mr_key`` column holds them),
+        once, with ``change`` ``updated`` (key still in the stored table)
+        or ``deleted`` (key vanished — empty-group elimination upstream).
+        The stored table is filtered by the batch's keys before anything
+        aggregates it, so the liveness check is batch-sized; a list's
+        check is one collect, and its notifications are a list."""
+        cur = self.store.read(
+            source, keys=dirty if isinstance(dirty, list) else None
+        ).select("_mr_key")
+        if isinstance(dirty, list):
+            live = {k for (k,) in _isin(cur, "_mr_key", dirty).collect()}
+            return [(source, str(k), UPDATED if k in live else DELETED)
+                    for k in dirty]
+        keys = dirty.select("_mr_key")
+        cur = _isin(cur, "_mr_key", keys).distinct()
+        flagged = keys.distinct().join(
             cur.withColumn("_live", F.lit(True)), "_mr_key", "left")
         return flagged.select(
             F.lit(source).alias("resource_type"),
@@ -939,71 +1084,121 @@ class IncrementalEngine:
             return self.store.read(source)
         return self.catalog.get(source)
 
-    def _apply_map(self, target: str, sources: dict, changes: DataFrame,
-                   held: list) -> DataFrame | None:
+    def _apply_map(self, target: str, sources: dict, changes,
+                   held: list) -> _Handoff | None:
         """T2 upsert + T3 delete for one map target.
 
         ``changes`` holds one ``(resource_type, resource_id, change)`` row
-        per changed id (see :meth:`apply_changes`). Commits the new map
-        snapshot and returns this batch's hand-off to the target's
-        consumers: ONE signed delta frame — the map columns plus
-        ``_mr_weight``, +1 for each freshly mapped row, −1 for each old
-        row of a changed id, and 0 for an upserted id missing from its
-        source (a dead letter; only ``_mr_source_type``/``_mr_source_id``
-        set). The frame is cached into ``held`` with the partitioning of
-        the scans it is built from; its readers get it coalesced to one
-        task per core. One Spark action counts its rows per weight: a −1
-        row means the batch is not insert-only, a 0 row that dead letters
-        are due, and no ±1 row that the map table is unchanged — then
+        per changed id (see :meth:`apply_changes`): a list, or a frame
+        for a batch too large to collect. Commits the new map snapshot
+        and returns this batch's hand-off to the target's consumers, in
+        the same key-set form. It is built from ONE signed delta frame —
+        the map columns plus ``_mr_weight``, +1 for each freshly mapped
+        row, −1 for each old row of a changed id, and 0 for an upserted
+        id missing from its source (a dead letter; with lists, the delta
+        carries each id found in a source at a null weight instead, and
+        the dead letters are the upserted ids it lacks) — cached into
+        ``held`` with the partitioning of the scans it is built from, and
+        read coalesced to one task per core. A −1 row means the batch is not
+        insert-only, a dead letter that the dead-letter table needs a
+        commit, and no ±1 row that the map table is unchanged — then
         nothing is committed and None is returned, so consumers skip the
-        batch. Everything is joins:
-        - surviving rows = old anti-join changed ids (per source type)
-        - fresh rows     = map(source semi-join upserted ids)
-        A deleted id's rows simply go (T3, see the module docstring). On
-        Delta this whole function is one ``MERGE``; the shape (broadcast
-        the small dirty-id set against the big map table) is identical.
+        batch. Each part of the delta is a key-set filter (:func:`_isin`)
+        of a scan:
+        - surviving rows = old less changed ids (per source type)
+        - retracted rows = old rows of changed ids
+        - fresh rows     = map(source rows of upserted ids)
+        A deleted id's rows simply go (T3, see the module docstring).
+
+        With lists, every filter is a literal, so the delta has no join
+        and one Spark job collects its key columns: the weights, the
+        dirty and lost keys of the hand-off and the dead letters need no
+        other job, and the fresh rows are written beside the surviving
+        ones, in their partitions (:func:`_beside`). With frames the
+        filters broadcast-join and one more action counts the delta's
+        rows per weight. On Delta this whole function is one ``MERGE``;
+        the shape (the small changed-id set against the big map table)
+        is identical.
         """
+        literal = isinstance(changes, list)
         old = self.store.read(target) if self.store.exists(target) else None
-        survivors, parts = [], []
+        survivors, parts, upserts = [], [], {}
         for source, spec in sources.items():
-            ch = changes.filter(F.col("resource_type") == source)
-            upserted = ch.filter(F.col("change") != DELETED).select(
-                "resource_id")
+            if literal:
+                ch = [(rid, c) for t, rid, c in changes if t == source]
+                changed = _distinct(rid for rid, _ in ch)
+                upserted = _distinct(rid for rid, c in ch if c != DELETED)
+                upserts[source] = upserted
+            else:
+                ch = changes.filter(F.col("resource_type") == source)
+                changed = ch.select("resource_id")
+                upserted = ch.filter(F.col("change") != DELETED).select(
+                    "resource_id")
             src_df = self._source_df(source)
             id_col = self.engine._id_col(source)
-            hit = src_df.join(
-                F.broadcast(upserted),
-                src_df[id_col].cast("string") == upserted["resource_id"],
-                "left_semi")
-            parts.append(self.engine._map_one(source, spec, hit)
+            hit = _isin(src_df.withColumn(
+                "_mr_rid", src_df[id_col].cast("string")), "_mr_rid", upserted)
+            parts.append(self.engine._map_one(source, spec,
+                                              hit.drop("_mr_rid"))
                          .withColumn("_mr_weight", F.lit(1)))
             if old is not None:
                 mine = old.filter(F.col("_mr_source_type") == source)
-                changed = F.broadcast(ch.select("resource_id"))
-                on = mine["_mr_source_id"] == changed["resource_id"]
-                survivors.append(mine.join(changed, on, "left_anti"))
-                parts.append(mine.join(changed, on, "left_semi")
+                survivors.append(_isin(mine, "_mr_source_id", changed,
+                                       anti=True))
+                parts.append(_isin(mine, "_mr_source_id", changed)
                              .withColumn("_mr_weight", F.lit(-1)))
             # T11/T6 dead-letter: an upsert notification whose resource is
             # absent from the source (the reference's not-yet-replicated 404,
             # processor.py:346-355, retried then dropped) is recorded rather
             # than silently producing nothing. Probed against the ids the
             # batch found, not the source's whole id column; not inferred
-            # from the +1 rows, which a ``where=`` map may drop
-            found = hit.select(hit[id_col].cast("string").alias("resource_id"))
-            parts.append(upserted.join(
-                F.broadcast(found), "resource_id", "left_anti").select(
-                    F.lit(source).alias("_mr_source_type"),
-                    F.col("resource_id").alias("_mr_source_id"),
-                    F.lit(0).alias("_mr_weight")))
+            # from the +1 rows, which a ``where=`` map may drop. A list's
+            # found ids ride in the delta under a null weight
+            found = hit.select(F.lit(source).alias("_mr_source_type"),
+                               F.col("_mr_rid").alias("_mr_source_id"))
+            if literal:
+                parts.append(found.withColumn("_mr_weight",
+                                              F.lit(None).cast("int")))
+            else:
+                parts.append(_isin(upserted, "resource_id",
+                                   found.select("_mr_source_id"), anti=True)
+                             .select(F.lit(source).alias("_mr_source_type"),
+                                     F.col("resource_id")
+                                     .alias("_mr_source_id"),
+                                     F.lit(0).alias("_mr_weight")))
         delta = _union(parts)
         held.append(delta.cache())
-        weights = dict(delta.groupBy("_mr_weight").count().collect())
+        if literal:
+            rows = delta.select("_mr_weight", "_mr_key", "_mr_source_type",
+                                "_mr_source_id").collect()
+            weights = {w for w, *_ in rows if w is not None}
+            found = {(t, i) for w, _, t, i in rows if w is None}
+            dead = [(t, i) for t, ids in upserts.items() for i in ids
+                    if (t, i) not in found] or None
+        else:
+            weights = {w for w, _ in
+                       delta.groupBy("_mr_weight").count().collect()}
+            dead = delta.filter(F.col("_mr_weight") == 0).select(
+                F.col("_mr_source_type").alias("resource_type"),
+                F.col("_mr_source_id").alias("resource_id")) \
+                if 0 in weights else None
         delta = delta.coalesce(
             self.catalog.spark.sparkContext.defaultParallelism)
-        rows_changed = bool(weights.keys() & {1, -1})
+        if literal:
+            dirty = _distinct(k for w, k, *_ in rows if w in (1, -1))
+            lost = _distinct(k for w, k, *_ in rows if w == -1)
+            if len(dirty) > MAX_LITERALS:
+                # a map that fans out past the bound: key sets as frames
+                dirty, lost = (self.catalog.spark.createDataFrame(
+                    [(k,) for k in keys], "_mr_key string")
+                    for keys in (dirty, lost))
+        else:
+            dirty = delta.filter(F.col("_mr_weight").isin(1, -1)).select(
+                "_mr_key")
+            lost = delta.filter(F.col("_mr_weight") == -1).select("_mr_key")
+        inserts = delta.filter(F.col("_mr_weight") == 1).drop("_mr_weight")
+        rows_changed = bool(weights & {1, -1})
         if rows_changed:
-            inserts = delta.filter(F.col("_mr_weight") == 1).drop("_mr_weight")
             # PURE-APPEND detection: no existing map rows under the changed
             # ids ⇒ new = old ∪ inserts exactly, and a bucketed store may
             # commit just those rows (O(delta) even when a hot key's group
@@ -1011,27 +1206,33 @@ class IncrementalEngine:
             # old and new lives under a dirty key (survivors only lose
             # dirty-source rows; inserts carry dirty keys), so a bucketed
             # store may commit dirty buckets only.
+            written = (_beside(_union(survivors), inserts)
+                       if literal and survivors
+                       else _union(survivors + [inserts]))
             self.store.overwrite(
-                target, _union(survivors + [inserts]),
-                dirty_keys=_keys(delta, 1, -1),
+                target, written, dirty_keys=dirty,
                 inserts=inserts if old is not None and -1 not in weights
                 else None)
-        if 0 in weights:
-            self._record_dead_letters(target, delta)
-        return delta if rows_changed else None
+        if dead is not None:
+            self._record_dead_letters(target, dead)
+        return _Handoff(dirty, lost, inserts) if rows_changed else None
 
-    def _apply_reduce(self, target: str, sources: dict, delta: DataFrame,
-                      held: list) -> DataFrame:
+    def _apply_reduce(self, target: str, sources: dict, handoff: _Handoff,
+                      held: list) -> _Handoff:
         """T4/T5 dirty-key group recompute + A8 empty-group delete.
 
         new_reduce = old_reduce (keys not dirty)
                    ∪ recompute(map ⋉ ready dirty_keys)  — dropped groups
                                                            simply emit no row
-        ``delta`` is the source's hand-off (:meth:`_apply_map`): the dirty
-        keys are those of its ±1 rows, the lost keys those of its −1 rows,
-        both with repeats (semi- and anti-joins need no ``distinct()``).
-        Returns the dirty keys as a keys-only delta, all weighted −1 — the
-        hand-off to this reduce's own consumers.
+        ``handoff`` is the source's (:meth:`_apply_map`): the dirty keys
+        are those of its changed rows, the lost keys those of its
+        retracted rows, and every step is a key-set filter in the form
+        they come in (:func:`_isin`) — with lists, the reduce's one
+        shuffle, the broadcast of the prior values it merges into, and
+        the write are its only Spark jobs, and the recomputed rows are
+        written beside the kept ones (:func:`_beside`). Returns the ready
+        dirty keys, all of them lost — the hand-off to this reduce's own
+        consumers.
 
         **Version barrier (T7)**: a dirty key whose live map rows mix
         handler versions — possible mid-:meth:`resync_interleaved`, when a
@@ -1049,8 +1250,8 @@ class IncrementalEngine:
         file, with no Spark job.
         """
         ((src, spec),) = sources.items()
-        map_df = self.store.read(src)
-        dirty, lost = _keys(delta, 1, -1), _keys(delta, -1)
+        dirty, lost, literal = handoff.dirty, handoff.lost, handoff.literal
+        map_df = self.store.read(src, keys=dirty if literal else None)
         # version-barrier postponement applies to map-table sources; a
         # reduce-of-reduce source has no per-row handler versions (its
         # atomic overwrite IS the barrier)
@@ -1062,16 +1263,20 @@ class IncrementalEngine:
             ver_map = F.create_map(*[
                 x for st, mspec in mspecs
                 for x in (F.lit(st), F.lit(mspec.version))])
-            stale_keys = (map_df.join(F.broadcast(dirty), "_mr_key",
-                                      "left_semi")
-                          .filter(F.col("_mr_version")
-                                  != ver_map[F.col("_mr_source_type")])
-                          .select("_mr_key").distinct())
-            dirty = dirty.join(F.broadcast(stale_keys), "_mr_key",
-                               "left_anti")
-            # cached: the joins below and this reduce's consumers reuse it
-            held.append(dirty.cache())
-            lost = lost.join(F.broadcast(dirty), "_mr_key", "left_semi")
+            stale = (_isin(map_df, "_mr_key", dirty)
+                     .filter(F.col("_mr_version")
+                             != ver_map[F.col("_mr_source_type")])
+                     .select("_mr_key"))
+            if literal:
+                stale = {k for (k,) in stale.collect()}
+                dirty = [k for k in dirty if k not in stale]
+                lost = [k for k in lost if k not in stale]
+            else:
+                dirty = _isin(dirty, "_mr_key", stale.distinct(), anti=True)
+                # cached: the filters below and this reduce's consumers
+                # reuse it
+                held.append(dirty.cache())
+                lost = _isin(lost, "_mr_key", dirty)
         old = self.store.read(target) if self.store.exists(target) else None
 
         # Algebraic IVM (beyond the reference's always-full-group recompute,
@@ -1088,13 +1293,16 @@ class IncrementalEngine:
         merges = getattr(spec, "merge", None)
         if (merges and set(merges) == set(spec.aggs) and old is not None
                 and from_map):
-            gained = F.broadcast(dirty.join(F.broadcast(lost), "_mr_key",
-                                            "left_anti"))
-            inserts = delta.filter(F.col("_mr_weight") == 1).drop("_mr_weight")
-            reduced = self.engine.reduce_table(target, _union([
-                map_df.join(F.broadcast(lost), "_mr_key", "left_semi"),
-                inserts.join(gained, "_mr_key", "left_semi")]))
-            prior = (old.join(gained, "_mr_key", "left_semi")
+            if literal:
+                gone = set(lost)
+                gained = [k for k in dirty if k not in gone]
+            else:
+                gained = _isin(dirty, "_mr_key", lost, anti=True)
+            rows = [_isin(map_df, "_mr_key", lost)]
+            if handoff.inserts is not None:
+                rows.append(_isin(handoff.inserts, "_mr_key", gained))
+            reduced = self.engine.reduce_table(target, _union(rows))
+            prior = (_isin(old, "_mr_key", gained)
                      .select("_mr_key",
                              *[F.col(a).alias(f"__old_{a}") for a in merges])
                      .withColumn("__has_old", F.lit(True)))
@@ -1106,24 +1314,25 @@ class IncrementalEngine:
                   .otherwise(fn(F.col(f"__old_{a}"), F.col(a))).alias(a)
                   for a, fn in merges.items()])
         else:
-            new = self.engine.reduce_table(target, map_df.join(
-                F.broadcast(dirty), "_mr_key", "left_semi"))
+            new = self.engine.reduce_table(
+                target, _isin(map_df, "_mr_key", dirty))
         if old is not None:
-            keep = old.join(F.broadcast(dirty), "_mr_key", "left_anti")
-            new = keep.unionByName(new, allowMissingColumns=True)
+            keep = _isin(old, "_mr_key", dirty, anti=True)
+            new = _beside(keep, new) if literal else keep.unionByName(
+                new, allowMissingColumns=True)
         self.store.overwrite(target, new, dirty_keys=dirty)
-        return dirty.withColumn("_mr_weight", F.lit(-1))
+        return _Handoff(dirty, dirty)
 
-    def _record_dead_letters(self, target: str, delta: DataFrame) -> None:
+    def _record_dead_letters(self, target: str, dead) -> None:
         """Append (set-union) the missing-resource notifications of every
-        source — the weight-0 rows of ``target``'s batch ``delta`` — to
-        ``{target}__dead_letter`` in one commit: the replacement for the
-        reference's drop-after-3-retries (``processor.py:261-280``): nothing
-        is silently lost, and an operator can replay the table once the
-        source catches up."""
-        dl = delta.filter(F.col("_mr_weight") == 0).select(
-            F.col("_mr_source_type").alias("resource_type"),
-            F.col("_mr_source_id").alias("resource_id"))
+        source — ``dead``, ``(resource_type, resource_id)`` pairs as a
+        list or a frame — to ``{target}__dead_letter`` in one commit: the
+        replacement for the reference's drop-after-3-retries
+        (``processor.py:261-280``): nothing is silently lost, and an
+        operator can replay the table once the source catches up."""
+        dl = dead if isinstance(dead, DataFrame) else \
+            self.catalog.spark.createDataFrame(
+                dead, "resource_type string, resource_id string")
         table = target + "__dead_letter"
         if self.store.exists(table):
             dl = self.store.read(table).unionByName(dl).distinct()

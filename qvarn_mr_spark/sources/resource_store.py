@@ -22,7 +22,7 @@ comes back: ``create`` draws fresh ids, an update's row gets a fresh
 revision, and a ``backfill`` that reuses a deleted id rewrites the
 table, as ``migrate`` does, which clears the delete sets. The store also
 folds a table into one snapshot once it holds more than
-``COMPACT_AFTER`` delta files or ``MAX_DELETES`` delete values.
+``COMPACT_AFTER`` delta files or ``MAX_LITERALS`` delete values.
 Notifications append to a JSON-lines feed directory that
 :func:`qvarn_mr_spark.streaming.read_change_feed` consumes — together
 they close the reference's full loop: write → notification → incremental
@@ -253,10 +253,12 @@ class ResourceStore:
         revision (optimistic check as in :meth:`update`, BEFORE the sub
         write, so a rejected put leaves no trace) in the same store
         transaction as the sub write, and emits ``updated`` for the
-        parent."""
+        parent. A ``None`` field is left out, so it reads null (its type
+        could not be inferred)."""
+        row = {k: x for k, x in doc.items() if x is not None}
         return self._put_side(
             resource_type, rid, revision, self._sub_table(resource_type, sub),
-            self.spark.createDataFrame([{**doc, "id": rid}]))
+            self.spark.createDataFrame([{**row, "id": rid}]))
 
     def get_subresource(self, resource_type: str, rid: str,
                         sub: str) -> dict | None:

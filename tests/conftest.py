@@ -16,6 +16,26 @@ def spark():
     s.stop()
 
 
+@pytest.fixture
+def frame_key_sets(monkeypatch):
+    """Make every incremental apply keep its key sets as broadcast frames,
+    the form of a batch too large to collect: no batch fits a bound of
+    0 changed ids."""
+    from qvarn_mr_spark.operators import incremental
+
+    monkeypatch.setattr(incremental, "MAX_LITERALS", 0)
+
+
+@pytest.fixture(params=["literal", "frame"])
+def key_sets(request):
+    """Run a test under both key-set forms of an incremental apply: the
+    literal filters a small batch takes (every test batch is small), and
+    the broadcast frames of a large one."""
+    if request.param == "frame":
+        request.getfixturevalue("frame_key_sets")
+    return request.param
+
+
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 

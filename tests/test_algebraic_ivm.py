@@ -191,7 +191,8 @@ def _sums(df):
     return {r["_mr_key"]: r["_mr_value"] for r in df.collect()}
 
 
-def test_chunked_resync_of_algebraic_reduce_converges(spark, tmp_path):
+def test_chunked_resync_of_algebraic_reduce_converges(spark, tmp_path,
+                                                      key_sets):
     """A reduce-handler bump resyncs an algebraic reduce slice by slice:
     each slice reaches the reduce as its stored map rows, all retracted
     and none inserted, so every slice key recomputes its whole group

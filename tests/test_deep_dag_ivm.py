@@ -108,7 +108,7 @@ def test_derived_change_liveness_is_batch_sized(spark, tmp_path):
 
 
 @pytest.mark.sweep
-def test_deep_dag_lifecycle_matches_recompute(spark, tmp_path):
+def test_deep_dag_lifecycle_matches_recompute(spark, tmp_path, key_sets):
     cat, eng, inc, set_source = _setup(spark, tmp_path)
     rows = [("o1", 1), ("o2", 1), ("o3", 2)]
     set_source(rows)
@@ -164,8 +164,9 @@ def test_deep_dag_untouched_keys_stay_clean(spark, tmp_path):
 
     def hooked(table, df, **kw):
         if table == "hist__map":
-            captured.append({r["_mr_key"]
-                             for r in kw["dirty_keys"].collect()})
+            keys = kw["dirty_keys"]
+            captured.append(set(keys) if isinstance(keys, list) else
+                            {r["_mr_key"] for r in keys.collect()})
         orig(table, df, **kw)
 
     inc.store.overwrite = hooked

@@ -28,6 +28,11 @@ MAP_COLUMNS = ["_mr_key", "_mr_value", "_mr_source_id", "_mr_source_type",
 
 @pytest.fixture(params=["plain", "bucketed"])
 def setup(spark, tmp_path, request):
+    """The store kind, optionally suffixed ``-frame`` to apply with
+    broadcast key-set frames (see ``BOTH_FORMS``)."""
+    kind, _, form = request.param.partition("-")
+    if form == "frame":
+        request.getfixturevalue("frame_key_sets")
     cat = Catalog(spark)
 
     def set_source(rows):
@@ -41,13 +46,19 @@ def setup(spark, tmp_path, request):
         "source__map": {"source": map_item("key", "value")},
         "sum_target": {"source__map": reduce_agg(F.sum)},
     })
-    if request.param == "bucketed":
+    if kind == "bucketed":
         store = BucketedParquetStateStore(spark, str(tmp_path / "state"),
                                           buckets=8)
     else:
         store = ParquetStateStore(spark, str(tmp_path / "state"))
     inc = IncrementalEngine(eng, store)
     return spark, cat, inc, set_source
+
+#: Run a ``setup`` test on both stores under both key-set forms; the
+#: literal form keeps the store's own test id
+BOTH_FORMS = pytest.mark.parametrize(
+    "setup", ["plain", "bucketed", "plain-frame", "bucketed-frame"],
+    indirect=True)
 
 
 def read_sums(inc):
@@ -174,6 +185,7 @@ def test_resync_interleaved_map_chunks_and_drift(setup):
 
 
 @pytest.mark.sweep
+@BOTH_FORMS
 def test_version_barrier_postpones_half_synced_keys(setup):
     """Reference conformance (test_processor.py:160-232): while a map
     handler upgrade is mid-backfill, a key whose live map rows mix handler
@@ -206,6 +218,7 @@ def test_version_barrier_postpones_half_synced_keys(setup):
     assert old_val in seen                          # postponement observed
 
 
+@BOTH_FORMS
 def test_version_barrier_holds_a_half_synced_key_until_resync(setup):
     """Fast sibling of the sweep above: with the map handler version
     bumped in the config but not yet resynced, an update re-maps one row
@@ -240,6 +253,7 @@ def test_multiple_changes_same_id_in_batch(setup):
     assert read_sums(inc) == {"1": 3}
 
 
+@BOTH_FORMS
 def test_dead_letter_replay_converges(setup):
     """T6/T11 lossless path: a notification that precedes its resource's
     visibility is dead-lettered, then replayed once the source catches up —
@@ -272,6 +286,7 @@ def test_dead_letter_replay_converges(setup):
     assert dl == {"ghost"}          # still-missing entry stays queued
 
 
+@BOTH_FORMS
 def test_dead_letter_probe_keeps_rows_a_where_map_drops(setup):
     """A map with ``where=`` drops a row that exists; an upsert of that
     row is no dead letter. Only the id missing from the source is
@@ -290,7 +305,8 @@ def test_dead_letter_probe_keeps_rows_a_where_map_drops(setup):
                               for r in want.collect()} == {"1": 2}
 
 
-def test_dead_letters_of_every_source_commit_once(spark, tmp_path):
+def test_dead_letters_of_every_source_commit_once(spark, tmp_path,
+                                                 key_sets):
     """A map target with two sources, one batch in which each source has
     an upserted id that is missing: both ids are dead-lettered under
     their own source type by ONE commit of the dead-letter table, and no
@@ -381,6 +397,49 @@ def test_store_versioning(spark, tmp_path):
     store.overwrite("t", spark.createDataFrame([Row(a=2)]))
     assert store.version("t") == 2
     assert [r["a"] for r in store.read("t").collect()] == [2]
+
+
+def test_open_transaction_is_its_own_threads(spark, tmp_path):
+    """While one thread holds a transaction open, another thread reads
+    only published versions, and its own transaction publishes on its
+    own; the open transaction then raises and publishes nothing."""
+    import threading
+
+    store = ParquetStateStore(spark, str(tmp_path / "s"))
+    staged, read = threading.Event(), threading.Event()
+    seen = {}
+
+    def writer():
+        try:
+            with store.transaction():
+                store.overwrite("t", spark.createDataFrame([Row(a=1)]))
+                staged.set()
+                read.wait(60)
+                raise RuntimeError("abort")
+        except RuntimeError:
+            pass
+
+    def reader():
+        staged.wait(60)
+        try:
+            seen["version"] = store.version("t")
+            seen["exists"] = store.exists("t")
+            with store.transaction():
+                store.set_handler_version("r", "s", 2)
+            seen["published"] = store.committed()["handlers"]
+        finally:
+            read.set()
+
+    threads = [threading.Thread(target=writer), threading.Thread(target=reader)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(120)
+    assert seen == {"version": None, "exists": False,
+                    "published": {"r\x00s": 2}}
+    assert store.committed()["tables"] == {} and store.version("t") is None
+    with pytest.raises(KeyError):
+        store.read("t")
 
 
 def test_incremental_join_view_lifecycle(spark, tmp_path):
@@ -763,12 +822,16 @@ def test_empty_batch_publishes_nothing(setup):
     assert read_sums(inc) == {"1": 6}
 
 
-def test_small_apply_job_budget(spark, tmp_path):
+def test_small_apply_job_budget(spark, tmp_path, key_sets):
     """One mixed create/update/delete batch on an algebraic (merge)
     view whose handler versions match the stored ones: the change batch
-    is deduplicated once, the reduce holds no dirty-key set and skips
-    the version-barrier scan, and merges and recomputes in one reduce.
-    The apply stays within its job budget, and the view equals a full
+    is deduplicated and collected once, the reduce skips the
+    version-barrier scan, and merges and recomputes in one reduce. With
+    literal key sets the apply is 7 jobs: the batch's aggregate and its
+    collect, one collect of the map delta, the map write, and the
+    reduce's shuffle, prior-value broadcast and write (every key-set
+    broadcast of the frame form is a job of its own). The apply stays
+    within its form's job budget, and the view equals a full
     recompute."""
     from qvarn_mr_spark.operators.mapreduce import MERGE_ADD
 
@@ -794,7 +857,192 @@ def test_small_apply_job_budget(spark, tmp_path):
     n, _ = _jobs(spark, lambda: inc.apply_changes(notifications(spark, [
         ("source", "created", "10"), ("source", "created", "11"),
         ("source", "updated", "2"), ("source", "deleted", "3")])))
-    assert n <= 23, n
+    assert n <= {"literal": 7, "frame": 25}[key_sets], n
+    want = {r["_mr_key"]: (r["s"], r["n"])
+            for r in eng.recompute_all()["v"].collect()}
+    assert {r["_mr_key"]: (r["s"], r["n"])
+            for r in inc.read("v").collect()} == want
+
+
+# -- key sets: literal filters and broadcast frames ---------------------------
+
+@pytest.mark.parametrize("n", [3, 15])
+def test_key_set_filter_forms_agree(spark, n):
+    """A key set filters alike as literals and as a broadcast frame, below
+    and above the IN-to-hash-set threshold: a long column takes long
+    literals, a string key keeps its ``'`` and ``\\``, a null key in the
+    set matches nothing, and an anti filter keeps null-keyed rows, as a
+    left anti-join does."""
+    from pyspark.sql import types as T
+
+    from qvarn_mr_spark.operators.incremental import _isin
+
+    longs = [2 ** 40 + i for i in range(n)]
+    strs = ["a'b", "c\\d", "\\'"] + [f"s{i}" for i in range(n - 3)]
+    df = spark.createDataFrame(
+        [(x, s) for x, s in zip(longs, strs)]
+        + [(7, "other"), (None, None)], "x long, s string")
+    for col, keys in (("x", longs[::2] + [None]), ("s", strs[::2] + [None])):
+        frame = spark.createDataFrame(
+            [(k,) for k in keys],
+            T.StructType([T.StructField("k", df.schema[col].dataType)]))
+        want_in = {r[col] for r in df.collect()} & set(keys) - {None}
+        for form in (keys, frame):
+            got = [r[col] for r in _isin(df, col, form).collect()]
+            assert sorted(got) == sorted(want_in), (col, form)
+            got = [r[col] for r in _isin(df, col, form, anti=True).collect()]
+            assert len(got) == n + 2 - len(want_in) and None in got, got
+            assert not set(got) & want_in
+
+
+def _compiles(spark):
+    """The number of codegen classes this JVM has compiled so far."""
+    return (spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+            .METRIC_COMPILATION_TIME().getCount())
+
+
+def test_literal_keys_with_quotes_long_ids_and_a_null_key(spark, tmp_path,
+                                                           key_sets):
+    """Keys a literal filter could get wrong, in both key-set forms: map
+    keys holding ``'`` and ``\\``, a source keyed by long ids past the int
+    range, and a map row with a null key, whose map and reduce rows
+    survive batches that do not touch it. The views equal a full
+    recompute after every batch."""
+    big = 2 ** 40
+    rows = {big + 1: ("a'b", 1), big + 2: ("c\\d", 2), big + 3: (None, 3),
+            big + 4: ("a'b", 4)}
+    cat = Catalog(spark)
+
+    def apply(batch):
+        cat.register("source", spark.createDataFrame(
+            [(i, k, v) for i, (k, v) in rows.items()],
+            "id long, key string, value long"))
+        if batch:
+            inc.apply_changes(notifications(spark, batch))
+        want = eng.recompute_all()
+        for t in ("m", "v"):
+            assert sorted(map(tuple, inc.read(t).collect()), key=str) == \
+                sorted(map(tuple, want[t].collect()), key=str), t
+        return {r["_mr_key"]: r["_mr_value"]
+                for r in inc.read("v").collect()}
+
+    eng = ViewEngine(cat, {
+        "m": {"source": map_item("key", "value")},
+        "v": {"m": reduce_agg(F.sum)},
+    })
+    inc = IncrementalEngine(eng, ParquetStateStore(spark, str(tmp_path / "s")))
+    cat.register("source", spark.createDataFrame(
+        [(i, k, v) for i, (k, v) in rows.items()],
+        "id long, key string, value long"))
+    inc.resync_all()
+    assert apply([]) == {"a'b": 5, "c\\d": 2, None: 3}
+
+    rows[big + 1] = ("c\\d", 10)
+    rows[big + 5] = ("a'b", 5)
+    del rows[big + 2]
+    assert apply([("source", "updated", str(big + 1)),
+                  ("source", "created", str(big + 5)),
+                  ("source", "deleted", str(big + 2))]) == {
+        "a'b": 9, "c\\d": 10, None: 3}
+    del rows[big + 4]
+    assert apply([("source", "deleted", str(big + 4)),
+                  ("source", "created", "no-such-id")]) == {
+        "a'b": 5, "c\\d": 10, None: 3}
+    assert [r["resource_id"] for r in inc.dead_letters("m").collect()] == [
+        "no-such-id"]
+
+
+def test_fan_out_past_the_bound_hands_on_frames(spark, tmp_path,
+                                                monkeypatch):
+    """A batch within the literal bound whose map fans out to more keys
+    than the bound hands its reduce frame key sets, and the view still
+    equals a full recompute."""
+    from qvarn_mr_spark.operators import incremental, map_expr
+    from qvarn_mr_spark.operators.mapreduce import MERGE_ADD
+
+    monkeypatch.setattr(incremental, "MAX_LITERALS", 3)
+    cat = Catalog(spark)
+
+    def set_source(rows):
+        cat.register("source", spark.createDataFrame(
+            rows, "id string, tags array<string>, value long"))
+
+    set_source([("1", ["a", "b"], 1), ("2", ["c"], 2)])
+    eng = ViewEngine(cat, {
+        "m": {"source": map_expr(F.col("tags"), "value", explode_key=True)},
+        "v": {"m": reduce_agg(F.sum, merge=MERGE_ADD)},
+    })
+    inc = IncrementalEngine(eng, ParquetStateStore(spark, str(tmp_path / "s")))
+    inc.resync_all()
+    handoffs = []
+    apply_reduce = inc._apply_reduce
+
+    def spy(target, sources, handoff, held):
+        handoffs.append(handoff)
+        return apply_reduce(target, sources, handoff, held)
+
+    monkeypatch.setattr(inc, "_apply_reduce", spy)
+    set_source([("1", ["a", "d", "e"], 1), ("2", ["c"], 2),
+                ("3", ["f", "g"], 3)])
+    inc.apply_changes(notifications(spark, [("source", "updated", "1"),
+                                            ("source", "created", "3")]))
+    assert [h.literal for h in handoffs] == [False]
+    assert {r["_mr_key"]: r["_mr_value"] for r in inc.read("v").collect()} \
+        == {r["_mr_key"]: r["_mr_value"]
+            for r in eng.recompute_all()["v"].collect()} == {
+        "a": 1, "c": 2, "d": 1, "e": 1, "f": 3, "g": 3}
+
+
+def test_small_applies_compile_no_new_code(spark, tmp_path):
+    """A small batch's key sets are literal filters whose generated code
+    depends on neither the number nor the values of their keys. Twelve
+    batches with fresh long ids and keys, each creating one more id than
+    the last and updating the previous batch's ids, compile nothing after
+    the first two, except in the step where some key set first outgrows
+    the array literal into an ``IN`` hash set: a new filter shape."""
+    from qvarn_mr_spark.operators.incremental import _INSET_MIN
+    from qvarn_mr_spark.operators.mapreduce import MERGE_ADD
+
+    cat = Catalog(spark)
+    rows = {}
+
+    def set_source():
+        cat.register("source", spark.createDataFrame(
+            [(i, k, v) for i, (k, v) in rows.items()],
+            "id long, key long, value long"))
+
+    set_source()
+    eng = ViewEngine(cat, {
+        "m": {"source": map_item("key", "value")},
+        "v": {"m": reduce_agg({"s": F.sum, "n": F.count},
+                              merge={"s": MERGE_ADD, "n": MERGE_ADD})},
+    })
+    inc = IncrementalEngine(eng, ParquetStateStore(spark, str(tmp_path / "s")))
+    inc.resync_all()
+    quiet, shaped, prev, grown = [], [], [], set()
+    for step in range(1, 13):
+        new = [10 ** 12 + 1000 * step + j for j in range(step)]
+        batch = [("source", "created", str(i)) for i in new] + [
+            ("source", "updated", str(i)) for i in prev]
+        for i in new:
+            rows[i] = (10 ** 11 + i, step)
+        for i in prev:       # each updated row moves to a key of its own
+            rows[i] = (rows[i][0] + 500, step)
+        set_source()
+        before = _compiles(spark)
+        inc.apply_changes(notifications(spark, batch))
+        n = _compiles(spark) - before
+        prev = new
+        # the sizes of the changed ids and the dirty, gained and lost keys
+        sizes = {"changed": 2 * step - 1, "dirty": 3 * step - 2,
+                 "gained": 2 * step - 1, "lost": step - 1}
+        outgrown = {k for k, size in sizes.items() if size > _INSET_MIN}
+        if step > 2:
+            (shaped if outgrown - grown else quiet).append(n)
+        grown |= outgrown
+    assert len(shaped) == 3, shaped          # steps 5, 6 and 12
+    assert quiet == [0] * 7, quiet
+    assert sum(shaped) <= 20, shaped
     want = {r["_mr_key"]: (r["s"], r["n"])
             for r in eng.recompute_all()["v"].collect()}
     assert {r["_mr_key"]: (r["s"], r["n"])

@@ -252,7 +252,7 @@ def test_random_crud_equals_a_model_across_compactions(
     put_subresource reads back as a Python model of the data, across at
     least two folds of the table."""
     monkeypatch.setattr(incremental, "COMPACT_AFTER", 3)
-    monkeypatch.setattr(incremental, "MAX_DELETES", 6)
+    monkeypatch.setattr(incremental, "MAX_LITERALS", 6)
     rstore = ResourceStore(spark, str(tmp_path / "store"))
     store = rstore._store
     rewrites = []

@@ -172,6 +172,16 @@ def test_subresources(loop):
     assert rstore.get_subresource("source", rid, "nothere") is None
 
 
+def test_subresource_put_with_a_none_field(loop):
+    """A ``None`` field of a subresource document has no type to infer:
+    the put leaves it out, and the field reads back absent or null."""
+    rstore, _, _ = loop
+    rid = rstore.create("source", {"key": 1, "value": 1})
+    rstore.put_subresource("source", rid, "private", {"a": 1, "b": None})
+    got = rstore.get_subresource("source", rid, "private")
+    assert got["a"] == 1 and got.get("b") is None
+
+
 def test_rejected_subresource_put_writes_nothing(loop, tmp_path):
     """A subresource put checks the parent before it writes: a stale
     revision (the reference's 409) and a missing parent both raise with
