@@ -105,14 +105,19 @@ _INSET_MIN = 10
 
 @contextmanager
 def _held_frames():
-    """A list for the frames one batch caches, unpersisted however the
-    batch ends — a batch that raises must not leave them cached."""
+    """A list for the frames one batch caches or checkpoints locally,
+    released however the batch ends — a batch that raises must not leave
+    their blocks behind."""
     held: list[DataFrame] = []
     try:
         yield held
     finally:
         for df in held:
             df.unpersist()
+            plan = df._jdf.queryExecution().logical()
+            if plan.nodeName() == "LogicalRDD":
+                # a local checkpoint's blocks, which unpersist leaves
+                plan.rdd().unpersist(False)
 
 
 def _union(frames: list[DataFrame]) -> DataFrame:
@@ -977,8 +982,9 @@ class IncrementalEngine:
         batch derives (:func:`_isin`): a batch of at most ``MAX_LITERALS``
         changed ids — a trickle of notifications, the reference's own
         traffic — stays a Python list, and so does each key set after it,
-        each a literal filter; a larger one is cached for every map target
-        and its key sets stay frames, each a broadcast join. Each target's
+        each a literal filter; a larger one stays a frame, which every map
+        target reads from the blocks the collect stored (a local
+        checkpoint), and so do its key sets, each a broadcast join. Each target's
         hand-off to its consumers (see :meth:`_apply_map` and
         :meth:`_apply_reduce`) stays in memory for the batch; a map target
         that hands nothing on (no map row changed) skips its reduces. The
@@ -995,15 +1001,19 @@ class IncrementalEngine:
         handoff: dict[str, _Handoff] = {}
         with _held_frames() as held, self.store.transaction():
             # final change per resource id — replay-order equivalent (see
-            # class doc)
+            # class doc). Checkpointed locally: the collect stores the rows
+            # it computes, and a larger batch's map targets read them
+            # instead of aggregating again. A cache would cost a job of
+            # its own, as adaptive execution materializes a cache apart
+            # from the query that reads it; a checkpoint's lost block
+            # fails the batch, which then replays
             changes = (changes.groupBy("resource_type", "resource_id")
                        .agg(F.max_by("resource_change", "seq")
-                            .alias("change")))
+                            .alias("change"))).localCheckpoint(eager=False)
+            held.append(changes)
             rows = changes.limit(MAX_LITERALS + 1).collect()
             if len(rows) <= MAX_LITERALS:
                 changes = [tuple(r) for r in rows]
-            else:
-                held.append(changes.cache())
             for target in self._topo_targets():
                 sources = self.engine.config[target]
                 if isinstance(next(iter(sources.values())), REDUCE_SPECS):
@@ -1056,16 +1066,22 @@ class IncrementalEngine:
         of the ``dirty`` keys its own apply handed on this batch (a key
         set: a list, or a frame whose ``_mr_key`` column holds them),
         once, with ``change`` ``updated`` (key still in the stored table)
-        or ``deleted`` (key vanished — empty-group elimination upstream).
-        The stored table is filtered by the batch's keys before anything
-        aggregates it, so the liveness check is batch-sized; a list's
-        check is one collect, and its notifications are a list."""
+        or ``deleted`` (key vanished — empty-group elimination upstream),
+        named by the key's string form (``cast('string')``, the form the
+        consumer's map gives ``_mr_source_id``). The stored table is
+        filtered by the batch's keys before anything aggregates it, so the
+        liveness check is batch-sized; a list's check is one collect, and
+        its notifications are a list. A list's keys come from a map's
+        rows, which carry their keys in that string form already; the
+        stored keys are cast alike, so a reduce that declares another
+        key type still matches them."""
         cur = self.store.read(
             source, keys=dirty if isinstance(dirty, list) else None
         ).select("_mr_key")
         if isinstance(dirty, list):
-            live = {k for (k,) in _isin(cur, "_mr_key", dirty).collect()}
-            return [(source, str(k), UPDATED if k in live else DELETED)
+            live = {k for (k,) in _isin(cur, "_mr_key", dirty).select(
+                F.col("_mr_key").cast("string")).collect()}
+            return [(source, k, UPDATED if k in live else DELETED)
                     for k in dirty]
         keys = dirty.select("_mr_key")
         cur = _isin(cur, "_mr_key", keys).distinct()
@@ -1187,12 +1203,8 @@ class IncrementalEngine:
         if literal:
             dirty = _distinct(k for w, k, *_ in rows if w in (1, -1))
             lost = _distinct(k for w, k, *_ in rows if w == -1)
-            if len(dirty) > MAX_LITERALS:
-                # a map that fans out past the bound: key sets as frames
-                dirty, lost = (self.catalog.spark.createDataFrame(
-                    [(k,) for k in keys], "_mr_key string")
-                    for keys in (dirty, lost))
-        else:
+        if not literal or len(dirty) > MAX_LITERALS:
+            # a larger batch, or a map that fans out past the bound
             dirty = delta.filter(F.col("_mr_weight").isin(1, -1)).select(
                 "_mr_key")
             lost = delta.filter(F.col("_mr_weight") == -1).select("_mr_key")

@@ -145,6 +145,68 @@ def test_deep_dag_lifecycle_matches_recompute(spark, tmp_path, key_sets):
     assert _hist(inc) == {}
 
 
+#: Intermediate keys whose Python and Spark string forms differ: doubles
+#: past 1e7 or below 1e-3 (``1.0E7``), booleans (``true``), and a pandas
+#: reduce that stores its keys as longs, not in the map's string form
+_ODD_KEYS = {"double": [1e7, 2.5e-4, 3.0], "boolean": [True, False, False],
+             "pandas-long": [5, 7, 9]}
+
+
+@pytest.mark.sweep
+@pytest.mark.parametrize("ktype", list(_ODD_KEYS))
+def test_deep_dag_names_odd_keys_as_spark_does(spark, tmp_path, key_sets,
+                                               ktype):
+    """A map over a reduce whose keys print differently in Python and in
+    Spark: the synthetic notifications name each key as the downstream map
+    names its source ids (Spark's string cast), so every step re-maps and
+    retracts the right rows. After creates, a key move and a key's
+    vanishing, every table equals a full recompute and no dead letter was
+    written."""
+    import pandas as pd
+
+    from qvarn_mr_spark.operators import reduce_pandas
+
+    a, b, c = _ODD_KEYS[ktype]
+    cat = Catalog(spark)
+
+    def set_source(rows):
+        cat.register("orders", spark.createDataFrame(
+            rows, f"id string, k {'long' if ktype == 'pandas-long' else ktype}"))
+
+    def count(key, pdf):
+        return pd.DataFrame({"_mr_key": [int(key[0])],
+                             "_mr_value": [len(pdf)]})
+
+    eng = ViewEngine(cat, {
+        "orders__map": {"orders": map_item("k")},
+        "per_user": {"orders__map": (
+            reduce_pandas(count, "_mr_key long, _mr_value long")
+            if ktype == "pandas-long" else reduce_count())},
+        "hist__map": {"per_user": map_item("_mr_value")},
+        "hist": {"hist__map": reduce_count()},
+    }, id_cols={"orders": "id"}, strict=False)
+    inc = IncrementalEngine(eng, ParquetStateStore(spark, str(tmp_path / "s")))
+
+    def check():
+        want = eng.recompute_all()
+        for table, df in want.items():
+            assert sorted(map(tuple, inc.read(table).select(
+                *df.columns).collect())) == sorted(
+                map(tuple, df.collect())), table
+
+    for rows, batch in (
+            ([("o1", a), ("o2", a), ("o3", b)],
+             [("orders", "created", "o1"), ("orders", "created", "o2"),
+              ("orders", "created", "o3")]),
+            ([("o1", a), ("o2", c), ("o3", b)],
+             [("orders", "updated", "o2")]),
+            ([("o2", c), ("o3", b)], [("orders", "deleted", "o1")])):
+        set_source(rows)
+        inc.apply_changes(notifications(spark, batch))
+        check()
+    assert inc.dead_letters("hist__map").count() == 0
+
+
 @pytest.mark.sweep
 def test_deep_dag_untouched_keys_stay_clean(spark, tmp_path):
     """A change to one user must not mark other histogram buckets dirty:

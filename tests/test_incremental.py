@@ -832,32 +832,12 @@ def test_small_apply_job_budget(spark, tmp_path, key_sets):
     reduce's shuffle, prior-value broadcast and write (every key-set
     broadcast of the frame form is a job of its own). The apply stays
     within its form's job budget, and the view equals a full
-    recompute."""
-    from qvarn_mr_spark.operators.mapreduce import MERGE_ADD
+    recompute (``tools/apply_jobs.py`` lists the jobs)."""
+    from tools.apply_jobs import scenario
 
-    cat = Catalog(spark)
-
-    def set_source(rows):
-        cat.register("source", spark.createDataFrame(
-            rows, "id string, key long, value long"))
-
-    set_source([(str(i), i % 3, i) for i in range(1, 10)])
-    eng = ViewEngine(cat, {
-        "m": {"source": map_item("key", "value")},
-        "v": {"m": reduce_agg({"s": F.sum, "n": F.count},
-                              merge={"s": MERGE_ADD, "n": MERGE_ADD})},
-    })
-    inc = IncrementalEngine(eng, ParquetStateStore(spark, str(tmp_path / "s")))
-    inc.resync_all()
-    # create 10 (key 1) and 11 (new key 5), update 2 (value 2 → 20),
-    # delete 3 (key 0)
-    set_source([(str(i), i % 3, 20 if i == 2 else i)
-                for i in range(1, 10) if i != 3] + [("10", 1, 10),
-                                                   ("11", 5, 11)])
-    n, _ = _jobs(spark, lambda: inc.apply_changes(notifications(spark, [
-        ("source", "created", "10"), ("source", "created", "11"),
-        ("source", "updated", "2"), ("source", "deleted", "3")])))
-    assert n <= {"literal": 7, "frame": 25}[key_sets], n
+    inc, eng, batch = scenario(spark, str(tmp_path / "s"))
+    n, _ = _jobs(spark, lambda: inc.apply_changes(batch))
+    assert n <= {"literal": 7, "frame": 19}[key_sets], n
     want = {r["_mr_key"]: (r["s"], r["n"])
             for r in eng.recompute_all()["v"].collect()}
     assert {r["_mr_key"]: (r["s"], r["n"])
@@ -952,27 +932,35 @@ def test_literal_keys_with_quotes_long_ids_and_a_null_key(spark, tmp_path,
         "no-such-id"]
 
 
+@pytest.mark.parametrize("kind,ktype", [("plain", "string"),
+                                         ("bucketed", "long")])
 def test_fan_out_past_the_bound_hands_on_frames(spark, tmp_path,
-                                                monkeypatch):
+                                                monkeypatch, kind, ktype):
     """A batch within the literal bound whose map fans out to more keys
-    than the bound hands its reduce frame key sets, and the view still
-    equals a full recompute."""
+    than the bound hands its reduce frame key sets, read from the map's
+    delta, and both tables still equal a full recompute, on a bucketed
+    store too (which rewrites the buckets the frames hash into)."""
     from qvarn_mr_spark.operators import incremental, map_expr
     from qvarn_mr_spark.operators.mapreduce import MERGE_ADD
 
     monkeypatch.setattr(incremental, "MAX_LITERALS", 3)
     cat = Catalog(spark)
+    k = (lambda c: c) if ktype == "string" else (lambda c: ord(c) * 10**9)
 
     def set_source(rows):
         cat.register("source", spark.createDataFrame(
-            rows, "id string, tags array<string>, value long"))
+            [(i, [k(c) for c in tags], v) for i, tags, v in rows],
+            f"id string, tags array<{ktype}>, value long"))
 
-    set_source([("1", ["a", "b"], 1), ("2", ["c"], 2)])
+    set_source([("1", "ab", 1), ("2", "c", 2), ("4", "hij", 4)])
     eng = ViewEngine(cat, {
         "m": {"source": map_expr(F.col("tags"), "value", explode_key=True)},
         "v": {"m": reduce_agg(F.sum, merge=MERGE_ADD)},
     })
-    inc = IncrementalEngine(eng, ParquetStateStore(spark, str(tmp_path / "s")))
+    root = str(tmp_path / "s")
+    store = (BucketedParquetStateStore(spark, root, buckets=8)
+             if kind == "bucketed" else ParquetStateStore(spark, root))
+    inc = IncrementalEngine(eng, store)
     inc.resync_all()
     handoffs = []
     apply_reduce = inc._apply_reduce
@@ -982,15 +970,20 @@ def test_fan_out_past_the_bound_hands_on_frames(spark, tmp_path,
         return apply_reduce(target, sources, handoff, held)
 
     monkeypatch.setattr(inc, "_apply_reduce", spy)
-    set_source([("1", ["a", "d", "e"], 1), ("2", ["c"], 2),
-                ("3", ["f", "g"], 3)])
+    set_source([("1", "ade", 1), ("2", "c", 2), ("3", "fg", 3),
+                ("4", "hij", 4)])
     inc.apply_changes(notifications(spark, [("source", "updated", "1"),
                                             ("source", "created", "3")]))
     assert [h.literal for h in handoffs] == [False]
-    assert {r["_mr_key"]: r["_mr_value"] for r in inc.read("v").collect()} \
-        == {r["_mr_key"]: r["_mr_value"]
-            for r in eng.recompute_all()["v"].collect()} == {
-        "a": 1, "c": 2, "d": 1, "e": 1, "f": 3, "g": 3}
+    want = eng.recompute_all()
+    for table in ("m", "v"):
+        assert sorted(map(tuple, inc.read(table).select(
+            *want[table].columns).collect())) == sorted(
+            map(tuple, want[table].collect())), table
+    assert {r["_mr_key"]: r["_mr_value"]
+            for r in inc.read("v").collect()} == {
+        str(k(c)): v
+        for c, v in zip("acdefghij", [1, 2, 1, 1, 3, 3, 4, 4, 4])}
 
 
 def test_small_applies_compile_no_new_code(spark, tmp_path):

@@ -1,8 +1,9 @@
 """List the Spark jobs of one small CDC apply.
 
-Runs the scenario of ``tests/test_incremental.py::test_small_apply_job_budget``
-(a map and an algebraic sum/count view over nine rows, resynced, then one
-batch of two creates, an update and a delete) and prints every Spark job
+Runs :func:`scenario` — a map and an algebraic sum/count view over nine
+rows, resynced, then one batch of two creates, an update and a delete; the
+scenario whose job count ``tests/test_incremental.py::
+test_small_apply_job_budget`` bounds — and prints every Spark job
 that batch's ``apply_changes`` launched: its job id, the ids and names
 (call sites) of its stages, and its task count, all read from
 ``statusTracker``. A shuffle stage that a later job reuses is listed again
@@ -34,8 +35,12 @@ from qvarn_mr_spark.operators.mapreduce import MERGE_ADD  # noqa: E402
 from qvarn_mr_spark.session import get_spark  # noqa: E402
 
 
-def _scenario(spark, root: str):
-    """The engine after its bootstrap, and the batch to apply."""
+def scenario(spark, root: str):
+    """``(engine, view engine, batch)``: an incremental engine over a map
+    and an algebraic view after its bootstrap, and a batch that creates
+    ids 10 (key 1) and 11 (new key 5), updates 2 (value 2 → 20) and
+    deletes 3 (key 0). The view's handler versions match the stored ones,
+    so its apply skips the version-barrier scan."""
     cat = Catalog(spark)
 
     def set_source(rows):
@@ -56,7 +61,7 @@ def _scenario(spark, root: str):
     batch = notifications(spark, [
         ("source", "created", "10"), ("source", "created", "11"),
         ("source", "updated", "2"), ("source", "deleted", "3")])
-    return inc, batch
+    return inc, eng, batch
 
 
 def _list_jobs(spark, fn) -> None:
@@ -105,7 +110,7 @@ def main() -> None:
     spark = get_spark(app_name="apply-jobs", shuffle_partitions=4)
     spark.sparkContext.setLogLevel("ERROR")
     with tempfile.TemporaryDirectory() as root:
-        inc, batch = _scenario(spark, os.path.join(root, "state"))
+        inc, _, batch = scenario(spark, os.path.join(root, "state"))
         _list_jobs(spark, lambda: inc.apply_changes(batch))
     spark.stop()
 
