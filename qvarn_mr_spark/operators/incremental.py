@@ -611,13 +611,24 @@ class BucketedParquetStateStore(ParquetStateStore):
         return F.pmod(F.hash(F.col(self.key_col)), F.lit(self.buckets))
 
     def _buckets_of(self, keys, dtype: T.DataType) -> set[int]:
-        """The buckets a key set (a list of ``dtype`` values, or a frame
-        with ``key_col``) hashes into: one tiny Spark job, with the exact
-        hash the writer used, so Python and JVM hashing can never drift."""
+        """The buckets a key set (a list, or a frame with ``key_col``)
+        hashes into, with the exact hash the writer used, so Python and
+        JVM hashing can never drift. Keys hash as ``dtype``, the stored
+        key's type — a hand-off's keys are the map's strings, and a
+        reduce may store them as longs. A frame's buckets are one tiny
+        Spark job. A list's keys are typed as a literal filter types them
+        (:func:`_sql_lit`), and its buckets are one constant over a
+        one-row inline table, which the optimizer folds: no Spark job."""
         if isinstance(keys, list):
-            keys = self.spark.createDataFrame(
-                [(k,) for k in keys],
-                T.StructType([T.StructField(self.key_col, dtype)]))
+            if not keys:
+                return set()
+            terms = ", ".join(
+                f"pmod(hash({'NULL' if k is None else _sql_lit(k, dtype)}),"
+                f" {self.buckets})" for k in keys)
+            return set(self.spark.sql(
+                f"SELECT array({terms}) FROM VALUES (1)").collect()[0][0])
+        keys = keys.select(F.col(self.key_col).cast(dtype)
+                           .alias(self.key_col))
         return {r[0] for r in keys.select(
             self._bucket_expr().alias("b")).distinct().collect()}
 
@@ -697,9 +708,9 @@ class BucketedParquetStateStore(ParquetStateStore):
         key values — probe routes, dirty keys), prune at the MANIFEST:
         only the bucket directories those keys hash into are listed at
         all — the file-level analogue of partition pruning, on top of
-        whatever row-group skipping a pushed predicate buys. One tiny
-        |keys|-row Spark job computes the buckets with the exact hash
-        the writer used, so Python and JVM hashing can never drift. The
+        whatever row-group skipping a pushed predicate buys. The
+        buckets come from the writer's own hash, folded to a constant
+        with no Spark job (:meth:`_buckets_of`). The
         caller still applies its own key filter (a bucket holds other
         keys too). ``version`` pins the read at a specific committed
         manifest (the consistent-snapshot path) — the manifest-closure

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from qvarn_mr_spark.catalog import Catalog
 from qvarn_mr_spark.operators import (
+    BucketedParquetStateStore,
     IncrementalEngine,
     ParquetStateStore,
     ViewEngine,
@@ -153,15 +154,18 @@ _ODD_KEYS = {"double": [1e7, 2.5e-4, 3.0], "boolean": [True, False, False],
 
 
 @pytest.mark.sweep
-@pytest.mark.parametrize("ktype", list(_ODD_KEYS))
+@pytest.mark.parametrize("ktype,kind", [
+    ("double", "plain"), ("boolean", "plain"), ("pandas-long", "plain"),
+    ("pandas-long", "bucketed")])
 def test_deep_dag_names_odd_keys_as_spark_does(spark, tmp_path, key_sets,
-                                               ktype):
+                                               ktype, kind):
     """A map over a reduce whose keys print differently in Python and in
     Spark: the synthetic notifications name each key as the downstream map
     names its source ids (Spark's string cast), so every step re-maps and
-    retracts the right rows. After creates, a key move and a key's
-    vanishing, every table equals a full recompute and no dead letter was
-    written."""
+    retracts the right rows, and a bucketed store hashes a reduce's long
+    keys as longs, not as the map's strings. After creates, a key move and
+    a key's vanishing, every table equals a full recompute and no dead
+    letter was written."""
     import pandas as pd
 
     from qvarn_mr_spark.operators import reduce_pandas
@@ -185,7 +189,10 @@ def test_deep_dag_names_odd_keys_as_spark_does(spark, tmp_path, key_sets,
         "hist__map": {"per_user": map_item("_mr_value")},
         "hist": {"hist__map": reduce_count()},
     }, id_cols={"orders": "id"}, strict=False)
-    inc = IncrementalEngine(eng, ParquetStateStore(spark, str(tmp_path / "s")))
+    root = str(tmp_path / "s")
+    inc = IncrementalEngine(eng, (
+        BucketedParquetStateStore(spark, root, buckets=8)
+        if kind == "bucketed" else ParquetStateStore(spark, root)))
 
     def check():
         want = eng.recompute_all()
